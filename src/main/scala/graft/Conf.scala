@@ -55,8 +55,10 @@ object Conf {
   /** The engine's single documented environment surface — the `.env`
     * equivalent of the reference's scattered `os.getenv` reads
     * (`llm_processing.py:12,99-100`, `db_to_dataframe.py:47-54`). Every
-    * driver main reads through here; nothing else in the engine touches
-    * `sys.env`, so this object IS the config contract.
+    * driver main reads through here. The one other reader of `sys.env`
+    * is [[graft.etl.LlmHttp.fromEnv]], which selects the LLM client from
+    * the `AZURE_OPENAI_*` variables listed below (its `env` is injectable
+    * for tests); together they are the config contract.
     *
     * | variable | used by | default |
     * |---|---|---|

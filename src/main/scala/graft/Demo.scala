@@ -1,19 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI smoke surface: runs the flagship pipeline (SparkEntry.entry) and
   * prints the reports, or processes a JSON request body passed as arg(0)
   * (a file path or an inline JSON string). */
 object Demo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${Conf.Env.cpus(default = 4)}]")
-      .appName("graft-demo")
-      .config("spark.sql.shuffle.partitions", Conf.Env.cpus(default = 4).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Conf.localSession(Conf.Env.cpus(default = 4))
     spark.sparkContext.setLogLevel("ERROR")
 
     val out = args.headOption match {

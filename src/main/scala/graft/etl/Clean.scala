@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -23,17 +23,19 @@ object Clean {
 
   /** COMMENT normalization (`data_preprocessing.py:37-55`): null→'' →
     * strip newlines → full-width translate → squeeze whitespace around
-    * parens. */
-  def cleanComment(df: DataFrame): DataFrame =
-    df.withColumn("COMMENT",
+    * parens. The one COMMENT expression: [[clean]] projects it too. */
+  private def normalizedComment: Column =
+    regexp_replace(
       regexp_replace(
-        regexp_replace(
-          translate(
-            regexp_replace(coalesce(col("COMMENT").cast("string"), lit("")),
-              "[\\r\\n]", ""),
-            FULLWIDTH_SRC, FULLWIDTH_DST),
-          "\\s*\\(\\s*", "("),
-        "\\s*\\)\\s*", ")"))
+        translate(
+          regexp_replace(coalesce(col("COMMENT").cast("string"), lit("")),
+            "[\\r\\n]", ""),
+          FULLWIDTH_SRC, FULLWIDTH_DST),
+        "\\s*\\(\\s*", "("),
+      "\\s*\\)\\s*", ")")
+
+  def cleanComment(df: DataFrame): DataFrame =
+    df.withColumn("COMMENT", normalizedComment)
 
   /** X8 — GROUPNO renumber (`data_preprocessing.py:62-65`): group 0 and
     * null both become max+1 so the "Others" group renders last. The global
@@ -48,23 +50,34 @@ object Clean {
       .drop("_maxg")
   }
 
+  /** The tie-break after `_rid`: every content column. A dim with a
+    * duplicate key fans one fact row out into several rows that share a
+    * `_rid`; ordering those by their content makes keep-first, the
+    * display sort and the report's in-record order depend only on the
+    * rows, never on shuffle arrival (identical rows are interchangeable). */
+  val ContentOrder: Seq[String] = Schemas.SUBSET
+
+  private def ingestOrder: Seq[Column] = col("_rid") +: ContentOrder.map(col)
+
   /** A2 — keep-first dedup on the 8-column key (`data_preprocessing.py:
   *  23-30`): global null→'' fill, then the first row *in ingest order* wins
   *  per key. pandas `drop_duplicates(keep='first')` relies on implicit row
   *  order; here the ingest ordinal `_rid` makes it explicit, so the result
-  *  is partition-count-invariant (plain `dropDuplicates` would not be). */
+  *  is partition-count-invariant (plain `dropDuplicates` would not be);
+  *  rows sharing a `_rid` fall back to [[ContentOrder]]. */
   def keepFirst(df: DataFrame): DataFrame = {
     val filled = df.na.fill("")
-    val w = Window.partitionBy(Schemas.SUBSET_2_KEEP.map(col): _*).orderBy(col("_rid"))
+    val w = Window.partitionBy(Schemas.SUBSET_2_KEEP.map(col): _*).orderBy(ingestOrder: _*)
     filled.withColumn("_rn", row_number().over(w))
       .filter(col("_rn") === 1).drop("_rn")
   }
 
   /** O1 — stable display sort (`data_preprocessing.py:75`, explicit
     * `kind='mergesort'`): Spark's sort is not stable, so the ingest ordinal
-    * is appended as the final key to make stability explicit. */
+    * and then [[ContentOrder]] are appended as the final keys to make
+    * stability explicit. */
   def displaySort(df: DataFrame): DataFrame =
-    df.orderBy(col("RECORD_ID"), col("GROUPNO"), col("TCNAME_ITEM"), col("_rid"))
+    df.orderBy(Seq(col("RECORD_ID"), col("GROUPNO"), col("TCNAME_ITEM")) ++ ingestOrder: _*)
 
   /** Full `postprocess_multilang` chain. Semantically the reference's
     * stage order (COMMENT `data_preprocessing.py:37-55` → SUMMARY default
@@ -84,17 +97,8 @@ object Clean {
       val cleaned = regexp_replace(coalesce(col(c).cast("string"), lit("")), "[\\r\\n]", "")
       when(cleaned === "", lit(default)).otherwise(cleaned).as(c)
     }
-    val commentExpr =
-      regexp_replace(
-        regexp_replace(
-          translate(
-            regexp_replace(coalesce(col("COMMENT").cast("string"), lit("")),
-              "[\\r\\n]", ""),
-            FULLWIDTH_SRC, FULLWIDTH_DST),
-          "\\s*\\(\\s*", "("),
-        "\\s*\\)\\s*", ")").as("COMMENT")
     val normalized = df.select(df.columns.toSeq.map {
-      case "COMMENT" => commentExpr
+      case "COMMENT" => normalizedComment.as("COMMENT")
       case c if summaryDefaults.contains(c) => fillExpr(c, summaryDefaults(c))
       case c if groupDefaults.contains(c) => fillExpr(c, groupDefaults(c))
       case c => col(c)

@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 import java.util.concurrent.{Callable, Executors, TimeUnit}
@@ -11,7 +11,7 @@ import java.util.concurrent.{Callable, Executors, TimeUnit}
   * NOT a per-row UDF (that would re-call the endpoint once per fact row and
   * lose batching): the correct distributed shape is
   * `distinct summaries → mapPartitions (bounded-concurrency client per
-  * partition) → rewrite-map DataFrame → broadcast join / map lookup back`.
+  * partition) → rewrite DataFrame → broadcast join back`.
   * The deterministic mock client is the default, making the whole operator
   * a pure function — tests and offline runs are hermetic, exactly like the
   * reference's mock mode (`llm_processing.py:102-107,157-159`).
@@ -58,20 +58,22 @@ object Llm {
     text
   }
 
+  /** Client threads per partition: the reference's
+    * `ThreadPoolExecutor(max_workers=3)` (`llm_processing.py:80,131`). */
+  private val MaxWorkers = 3
+
   /** Distributed rewrite: distinct non-empty trimmed summaries →
     * `(summary, rewritten)` pairs.
     *
     * Per-language default sentences map to themselves without a call
     * (`llm_processing.py:135-137`); empty strings are dropped
-    * (`text_processing.py:75`). Within each partition a bounded pool of
-    * `maxWorkers` threads drives the client concurrently
-    * (`llm_processing.py:80,131` — `ThreadPoolExecutor(max_workers=3)`),
-    * so total in-flight requests = partitions × maxWorkers, tunable by
+    * (`text_processing.py:75`). Within each partition a pool of
+    * [[MaxWorkers]] threads drives the client concurrently, so total
+    * in-flight requests = partitions × [[MaxWorkers]], tunable by
     * repartitioning the distinct set.
     */
   def rewritePairs(summaries: Dataset[(String, String)],
-                   client: RewriteClient = MockClient,
-                   maxWorkers: Int = 3): Dataset[(String, String, String)] = {
+                   client: RewriteClient = MockClient): Dataset[(String, String, String)] = {
     val spark = summaries.sparkSession
     import spark.implicits._
     summaries
@@ -85,7 +87,7 @@ object Llm {
         val called =
           if (toCall.isEmpty) Vector.empty
           else {
-            val pool = Executors.newFixedThreadPool(math.max(1, maxWorkers))
+            val pool = Executors.newFixedThreadPool(MaxWorkers)
             try {
               val futures = toCall.map { case (lang, s) =>
                 (lang, s, pool.submit(new Callable[String] {
@@ -102,20 +104,25 @@ object Llm {
       }
   }
 
-  /** The `(langNo, summary)` pairs the report stage will look up — one
-    * summary column per language, as the report stage reads them
-    * (`text_processing.py:15-20` positions 7), selected in a SINGLE
-    * scan via a CASE over LANG_NO rather than one filtered pass per
-    * language (4× fewer scans of the cleaned frame; at scale this is
-    * the difference between one and four shuffle-reads of the fact
-    * table). */
-  private def summaryPairs(cleaned: DataFrame): Dataset[(String, String)] = {
-    val spark = cleaned.sparkSession
-    import spark.implicits._
+  /** A cleaned row's rewrite key: (trimmed LANG_NO, the SUMMARY column of
+    * the row's language — `text_processing.py:15-20` position 7 — or null
+    * for an unknown language). One CASE over LANG_NO rather than one
+    * filtered pass per language, so the pair scan reads the cleaned frame
+    * once. [[summaryPairs]] and [[Report.reportJoined]]'s join both key on
+    * it, which is what makes the join find every rewrite. */
+  private[etl] def rewriteKey: (Column, Column) = {
     val lang = trim(col("LANG_NO").cast("string"))
     val summary = Schemas.LANG_SUBSET.foldLeft(lit(null).cast("string")) {
       case (acc, (l, cols)) => when(lang === l, col(cols(7)).cast("string")).otherwise(acc)
     }
+    (lang, summary)
+  }
+
+  /** The `(langNo, summary)` pairs the report stage will look up. */
+  private def summaryPairs(cleaned: DataFrame): Dataset[(String, String)] = {
+    val spark = cleaned.sparkSession
+    import spark.implicits._
+    val (lang, summary) = rewriteKey
     cleaned
       .select(lang.as("_1"), summary.as("_2"))
       .filter(col("_2").isNotNull)
@@ -123,27 +130,11 @@ object Llm {
   }
 
   /** The rewrite pairs as a DATAFRAME `(_rw_lang, _rw_orig, _rw_text)`,
-    * for [[Report.reportJoined]]'s broadcast left join — the fully
-    * distributed X12 path: no driver collect, the rewritten texts flow
-    * executor-to-executor through the broadcast exchange. Distinct on
-    * `(_rw_lang, _rw_orig)` by [[rewritePairs]] construction, so the
-    * left join is at-most-one-match. */
-  def rewriteFrame(cleaned: DataFrame, client: RewriteClient = MockClient,
-                   maxWorkers: Int = 3): DataFrame =
-    rewritePairs(summaryPairs(cleaned), client, maxWorkers)
+    * for [[Report.reportJoined]]'s broadcast left join — no driver
+    * collect, the rewritten texts flow executor-to-executor through the
+    * broadcast exchange. Distinct on `(_rw_lang, _rw_orig)` by
+    * [[rewritePairs]] construction, so the left join is at-most-one-match. */
+  def rewriteFrame(cleaned: DataFrame, client: RewriteClient = MockClient): DataFrame =
+    rewritePairs(summaryPairs(cleaned), client)
       .toDF("_rw_lang", "_rw_orig", "_rw_text")
-
-  /** The rewrite map as a broadcastable driver-side value, keyed by
-    * (langNo, original) → rewritten. Used by the report serializer's
-    * `summary_translated.get(summary, summary)` lookup
-    * (`text_processing.py:124`). Bounded under reference semantics
-    * (distinct summary texts come from dim tables), but it IS a driver
-    * hop — [[rewriteFrame]] + [[Report.reportJoined]] is the
-    * collect-free equivalent. */
-  def rewriteMap(cleaned: DataFrame, client: RewriteClient = MockClient,
-                 maxWorkers: Int = 3): Map[(String, String), String] =
-    rewritePairs(summaryPairs(cleaned), client, maxWorkers)
-      .collect()
-      .map { case (l, s, r) => (l, s) -> r }
-      .toMap
 }

@@ -90,8 +90,7 @@ object LlmHttp {
       endpoint: String,
       apiKey: String,
       deployment: String = "gpt-4o",
-      apiVersion: String = "2024-08-01-preview",
-      requestTimeout: Duration = Duration.ofSeconds(60)) extends Llm.RewriteClient {
+      apiVersion: String = "2024-08-01-preview") extends Llm.RewriteClient {
 
     @transient private lazy val http: HttpClient =
       HttpClient.newBuilder().connectTimeout(Duration.ofSeconds(10)).build()
@@ -119,7 +118,7 @@ object LlmHttp {
 
     def rewrite(langNo: String, text: String): String = {
       val req = HttpRequest.newBuilder(URI.create(url))
-        .timeout(requestTimeout)
+        .timeout(RequestTimeout)
         .header("Content-Type", "application/json")
         .header("api-key", apiKey)
         .POST(HttpRequest.BodyPublishers.ofString(requestBody(langNo, text)))
@@ -134,6 +133,9 @@ object LlmHttp {
       content.asText().trim
     }
   }
+
+  /** Per-call response timeout of [[HttpRewriteClient]]. */
+  private val RequestTimeout = Duration.ofSeconds(60)
 
   /** Client selection by environment, mirroring `llm_processing.py:98-107`:
     * both `AZURE_OPENAI_ENDPOINT` and `AZURE_OPENAI_API_KEY` set → live

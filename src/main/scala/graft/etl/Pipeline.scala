@@ -3,7 +3,15 @@ package graft.etl
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** End-to-end pipeline composition — the reference's `POST /process`
-  * (`text_processing.py:144-177`): ingest → enrich → clean → report.
+  * (`text_processing.py:144-177`): ingest → dim enrichment → clean → LLM
+  * summary rewrite → hierarchical report.
+  *
+  * The stages are composed in exactly one place, the private [[chain]]:
+  * [[Ingest.flatten]] → [[Dims.fallback]] / [[Dims.restrictedTo]] →
+  * [[Enrich.enrich]] → [[Clean.clean]] → [[Llm.rewriteFrame]] →
+  * [[Report.reportJoined]]. Every entry point runs that chain, lazily
+  * ([[runDistributed]]) or eagerly ([[runRecords]], [[run]],
+  * [[runAndPersist]]).
   *
   * Unlike the reference's materialize-after-every-step pandas flow, the
   * whole chain up to the report serializer is one lazy Catalyst plan: four
@@ -11,57 +19,69 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * exchange for the keep-first dedup window, and one range exchange for the
   * display sort. The LLM rewrite is resolved once over the global distinct
   * summary set (per-value semantics identical to the reference's per-record
-  * batching, since the map is keyed by text).
+  * batching, since the rewrite is keyed by text) and applied as a broadcast
+  * left join.
   */
 object Pipeline {
+
+  /** The stage chain — the only composition of the stages.
+    *
+    * Lazy unless `eager`, which adds the request path's three steps: the
+    * fact is localized, `cleaned` is cached for its two readers (the
+    * rewrite-pair scan and the report serializer) and the report is
+    * localized, after which the cache is dropped. `onCleaned` sees the
+    * cleaned frame before the rewrite runs ([[runAndPersist]]'s CSV). */
+  private def chain(records: DataFrame, dims: Option[Dims],
+                    client: Llm.RewriteClient, eager: Boolean,
+                    onCleaned: DataFrame => Unit = _ => ()): DataFrame = {
+    val flat = Ingest.flatten(records)
+    val fact = if (eager) localize(flat) else flat
+    val d = dims.getOrElse(Dims.fallback(fact)).restrictedTo(fact)
+    val clean = Clean.clean(Enrich.enrich(fact, d))
+    val cleaned = if (eager) clean.cache() else clean
+    try {
+      onCleaned(cleaned)
+      val report = Report.reportJoined(cleaned, Ingest.requestEcho(records),
+        Llm.rewriteFrame(cleaned, client))
+      if (eager) localize(report) else report
+    } finally {
+      if (eager) cleaned.unpersist()
+    }
+  }
 
   /** Run the full pipeline over request bodies already parsed to the
     * record level. @return (record_id, report, request) in request order.
     *
-    * The LLM rewrite applies as a broadcast left join
-    * ([[Report.reportJoined]]) — no driver-side rewrite map. The result
-    * is materialized EAGERLY into a local frame before returning: the
-    * reference's contract is request/response (the report table IS the
-    * HTTP body, `text_processing.py:169-177`), so the output is
-    * driver-sized by definition, and eager materialization lets the
-    * intermediate caches unpersist deterministically — a long-lived
+    * The eager [[chain]]: the result is materialized into a local frame
+    * before returning. The reference's contract is request/response (the
+    * report table IS the HTTP body, `text_processing.py:169-177`), so the
+    * output is driver-sized by definition, and eager materialization lets
+    * the cached `cleaned` frame unpersist deterministically — a long-lived
     * serving process holds zero cached RDDs between requests (pinned by
-    * `PipelinePropertiesSpec`). For bulk offline composition where the
-    * output is NOT driver-sized, call the stage functions directly
-    * ([[Ingest.flatten]] → [[Enrich.enrich]] → [[Clean.clean]] →
-    * [[Report.reportJoined]]) and sink the lazy frame. */
+    * `PipelinePropertiesSpec`).
+    *
+    * The fact is LOCALIZED rather than cached: a dozen downstream jobs
+    * read it to build broadcasts (4 dims + code set + org/max scalars),
+    * and against a LocalTableScan they are plan-local. The three eager
+    * steps are measured, not assumed: replacing this method with
+    * `localize(runDistributed(...))` raised the p50 latency of
+    * `perfbench/run.py --workload serve_mock` on a 4-core host from
+    * 2,448 to 3,656 ms (seed 301) and from 3,002 to 3,682 ms (seed 302).
+    * For bulk offline work, where the output is NOT
+    * driver-sized, use [[runDistributed]] and sink the lazy frame. */
   def runRecords(records: DataFrame, dims: Option[Dims] = None,
-                 client: Llm.RewriteClient = Llm.MockClient): DataFrame = {
-    // LOCALIZE the fact rather than cache it: the request path's input
-    // is driver-sized by contract (see class doc — bulk flows compose
-    // the stage functions directly), and a dozen downstream jobs read
-    // the fact to build broadcasts (4 dims + code set + org/max
-    // scalars). Against a cached distributed frame each of those jobs
-    // pays scheduling + block-manager reads; against a LocalTableScan
-    // they are plan-local. Same rows either way — the golden suite
-    // stays byte-exact.
-    val fact = localize(Ingest.flatten(records))
-    val d = dims.getOrElse(Dims.fallback(fact)).restrictedTo(fact)
-    val enriched = Enrich.enrich(fact, d)
-    val cleaned = Clean.clean(enriched).cache()
-    try {
-      val rewrite = Llm.rewriteFrame(cleaned, client)
-      localize(Report.reportJoined(cleaned, Ingest.requestEcho(records), rewrite))
-    } finally {
-      cleaned.unpersist()
-    }
-  }
+                 client: Llm.RewriteClient = Llm.MockClient): DataFrame =
+    chain(records, dims, client, eager = true)
 
   /** EP1 as ONE LAZY Catalyst plan — the corpus-scale twin of
-    * [[runRecords]]. Same stage composition (flatten → enrich → clean →
-    * LLM rewrite join → report), but nothing is collected, cached, or
-    * localized: the returned frame is a pure logical plan the caller can
+    * [[runRecords]]. The same [[chain]], but nothing is collected, cached,
+    * or localized: the returned frame is a pure logical plan the caller can
     * sink with `df.write` / [[Sinks.writeReportJsonl]], `explain`, or
     * compose further. Output is byte-identical to [[runRecords]]
     * (pinned by `PipelinePropertiesSpec` on random requests and the
     * golden fixtures) and `repartition(n)`-invariant — every
     * order-dependent operator keys on the `_rid` / `_rec_ord` ingest
-    * ordinals, never on physical row order.
+    * ordinals and then on row content, never on physical row order.
     *
     * Scale notes:
     *  - the cleaned subtree feeds BOTH the rewrite-pair scan and the
@@ -85,13 +105,8 @@ object Pipeline {
     *    fallback dims derive from the fact frame itself, still lazily.
     */
   def runDistributed(records: DataFrame, dims: Option[Dims] = None,
-                     client: Llm.RewriteClient = Llm.MockClient): DataFrame = {
-    val fact = Ingest.flatten(records)
-    val d = dims.getOrElse(Dims.fallback(fact)).restrictedTo(fact)
-    val cleaned = Clean.clean(Enrich.enrich(fact, d))
-    val rewrite = Llm.rewriteFrame(cleaned, client)
-    Report.reportJoined(cleaned, Ingest.requestEcho(records), rewrite)
-  }
+                     client: Llm.RewriteClient = Llm.MockClient): DataFrame =
+    chain(records, dims, client, eager = false)
 
   /** Collect a driver-sized result and rebuild it as a local DataFrame,
     * cutting all lineage to the pipeline's cached intermediates so they
@@ -106,39 +121,22 @@ object Pipeline {
   def run(spark: SparkSession, requestBody: String,
           dims: Option[Dims] = None,
           client: Llm.RewriteClient = Llm.MockClient): DataFrame =
-    runRecords(Ingest.parseBodies({
-      import spark.implicits._
-      spark.createDataset(Seq(requestBody))
-    }), dims, client)
+    runRecords(Ingest.parseBody(spark, requestBody), dims, client)
 
   /** EP1 with the reference's CSV intermediates
-    * (`text_processing.py:157-166`): persists the cleaned frame and the
-    * final report table under timestamped names in `outDir`, then
-    * returns the report frame. Single-file CSVs mirror the reference's
-    * artifact shape; pass `singleFile = false` at scale. */
+    * (`text_processing.py:157-166`): the eager [[chain]] plus two
+    * single-file CSVs under timestamped names in `outDir` — the cleaned
+    * frame (display order, without `_rid`) and the final report table.
+    * @return the report frame, as [[run]] returns it. */
   def runAndPersist(spark: SparkSession, requestBody: String, outDir: String,
                     dims: Option[Dims] = None,
-                    client: Llm.RewriteClient = Llm.MockClient,
-                    singleFile: Boolean = true): DataFrame = {
-    val records = Ingest.parseBodies({
-      import spark.implicits._
-      spark.createDataset(Seq(requestBody))
-    })
-    val fact = localize(Ingest.flatten(records)) // see runRecords note
-    val d = dims.getOrElse(Dims.fallback(fact)).restrictedTo(fact)
-    val cleaned = Clean.clean(Enrich.enrich(fact, d)).cache()
-    try {
-      Sinks.writeCsv(cleaned.drop("_rid"),
-        s"$outDir/${Sinks.timestampedName("df_preprocessed_", "")}", singleFile)
-      val rewrite = Llm.rewriteFrame(cleaned, client)
-      val report = localize(
-        Report.reportJoined(cleaned, Ingest.requestEcho(records), rewrite))
-      Sinks.writeCsv(report,
-        s"$outDir/${Sinks.timestampedName("df_result_", "")}", singleFile)
-      report
-    } finally {
-      cleaned.unpersist()
-    }
+                    client: Llm.RewriteClient = Llm.MockClient): DataFrame = {
+    def csv(prefix: String, df: DataFrame): Unit =
+      Sinks.writeCsv(df, s"$outDir/${Sinks.timestampedName(prefix, "")}")
+    val report = chain(Ingest.parseBody(spark, requestBody), dims, client,
+      eager = true, onCleaned = c => csv("df_preprocessed_", c.drop("_rid")))
+    csv("df_result_", report)
+    report
   }
 
   /** The reference's shipped smoke fixture (`sample_request.json:1-29`),

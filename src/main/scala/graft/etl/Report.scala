@@ -19,8 +19,8 @@ object Report {
 
   /** One row of the per-language canonical view (P3/P4:
     * `text_processing.py:41-49`). `rewritten` carries the pre-joined
-    * LLM rewrite of `summary` on the [[reportJoined]] path (None = no
-    * join match, or the map-lookup path). */
+    * LLM rewrite of `summary` (None = no join match: the summary prints
+    * as it is). */
   private[etl] final case class RRow(group: String, itemCode: String,
                                 itemName: String, comment: String,
                                 summary: String,
@@ -39,8 +39,7 @@ object Report {
     * blocks re-order by first-seen item tuple; repeated item headers are
     * run-length suppressed.
     */
-  private[etl] def processOneRecord(lang: String, rows: Seq[RRow],
-                                    lookup: String => String): String = {
+  private[etl] def processOneRecord(lang: String, rows: Seq[RRow]): String = {
     val defaultText = Schemas.LANG_DEFAULT_SUMMARY.getOrElse(lang, "")
 
     // A7 — first-occurrence item-name collection keyed by trimmed code
@@ -108,7 +107,7 @@ object Report {
         if (block.comments.nonEmpty)
           lines += s"        ${block.comments.mkString("、")}"
         if (block.summary.nonEmpty)
-          lines += s"            ${block.rewritten.getOrElse(lookup(block.summary))}\n"
+          lines += s"            ${block.rewritten.getOrElse(block.summary)}\n"
       }
     }
     lines.mkString("\n")
@@ -279,10 +278,18 @@ object Report {
        |FROM e2""".stripMargin
 
   /** Assemble reports: cleaned frame → one `(record_id, report, request)`
-    * row per record, in request order (`text_processing.py:33-62`).
+    * row per record, in request order (`text_processing.py:33-62`), with
+    * the LLM rewrites applied as a BROADCAST LEFT JOIN — the X12 lookup
+    * `summary_translated.get(summary, summary)` (`text_processing.py:124`)
+    * without any driver hop, so the rewrite set only has to fit a
+    * broadcast (past that a shuffle join is the next rung, not a driver
+    * map).
     *
-    * Documented divergences from the reference, all for degenerate
-    * inputs only:
+    * Join key = [[Llm.rewriteKey]], the key the rewrite pairs were built
+    * from (the per-language SUMMARY trimmed here, as [[Llm.rewritePairs]]
+    * trims it); a row with no match prints its own trimmed summary.
+    *
+    * Documented divergences from the reference:
     *  - a record whose findings are ALL filtered out (empty ITEMS, or
     *    every COMMENT blank) makes the reference crash with a KeyError
     *    at `text_processing.py:39` (`get_group` on a missing key) → the
@@ -295,56 +302,33 @@ object Report {
     *    → the whole request 500s; here the record renders with the
     *    language-1 (TC) columns and defaults — again graceful
     *    degradation, pinned by `GoldenPipelineSpec`'s unknown-language
-    *    case.
+    *    case;
+    *  - a dim with a duplicate key fans one finding out into several rows
+    *    with the same `_rid`. The reference orders those rows as Mongo's
+    *    `find()` returns them, which is unspecified; here they order by
+    *    row content ([[Clean.ContentOrder]]), so the report never depends
+    *    on shuffle arrival or partition count.
     *
-    * @param cleaned  output of [[Clean.clean]] (22 columns + `_rid`)
-    * @param echo     output of [[Ingest.requestEcho]]
-    * @param rewrite  (langNo, summary) → rewritten, from [[Llm.rewriteMap]]
-    */
-  def report(cleaned: DataFrame, echo: DataFrame,
-             rewrite: Map[(String, String), String]): DataFrame = {
-    val rewriteB = cleaned.sparkSession.sparkContext.broadcast(rewrite)
-    assemble(cleaned, echo,
-      (lang, summary) => rewriteB.value.getOrElse((lang, summary), summary))
-  }
-
-  /** [[report]] with the LLM rewrites applied as a BROADCAST LEFT JOIN
-    * instead of a driver-collected map — the X12 lookup
-    * (`text_processing.py:124`) without any driver hop, so the rewrite
-    * set may be arbitrarily large (it only has to fit a broadcast, and
-    * at that point a shuffle join is the next rung, not a driver map).
-    *
-    * Join key = (trimmed LANG_NO, trimmed per-language SUMMARY), exactly
-    * the key [[Llm.rewriteMap]] builds; non-matches keep the original
-    * summary, matching the map's `getOrElse`. Byte-identical output to
-    * [[report]] — pinned by `PipelinePropertiesSpec` (map ≡ join on
-    * random requests) and the golden suite.
-    *
+    * @param cleaned output of [[Clean.clean]] (22 columns + `_rid`)
+    * @param echo    output of [[Ingest.requestEcho]]
     * @param rewrite output of [[Llm.rewriteFrame]]:
     *                `(_rw_lang, _rw_orig, _rw_text)`
     */
   def reportJoined(cleaned: DataFrame, echo: DataFrame,
                    rewrite: DataFrame): DataFrame = {
-    val lang = trim(col("LANG_NO").cast("string"))
-    // same per-language CASE as Llm.summaryPairs — the column the
-    // serializer will read for this row's language
-    val summary = Schemas.LANG_SUBSET.foldLeft(lit(null).cast("string")) {
-      case (acc, (l, cols)) => when(lang === l, col(cols(7)).cast("string")).otherwise(acc)
-    }
+    val (lang, summary) = Llm.rewriteKey
     val joined = cleaned
       .join(broadcast(rewrite),
         lang === col("_rw_lang") && trim(summary) === col("_rw_orig"), "left")
       .drop("_rw_lang", "_rw_orig")
       .withColumnRenamed("_rw_text", "_summary_rw")
-    assemble(joined, echo, (_, summary) => summary)
+    assemble(joined, echo)
   }
 
-  /** Shared serializer core: groups the frame by RECORD_ID and runs
-    * [[processOneRecord]] per record. If the frame carries a
-    * `_summary_rw` column (the joined path), each row's rewrite rides
-    * in-row; otherwise `fallback(lang, summary)` resolves lookups. */
-  private def assemble(frame: DataFrame, echo: DataFrame,
-                       fallback: (String, String) => String): DataFrame = {
+  /** Serializer core: groups the joined frame by RECORD_ID and runs
+    * [[processOneRecord]] per record, each row's rewrite riding in-row in
+    * `_summary_rw`. */
+  private def assemble(frame: DataFrame, echo: DataFrame): DataFrame = {
     val spark = frame.sparkSession
     import spark.implicits._
 
@@ -356,31 +340,34 @@ object Report {
     val tcItemIdx = idx("TCNAME_ITEM")
     val itemCodeIdx = idx("ITEM_CODE")
     val ridIdx = idx("_rid")
-    val rwIdx: Option[Int] = idx.get("_summary_rw")
+    val rwIdx = idx("_summary_rw")
+    val tieIdx = Clean.ContentOrder.map(idx)
     // per-language column positions for GROUP / ITEM_NAME / COMMENT / SUMMARY
     val langCols: Map[String, (Int, Int, Int, Int)] =
       Schemas.LANG_SUBSET.map { case (lang, cols) =>
         lang -> ((idx(cols(3)), idx(cols(5)), idx(cols(6)), idx(cols(7))))
       }
 
+    // Display order within the record (`data_preprocessing.py:75` +
+    // ingest-ordinal stability): GROUPNO, TCNAME_ITEM, _rid, then the row
+    // content for rows fanned out of one finding (Clean.ContentOrder).
+    val displayOrder = Ordering.by { (r: Row) =>
+      val rid = r.getStruct(ridIdx)
+      (if (r.isNullAt(groupNoIdx)) Int.MaxValue else r.getInt(groupNoIdx),
+        s(r, tcItemIdx),
+        (rid.getLong(0), rid.getInt(1), rid.getInt(2), rid.getInt(3)))
+    }.orElseBy(r => tieIdx.map(s(r, _)))(Ordering.Implicits.seqOrdering)
+
     val reports = frame
       .groupByKey(r => if (r.isNullAt(recordIdIdx)) "" else String.valueOf(r.get(recordIdIdx)))
       .mapGroups { (recordId, it) =>
-        // Display order within the record (`data_preprocessing.py:75` +
-        // ingest-ordinal stability): GROUPNO, TCNAME_ITEM, _rid.
-        val rows = it.toVector.sortBy { r =>
-          val rid = r.getStruct(ridIdx)
-          (if (r.isNullAt(groupNoIdx)) Int.MaxValue else r.getInt(groupNoIdx),
-            s(r, tcItemIdx),
-            (rid.getLong(0), rid.getInt(1), rid.getInt(2), rid.getInt(3)))
-        }
+        val rows = it.toVector.sorted(displayOrder)
         val lang = s(rows.head, langIdx).trim
         val (gi, ii, ci, si) = langCols.getOrElse(lang, langCols("1"))
         val rrows = rows.map(r =>
           RRow(s(r, gi), s(r, itemCodeIdx), s(r, ii), s(r, ci), s(r, si),
-            rwIdx.flatMap(i => if (r.isNullAt(i)) None else Some(r.getString(i)))))
-        val lookup = (summary: String) => fallback(lang, summary)
-        (recordId, processOneRecord(lang, rrows, lookup))
+            if (r.isNullAt(rwIdx)) None else Some(r.getString(rwIdx))))
+        (recordId, processOneRecord(lang, rrows))
       }
       .toDF("record_id", "report")
 

@@ -6,20 +6,16 @@ import org.apache.spark.sql.functions._
 import java.time.LocalDateTime
 import java.time.format.DateTimeFormatter
 
-/** Output sinks — the reference's CSV intermediates and JSON response
-  * (§2.1 S7/S8, X13).
+/** Output sinks — the reference's CSV intermediates and the report
+  * table at scale (§2.1 S7/S8, X13).
   *
   *  - S7 (`text_processing.py:60,157-166`): header CSV with timestamped
-  *    filenames. The reference writes one file from one pandas frame;
-  *    here `singleFile=true` coalesces to preserve that exact artifact
-  *    shape, while the default keeps one file per partition — the only
-  *    scalable layout at 100 TB (a single-file write serializes the
-  *    whole dataset through one task).
-  *  - S8 (`text_processing.py:174`): `[{"report": …}, …]`. Offered both
-  *    as a distributed JSON-lines column (for sinks) and as a driver-side
-  *    response string (the reference's HTTP-response shape — only for
-  *    result sets that fit on the driver, which a per-request report
-  *    does).
+  *    filenames, one file per write like the reference's one pandas
+  *    frame. Only the per-request [[Pipeline.runAndPersist]] writes it;
+  *    corpus-sized output goes to the sharded JSONL sink instead.
+  *  - S8 (`text_processing.py:174`): the per-request JSON response is
+  *    built by [[graft.Serve]]; at scale the report table lands in
+  *    [[writeReportJsonl]]'s shards.
   *  - X13 (`text_processing.py:162`): `%y%m%d_%H%M` timestamp naming,
   *    clock-injectable for deterministic tests.
   */
@@ -30,23 +26,16 @@ object Sinks {
                       now: LocalDateTime = LocalDateTime.now()): String =
     s"$prefix${now.format(DateTimeFormatter.ofPattern("yyMMdd_HHmm"))}$suffix"
 
-  /** S7 — header CSV. `singleFile` reproduces the reference's one-file
-    * artifact; leave false for scale. */
-  def writeCsv(df: DataFrame, path: String, singleFile: Boolean = false): Unit =
-    (if (singleFile) df.coalesce(1) else df)
-      .write.mode(SaveMode.Overwrite).option("header", "true").csv(path)
-
-  /** S8, distributed — one JSON object string per row:
-    * `{"report": "..."}`. */
-  def jsonRecords(reports: DataFrame): DataFrame =
-    reports.select(to_json(struct(col("report"))).as("json"))
-
-  /** S8, driver-side — the reference's HTTP response body
-    * (`df_out[['report']].to_dict(orient="records")` serialized). Only
-    * for driver-sized results. */
-  def jsonResponse(reports: DataFrame): String =
-    jsonRecords(reports).collect().map(_.getString(0))
-      .mkString("[", ", ", "]")
+  /** S7 — header CSV as ONE part file, the reference's one-file
+    * artifact (coalesced to one task, so driver-sized frames only).
+    * Values are written verbatim, as pandas `to_csv` writes them: Spark's
+    * CSV writer trims leading and trailing whitespace by default, which
+    * would drop every report's trailing newline. */
+  def writeCsv(df: DataFrame, path: String): Unit =
+    df.coalesce(1).write.mode(SaveMode.Overwrite).option("header", "true")
+      .option("ignoreLeadingWhiteSpace", "false")
+      .option("ignoreTrailingWhiteSpace", "false")
+      .csv(path)
 
   /** Report-table schema as it round-trips through the JSONL sink. */
   val reportSchema: org.apache.spark.sql.types.StructType =
@@ -58,9 +47,9 @@ object Sinks {
       org.apache.spark.sql.types.StructField("request",
         org.apache.spark.sql.types.StringType)))
 
-  /** S8 at scale — the sharded JSONL report sink. The single-file CSV /
-    * driver-side JSON shapes above mirror the reference's per-request
-    * artifacts (`text_processing.py:157-166,174`); this is the layout a
+  /** S8 at scale — the sharded JSONL report sink. The single-file CSV
+    * above mirrors the reference's per-request artifacts
+    * (`text_processing.py:157-166`); this is the layout a
     * corpus-sized [[Pipeline.runDistributed]] output actually lands in:
     * one JSON object per line, `maxRecordsPerFile` bounding shard size
     * WITHOUT a repartition (each task rolls to a new file at the limit),

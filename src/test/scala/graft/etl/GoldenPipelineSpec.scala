@@ -113,15 +113,19 @@ class GoldenPipelineSpec extends AnyFunSuite {
     // sorts, run-length suppression) must be partition-invariant, not
     // just correct at the suite's fixed partitions=4 — re-run the
     // byte-exact rich assertion under cloned sessions with the
-    // shuffle-partition count perturbed both below and above it
+    // shuffle-partition count perturbed both below and above it. With
+    // adaptive execution on, small inputs coalesce into one reducer, so
+    // the last input turns it off to really exercise multi-partition
+    // shuffle order
     val body = resource("/rich_request.json")
     val golden = jsonl("/rich_golden.jsonl")
       .select("record_id", "report", "request")
       .collect().map(r => (r.getString(0), r.getString(1), r.getString(2)))
       .sortBy(_._1).toSeq
-    Seq("1", "13").foreach { n =>
+    Seq(("1", true), ("13", true), ("13", false)).foreach { case (n, adaptive) =>
       val s2 = spark.newSession()
       s2.conf.set("spark.sql.shuffle.partitions", n)
+      s2.conf.set("spark.sql.adaptive.enabled", adaptive.toString)
       val dims2 = Dims(
         jsonlIn(s2, "/rich_dims_item_meta.jsonl"),
         jsonlIn(s2, "/rich_dims_item_group_map.jsonl"),
@@ -130,7 +134,7 @@ class GoldenPipelineSpec extends AnyFunSuite {
       val out = Pipeline.run(s2, body, dims = Some(dims2))
         .collect().map(r => (r.getString(0), r.getString(1), r.getString(2)))
       assert(out.toSeq === golden,
-        s"shuffle.partitions=$n changed the golden byte-exact output")
+        s"shuffle.partitions=$n (adaptive=$adaptive) changed the golden byte-exact output")
     }
   }
 

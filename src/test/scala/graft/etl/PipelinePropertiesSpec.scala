@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, concat, lit}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -38,37 +38,101 @@ class PipelinePropertiesSpec extends AnyFunSuite {
       case c => c.toString
     } + "\""
 
+  /** Fallback dims for `records`, with real summary texts: fallback
+    * summaries are empty, so Clean would fill the per-language DEFAULTS,
+    * which bypass the LLM. */
+  private def summaryDims(records: DataFrame): Dims = {
+    val d0 = Dims.fallback(Ingest.flatten(records))
+    d0.copy(summaryTbl = d0.summaryTbl.select(
+      col("SUMMARY_CODE"),
+      concat(lit("摘要 "), col("SUMMARY_CODE")).as("TCNAME_SUMMARY"),
+      concat(lit("摘要simp "), col("SUMMARY_CODE")).as("SCNAME_SUMMARY"),
+      concat(lit("Sum "), col("SUMMARY_CODE")).as("ENNAME_SUMMARY"),
+      concat(lit("要約 "), col("SUMMARY_CODE")).as("JPNAME_SUMMARY")))
+  }
+
+  private def triples(df: DataFrame): Seq[(String, String, String)] =
+    df.collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSeq
+
   test("rewrite map path ≡ broadcast-join path on random requests") {
-    import spark.implicits._
     // a client whose output is distinguishable per (lang, text), so a
     // join-key mismatch can't hide behind identity rewrites
     val marker = new Llm.RewriteClient {
       def rewrite(langNo: String, text: String): String = s"[RW:$langNo]$text"
     }
-    Seq(7L, 23L, 99L).foreach { seed =>
-      val body = randomBody(seed, nRecords = 6)
-      val records = Ingest.parseBodies(spark.createDataset(Seq(body)))
-      val fact = Ingest.flatten(records)
-      // fallback dims leave summaries empty → Clean fills the per-language
-      // DEFAULTS, which bypass the LLM; give the summary dim real texts so
-      // the rewrite path actually fires
-      val d0 = Dims.fallback(fact)
-      val d = d0.copy(summaryTbl = d0.summaryTbl.select(
-          col("SUMMARY_CODE"),
-          concat(lit("摘要 "), col("SUMMARY_CODE")).as("TCNAME_SUMMARY"),
-          concat(lit("摘要simp "), col("SUMMARY_CODE")).as("SCNAME_SUMMARY"),
-          concat(lit("Sum "), col("SUMMARY_CODE")).as("ENNAME_SUMMARY"),
-          concat(lit("要約 "), col("SUMMARY_CODE")).as("JPNAME_SUMMARY")))
-        .restrictedTo(fact)
-      val cleaned = Clean.clean(Enrich.enrich(fact, d))
-      val echo = Ingest.requestEcho(records)
-      val viaMap = Report.report(cleaned, echo, Llm.rewriteMap(cleaned, marker))
-        .collect().map(r => (r.getString(0), r.getString(1))).sortBy(_._1).toSeq
-      val viaJoin = Report.reportJoined(cleaned, echo, Llm.rewriteFrame(cleaned, marker))
-        .collect().map(r => (r.getString(0), r.getString(1))).sortBy(_._1).toSeq
-      assert(viaMap.exists(_._2.contains("[RW:")), s"seed $seed: no rewrite exercised")
-      assert(viaJoin == viaMap, s"seed $seed: joined path diverged from map path")
+    val identity = new Llm.RewriteClient {
+      def rewrite(langNo: String, text: String): String = text
     }
+    val summaryIndent = " " * 12
+    val langOf = "\"LANG_NO\": \"([^\"]*)\"".r
+    Seq(7L, 23L, 99L).foreach { seed =>
+      val records = Ingest.parseBody(spark, randomBody(seed, nRecords = 6))
+      val dims = Some(summaryDims(records))
+      // broadcast-join path: the pipeline with the marker client
+      val viaJoin = triples(Pipeline.runRecords(records, dims, marker))
+      val plain = triples(Pipeline.runRecords(records, dims, identity))
+      assert(viaJoin.map(t => (t._1, t._3)) == plain.map(t => (t._1, t._3)),
+        s"seed $seed: record order or request echo changed with the client")
+      // map path: a driver-side (lang, summary) → rewrite map, built from
+      // the non-default summary lines of the unrewritten reports and
+      // applied to them line by line
+      def summaryOf(lang: String, line: String): Option[String] =
+        Some(line.stripPrefix(summaryIndent)).filter(t =>
+          line.startsWith(summaryIndent) && t != Schemas.LANG_DEFAULT_SUMMARY(lang))
+      val withLang = plain.map { case (id, p, req) =>
+        (id, langOf.findFirstMatchIn(req).get.group(1), p) }
+      val rewriteMap: Map[(String, String), String] = withLang.flatMap { case (_, lang, p) =>
+        p.split("\n", -1).flatMap(summaryOf(lang, _)).map(t => (lang, t) -> marker.rewrite(lang, t))
+      }.toMap
+      assert(rewriteMap.nonEmpty, s"seed $seed: no rewrite exercised")
+      val viaMap = withLang.map { case (id, lang, p) =>
+        id -> p.split("\n", -1).map(l =>
+          summaryOf(lang, l).fold(l)(t => summaryIndent + rewriteMap((lang, t)))).mkString("\n")
+      }
+      viaJoin.map(t => (t._1, t._2)).zip(viaMap).foreach { case ((id, j), (_, m)) =>
+        val (jLines, mLines) = (j.split("\n", -1).toSeq, m.split("\n", -1).toSeq)
+        assert(jLines.length == mLines.length, s"seed $seed $id: line count differs")
+        jLines.zip(mLines).foreach { case (jl, ml) =>
+          assert(jl == ml, s"seed $seed $id: joined path diverged from map path")
+        }
+      }
+    }
+  }
+
+  test("fanned-out rows (duplicate dim key) order by content at any shuffle-partition count") {
+    // a duplicate diag_tbl key fans each finding out into rows sharing one
+    // _rid: D1 into two summaries (two report blocks), D2 into two comment
+    // translations under one summary (a keep-first tie). With adaptive
+    // execution off the shuffles really use the configured partition
+    // count, so arrival order differs between the runs below.
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.adaptive.enabled", "false")
+    val records = Ingest.parseBody(s2, randomBody(61L, nRecords = 200))
+    val d0 = summaryDims(records)
+    val extra = s2.createDataFrame(Seq(
+      ("D1", "DX", "fan en", "fan jp", "fan sc"),
+      ("D2", "D2", "alt en", "alt jp", "alt sc")))
+      .toDF("DIAG_CODE", "SUMMARY_CODE", "ENNAME_COMMENT", "JPNAME_COMMENT", "SCNAME_COMMENT")
+    val extraSummary = s2.createDataFrame(Seq(("DX", "扇出", "扇出simp", "Fan", "ファン")))
+      .toDF("SUMMARY_CODE", "TCNAME_SUMMARY", "SCNAME_SUMMARY", "ENNAME_SUMMARY", "JPNAME_SUMMARY")
+    val dims = Some(d0.copy(
+      diagTbl = d0.diagTbl.unionByName(extra),
+      summaryTbl = d0.summaryTbl.unionByName(extraSummary)))
+    def runAt(n: Int, run: (DataFrame, Option[Dims]) => DataFrame) = {
+      s2.conf.set("spark.sql.shuffle.partitions", n.toString)
+      triples(run(records, dims)).sortBy(_._1)
+    }
+    val base = runAt(1, Pipeline.runRecords(_, _))
+    assert(base.nonEmpty)
+    assert(base.exists(_._2.contains("扇出")) && base.exists(_._2.contains("Fan")),
+      "the duplicate key must fan out into the reports")
+    Seq(4, 7, 13).foreach { n =>
+      val out = runAt(n, Pipeline.runRecords(_, _))
+      val changed = out.zip(base).count { case (a, b) => a != b }
+      assert(changed == 0, s"shuffle.partitions=$n changed $changed of ${base.length} reports")
+    }
+    assert(runAt(4, Pipeline.runDistributed(_, _)) == base,
+      "runDistributed disagreed with runRecords at shuffle.partitions=4")
   }
 
   test("runRecords leaves no cached RDDs behind") {

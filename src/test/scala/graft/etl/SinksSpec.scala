@@ -20,24 +20,52 @@ class SinksSpec extends AnyFunSuite {
     import spark.implicits._
     val df = Seq(("R1", "report a"), ("R2", "report b")).toDF("record_id", "report")
     val dir = Files.createTempDirectory("graft_csv").toString + "/out"
-    Sinks.writeCsv(df, dir, singleFile = true)
+    Sinks.writeCsv(df.repartition(3), dir)
     val parts = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".csv"))
-    assert(parts.length == 1, "singleFile must produce exactly one csv part")
+    assert(parts.length == 1, "the csv sink must produce exactly one csv part")
     val back = spark.read.option("header", "true").csv(dir)
     assert(back.collect().map(r => (r.getString(0), r.getString(1))).toSet ==
       Set(("R1", "report a"), ("R2", "report b")))
   }
 
+  /** Two records, items listed out of display order, a duplicate
+    * finding, full-width text and a space-padded comment, so the CSV's
+    * row order and values are worth pinning. */
+  private val persistBody =
+    """[{"RECORD_ID": "R2", "LANG_NO": "2", "ORG_ID": "O1", "ITEMS": [
+      |  {"ITEM_CODE": "I9", "FINDINGS": [{"DIAG_CODE": "D1", "COMMENT": "late（ x ）", "SUMMARY_CODE": "S"}]},
+      |  {"ITEM_CODE": "I1", "FINDINGS": [{"DIAG_CODE": "D2", "COMMENT": "early", "SUMMARY_CODE": "S"},
+      |                                   {"DIAG_CODE": "D2", "COMMENT": "early", "SUMMARY_CODE": "S"}]}]},
+      | {"RECORD_ID": "R1", "LANG_NO": "1", "ORG_ID": "O1", "ITEMS": [
+      |  {"ITEM_CODE": "I5", "FINDINGS": [{"DIAG_CODE": "D3", "COMMENT": " 範例 B ", "SUMMARY_CODE": "S"}]}]}]""".stripMargin
+
+  private def strings(rows: Array[org.apache.spark.sql.Row]): Seq[Seq[String]] =
+    rows.toSeq.map(_.toSeq.map(v => if (v == null) "" else v.toString))
+
   test("runAndPersist writes both CSV intermediates and returns the report") {
     val dir = Files.createTempDirectory("graft_ep1").toString
-    val out = Pipeline.runAndPersist(spark, Pipeline.SampleRequest, dir)
-    assert(out.count() == 1)
+    val out = Pipeline.runAndPersist(spark, persistBody, dir)
     val written = new java.io.File(dir).listFiles().map(_.getName).sorted
-    assert(written.exists(_.startsWith("df_preprocessed_")), written.mkString(","))
-    assert(written.exists(_.startsWith("df_result_")), written.mkString(","))
-    val cleanedBack = spark.read.option("header", "true")
-      .csv(s"$dir/${written.find(_.startsWith("df_preprocessed_")).get}")
-    assert(cleanedBack.count() == 2) // two findings in the sample request
+    def csvBack(prefix: String) = spark.read.option("header", "true")
+      .option("multiLine", "true")
+      .csv(s"$dir/${written.find(_.startsWith(prefix)).getOrElse(fail(written.mkString(",")))}")
+
+    // df_result_*: exactly the rows Pipeline.run returns for the body
+    val expected = Pipeline.run(spark, persistBody)
+    assert(out.collect().toSeq == expected.collect().toSeq)
+    val resultBack = csvBack("df_result_")
+    assert(resultBack.columns.toSeq == Seq("record_id", "report", "request"))
+    assert(strings(resultBack.collect()) == strings(expected.collect()))
+
+    // df_preprocessed_*: the cleaned rows, without _rid, in display order
+    val fact = Ingest.flatten(Ingest.parseBody(spark, persistBody))
+    val cleaned = Clean.clean(Enrich.enrich(fact, Dims.fallback(fact).restrictedTo(fact)))
+      .drop("_rid")
+    val cleanedBack = csvBack("df_preprocessed_")
+    assert(cleanedBack.columns.toSeq == cleaned.columns.toSeq)
+    val cleanedRows = strings(cleaned.collect())
+    assert(cleanedRows.map(_.head) == Seq("R1", "R2", "R2"), "display order: RECORD_ID first")
+    assert(strings(cleanedBack.collect()) == cleanedRows)
   }
 
   test("sharded JSONL report sink bounds shard size and round-trips") {
@@ -73,11 +101,5 @@ class SinksSpec extends AnyFunSuite {
     val direct = out.collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(2))).sortBy(_._1).toSeq
     assert(back == direct && back.nonEmpty)
-  }
-
-  test("json response matches the reference's [{\"report\": ...}] shape") {
-    import spark.implicits._
-    val df = Seq(("R1", "line1\nline2")).toDF("record_id", "report")
-    assert(Sinks.jsonResponse(df) == """[{"report":"line1\nline2"}]""")
   }
 }
