@@ -269,11 +269,11 @@ object SparkEntry {
             if (src.isDirectory) (src.getPath, "*.parquet")
             else (d, "documents.parquet")
           graft.streaming.TombstoneStream.runAvailableNow(s, srcDir,
-            graft.streaming.IndexStream.rawSchema, "doc_id", setDir,
+            graft.streaming.Drain.DocumentsSchema, "doc_id", setDir,
             deltaFilter = col("doc_id") % 5 === 2, glob = glob)
           val (lp, ll, ls) = ops.Search.bm25LoadIndexWs(s, idxDir)
           ops.Search.bm25QueryIndexTombstoned(lp, ll, ls,
-            graft.streaming.TombstoneStream.loadSet(s, setDir))
+            graft.streaming.Drain.readSink(s, setDir))
         }),
         // The decontamination family's stream edge (d27): corpus
         // vectors drain as delta micro-batches, each checked against
@@ -316,11 +316,11 @@ object SparkEntry {
             else (d, "documents.parquet")
           def drain(sub: String, f: org.apache.spark.sql.Column): Unit =
             graft.streaming.TombstoneStream.runAvailableNow(s, srcDir,
-              graft.streaming.IndexStream.rawSchema, "doc_id",
+              graft.streaming.Drain.DocumentsSchema, "doc_id",
               s"$setDir/$sub", deltaFilter = f, glob = glob)
           // tranche A: a trickle — ids ≡ 2 mod 100 (1% of the evens)
           drain("a", col("doc_id") % 100 === 2)
-          val trickle = graft.streaming.TombstoneStream.loadSet(s, setDir)
+          val trickle = graft.streaming.Drain.readSink(s, setDir)
           require(!ops.Dedup.cjkCompactIfNeeded(s, idxDir, trickle),
             "p12: a 1% delete trickle must not trigger a store rebuild")
           // the between-compactions phase: the tombstone serve corrects
@@ -330,7 +330,7 @@ object SparkEntry {
             toks(col("doc_id") % 2 =!= 0), 0.6, idxDir, trickle).count()
           // tranche B: the rest of the ≡ 2 mod 5 takedown set arrives
           drain("b", col("doc_id") % 5 === 2 && col("doc_id") % 100 =!= 2)
-          val full = graft.streaming.TombstoneStream.loadSet(s, setDir)
+          val full = graft.streaming.Drain.readSink(s, setDir)
           require(ops.Dedup.cjkCompactIfNeeded(s, idxDir, full),
             "p12: the accumulated set must cross the ratio and compact")
           // the set retires — the compacted store needs nothing from it
@@ -588,7 +588,7 @@ object SparkEntry {
             if (src.isDirectory) (src.getPath, "*.parquet")
             else (d, "embeddings.parquet")
           graft.streaming.TombstoneStream.runAvailableNow(s, srcDir,
-            graft.streaming.DeconStream.rawSchema, "vec_id", setDir,
+            graft.streaming.Drain.EmbeddingsSchema, "vec_id", setDir,
             deltaFilter = col("vec_id") % 7 === 3, glob = glob)
         },
         (s: SparkSession, d: String) => {
@@ -598,7 +598,7 @@ object SparkEntry {
             vecs.filter(col("vec_id") % 10 =!= 0),
             vecs.filter(col("vec_id") % 10 === 0),
             "vec_id", "embedding", threshold = 0.45,
-            tombstones = Some(graft.streaming.TombstoneStream.loadSet(s,
+            tombstones = Some(graft.streaming.Drain.readSink(s,
               ops.IndexPaths.dir("d36_tombstones", d))))
         })),
       "m14_tombstone_stream" -> ((
@@ -614,11 +614,11 @@ object SparkEntry {
             if (src.isDirectory) (src.getPath, "*.parquet")
             else (d, "documents.parquet")
           graft.streaming.TombstoneStream.runAvailableNow(s, srcDir,
-            graft.streaming.IndexStream.rawSchema, "doc_id", setDir,
+            graft.streaming.Drain.DocumentsSchema, "doc_id", setDir,
             deltaFilter = col("doc_id") % 5 === 2, glob = glob)
         },
         (s: SparkSession, d: String) => {
-          val dead = graft.streaming.TombstoneStream.loadSet(s,
+          val dead = graft.streaming.Drain.readSink(s,
             ops.IndexPaths.dir("m14_tombstones", d))
             .select(col("doc_id")).distinct()
           ops.Multimodal.crossNearDupVsStore(
@@ -638,12 +638,12 @@ object SparkEntry {
             if (src.isDirectory) (src.getPath, "*.parquet")
             else (d, "embeddings.parquet")
           graft.streaming.TombstoneStream.runAvailableNow(s, srcDir,
-            graft.streaming.DeconStream.rawSchema, "vec_id", setDir,
+            graft.streaming.Drain.EmbeddingsSchema, "vec_id", setDir,
             deltaFilter = col("vec_id") % 7 === 3, glob = glob)
         },
         (s: SparkSession, d: String) =>
           ops.Similarity.ivfPqServeTombstoned(s, d,
-            graft.streaming.TombstoneStream.loadSet(s,
+            graft.streaming.Drain.readSink(s,
               ops.IndexPaths.dir("k29_tombstones", d))))),
       "p12_delete_lifecycle" -> ((
         (s: SparkSession, d: String) => {
@@ -660,15 +660,15 @@ object SparkEntry {
             else (d, "documents.parquet")
           def drain(sub: String, f: org.apache.spark.sql.Column): Unit =
             graft.streaming.TombstoneStream.runAvailableNow(s, srcDir,
-              graft.streaming.IndexStream.rawSchema, "doc_id",
+              graft.streaming.Drain.DocumentsSchema, "doc_id",
               s"$setDir/$sub", deltaFilter = f, glob = glob)
           drain("a", col("doc_id") % 100 === 2)
           require(!ops.Dedup.cjkCompactIfNeeded(s, idxDir,
-            graft.streaming.TombstoneStream.loadSet(s, setDir)),
+            graft.streaming.Drain.readSink(s, setDir)),
             "p12: a 1% delete trickle must not trigger a store rebuild")
           drain("b", col("doc_id") % 5 === 2 && col("doc_id") % 100 =!= 2)
           require(ops.Dedup.cjkCompactIfNeeded(s, idxDir,
-            graft.streaming.TombstoneStream.loadSet(s, setDir)),
+            graft.streaming.Drain.readSink(s, setDir)),
             "p12: the accumulated set must cross the ratio and compact")
           ops.IndexPaths.clear(setDir)
         },
@@ -718,14 +718,14 @@ object SparkEntry {
             if (src.isDirectory) (src.getPath, "*.parquet")
             else (d, "documents.parquet")
           graft.streaming.TombstoneStream.runAvailableNow(s, srcDir,
-            graft.streaming.IndexStream.rawSchema, "doc_id", setDir,
+            graft.streaming.Drain.DocumentsSchema, "doc_id", setDir,
             deltaFilter = col("doc_id") % 5 === 2, glob = glob)
         },
         (s: SparkSession, d: String) => {
           val (lp, ll, ls) = ops.Search.bm25LoadIndexWs(s,
             ops.IndexPaths.dir("r16_index", d))
           ops.Search.bm25QueryIndexTombstoned(lp, ll, ls,
-            graft.streaming.TombstoneStream.loadSet(s,
+            graft.streaming.Drain.readSink(s,
               ops.IndexPaths.dir("r16_tombstones", d)))
         })),
       "d19_minhash_persisted" -> ((

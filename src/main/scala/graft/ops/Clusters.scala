@@ -45,7 +45,19 @@ object Clusters {
     * @param pairs frame with two id columns (`a`, `b`), each row an edge
     * @return `(doc_id, cluster_id)` — one row per node that appears in
     *         at least one edge, labeled with its component's min id */
-  def connectedComponents(pairs: DataFrame, a: String, b: String): DataFrame = {
+  def connectedComponents(pairs: DataFrame, a: String, b: String): DataFrame =
+    connectedComponents(pairs, a, b, MaxDriverEdges)
+
+  /** Edge-list size (rows of the doubled, deduped edge list) up to which
+    * [[connectedComponents]] labels on the driver instead of running the
+    * distributed fixpoint. */
+  private val MaxDriverEdges: Long = 1L << 20
+
+  /** [[connectedComponents]] with the driver-path gate as an argument:
+    * `maxDriverEdges = 0` forces the distributed fixpoint (the spec pins
+    * both branches against each other that way). */
+  private[ops] def connectedComponents(pairs: DataFrame, a: String, b: String,
+                                       maxDriverEdges: Long): DataFrame = {
     val edges = pairs.select(col(a).cast("long").as("src"), col(b).cast("long").as("dst"))
       .union(pairs.select(col(b).cast("long").as("src"), col(a).cast("long").as("dst")))
       .distinct()
@@ -62,12 +74,7 @@ object Clusters {
     // pinned by OpsSpec's path-parity case). The gate is a DATA-size
     // threshold (rows of the doubled edge list), not a core-count
     // tune: on a 100 TB corpus whose near-dup graph outgrows it, the
-    // same call takes the distributed branch. Tunable per session via
-    // `graft.cc.maxDriverEdges` (0 disables the fast path — the spec
-    // uses that to pin both branches against each other).
-    val maxDriverEdges =
-      try pairs.sparkSession.conf.get("graft.cc.maxDriverEdges", "1048576").toLong
-      catch { case _: NumberFormatException => 1048576L }
+    // same call takes the distributed branch.
     if (maxDriverEdges > 0 && edges.count() <= maxDriverEdges) {
       val rows = edges.collect()
       edges.unpersist()

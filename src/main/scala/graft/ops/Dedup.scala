@@ -2138,14 +2138,14 @@ object Dedup {
         if (src.isDirectory) (src.getPath, "*.parquet")
         else (d, "embeddings.parquet")
       graft.streaming.TombstoneStream.runAvailableNow(s, srcDir,
-        graft.streaming.DeconStream.rawSchema, "vec_id", setDir,
+        graft.streaming.Drain.EmbeddingsSchema, "vec_id", setDir,
         deltaFilter = col("vec_id") % 7 === 3, glob = glob)
       semanticDecontaminateFromStore(s, idxDir,
         vecs.filter(col("vec_id") % 10 =!= 0),
         vecs.filter(col("vec_id") % 10 === 0),
         "vec_id", "embedding", threshold = 0.45,
         tombstones = Some(
-          graft.streaming.TombstoneStream.loadSet(s, setDir)))
+          graft.streaming.Drain.readSink(s, setDir)))
     }),
     "d15_minhash_estimate" -> ((s, d) =>
       minhashEstimatedPairs(Tables.documents(s, d), "doc_id", "text",

@@ -405,9 +405,9 @@ object Multimodal {
       if (src.isDirectory) (src.getPath, "*.parquet")
       else (d, "documents.parquet")
     graft.streaming.TombstoneStream.runAvailableNow(s, srcDir,
-      graft.streaming.IndexStream.rawSchema, "doc_id", setDir,
+      graft.streaming.Drain.DocumentsSchema, "doc_id", setDir,
       deltaFilter = col("doc_id") % 5 === 2, glob = glob)
-    val dead = graft.streaming.TombstoneStream.loadSet(s, setDir)
+    val dead = graft.streaming.Drain.readSink(s, setDir)
       .select(col("doc_id")).distinct()
     crossNearDupVsStore(
       frameLoadStore(s, dir).join(broadcast(dead), Seq("doc_id"), "left_anti"),

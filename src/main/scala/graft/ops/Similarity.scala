@@ -1681,10 +1681,10 @@ object Similarity {
         if (src.isDirectory) (src.getPath, "*.parquet")
         else (d, "embeddings.parquet")
       graft.streaming.TombstoneStream.runAvailableNow(s, srcDir,
-        graft.streaming.DeconStream.rawSchema, "vec_id", setDir,
+        graft.streaming.Drain.EmbeddingsSchema, "vec_id", setDir,
         deltaFilter = col("vec_id") % 7 === 3, glob = glob)
       ivfPqServeTombstoned(s, d,
-        graft.streaming.TombstoneStream.loadSet(s, setDir))
+        graft.streaming.Drain.readSink(s, setDir))
     }),
     // k28: k25's deletes EXPUNGED at rebuild time — publish the full
     // IVFPQ store, compact the tombstoned vectors out of codes +

@@ -91,7 +91,10 @@ object Sketches {
     * shard/day/source and [[hllMerge]] them later; max-per-bucket makes
     * merge associative, commutative, and idempotent, so any merge tree
     * over any partitioning yields the identical registers. Merge only
-    * register tables built with the SAME p. */
+    * register tables built with the SAME p. The same reasons make the
+    * column pipeline stream-safe: under a streaming aggregation the
+    * state store holds at most 2^p rows forever and every micro-batch
+    * folds in mergeably ([[graft.streaming.SketchStream.runAvailableNow]]). */
   def hllRegisters(df: DataFrame, valueCol: String, p: Int = P2): DataFrame = {
     val m = 1 << p
     graft.functions.VectorFunctions.register(df.sparkSession)
@@ -188,7 +191,10 @@ object Sketches {
     * not probabilistic: a quantile read-out is exact to its bucket —
     * est ≤ true quantile < est + width. (q24/q25 are the exact twins;
     * this is the artifact you keep when the data is gone.) NULLs and
-    * NaNs are excluded (no bucket). */
+    * NaNs are excluded (no bucket). Under a streaming aggregation the
+    * state is at most range/width rows and micro-batching cannot change
+    * the fixpoint, so restart-recovered registers are bit-identical
+    * (RestartRecoverySpec). */
   def histRegisters(df: DataFrame, valueCol: String, width: Double): DataFrame =
     df.select(floor(col(valueCol).cast("double") / width).cast("long").as("bkt"))
       .filter(col("bkt").isNotNull)
@@ -530,8 +536,8 @@ object Sketches {
     * counter cells over a text column's token stream (≤ d·w rows).
     * `sum per cell` is associative/commutative, so the same column
     * expressions run under a streaming aggregation with O(d·w) state —
-    * [[graft.streaming.SketchStream.cmsCellsStream]] is this method on
-    * a `readStream` frame. */
+    * [[graft.streaming.SketchStream.runCmsAvailableNow]] drains this
+    * method over a document stream. */
   def cmsCells(docs: DataFrame, textCol: String): DataFrame = {
     graft.functions.VectorFunctions.register(docs.sparkSession)
     docs
@@ -691,8 +697,9 @@ object Sketches {
     * most #hours·m rows. `max(rho)` per (hour, bucket) is
     * associative/commutative/IDEMPOTENT, so this exact column pipeline
     * also runs under the streaming state manager with O(hours·m)
-    * state — [[graft.streaming.SketchStream.hourlyHllRegistersStream]]
-    * is this method on a `readStream` frame. */
+    * state, and any micro-batch split reaches the same fixpoint —
+    * [[graft.streaming.SketchStream.runSlidingHllAvailableNow]] drains
+    * this method over an event stream. */
   def hourlyHllRegisters(events: DataFrame, ts: String, valueCol: String,
                          p: Int = P2): DataFrame = {
     val m = 1 << p
@@ -762,7 +769,10 @@ object Sketches {
     *
     * Scale shape: r map-side ±1 sums → ONE sketch row through the
     * aggregation, whatever the input size; the key column is the only
-    * column read. */
+    * column read. Under a streaming aggregation the state store holds
+    * that one row forever and any micro-batch split reaches the same
+    * fixpoint; by linearity a standing batch Z row adds component-wise
+    * to a streamed one ([[graft.streaming.SketchStream.runAmsAvailableNow]]). */
   def amsZ(df: DataFrame, key: String, r: Int = AmsR): DataFrame = {
     val sums = (0 until r).map(i => sum(expr(amsSignExpr(key, i))).as(s"z$i"))
     df.agg(sums.head, sums.tail: _*)

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Streaming twin of the e14 hourly-anomaly monitor (engine extension,
   * SURVEY.md §2.9/§7.5): per-(hour, type) event counts maintained
@@ -11,6 +10,11 @@ import org.apache.spark.sql.functions._
   * streaming frame, and the hourly count table IS the bounded state a
   * volume monitor keeps hot anyway.
   *
+  * The shared stages live in [[graft.ops.Events]] (`hourlyCounts`,
+  * `anomalyReadout`); `ts` arrives already µs-normalized from
+  * [[EventStream.readEvents]], so batch and stream run LITERALLY the
+  * same aggregation and read-out code.
+  *
   * Scale: state is O(hours × event types) — the compacted cube, not
   * the events; the z read-out runs on that tiny table, so alerting
   * per micro-batch costs one window over (types × horizon) rows.
@@ -19,29 +23,11 @@ import org.apache.spark.sql.functions._
   * (`AnomalyStreamSpec`).
   */
 object AnomalyStream {
-  /** The shared stages live in [[graft.ops.Events]] (`hourlyCounts`,
-    * `anomalyReadout`); `ts` arrives already µs-normalized from
-    * [[EventStream.readEvents]], so batch and stream run LITERALLY the
-    * same aggregation and read-out code. */
-  def hourlyCounts(events: DataFrame): DataFrame =
-    graft.ops.Events.hourlyCounts(events)
-
-  /** See [[graft.ops.Events.anomalyReadout]]. */
-  def anomalyReadout(hourly: DataFrame): DataFrame =
-    graft.ops.Events.anomalyReadout(hourly)
-
   /** Run the counting stream to completion over an events directory,
-    * returning the final hourly cube from the in-memory sink. */
+    * returning the final hourly cube from the in-memory sink; score it
+    * with [[graft.ops.Events.anomalyReadout]]. */
   def runAvailableNow(spark: SparkSession, dir: String,
-                      sinkTable: String): DataFrame = {
-    val q = hourlyCounts(EventStream.readEvents(spark, dir))
-      .writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .outputMode("complete")
-      .format("memory")
-      .queryName(sinkTable)
-      .start()
-    q.awaitTermination()
-    spark.table(sinkTable)
-  }
+                      sinkTable: String): DataFrame =
+    Drain.toMemory(graft.ops.Events.hourlyCounts(
+      EventStream.readEvents(spark, dir)), "complete", sinkTable)
 }

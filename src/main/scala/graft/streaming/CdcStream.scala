@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Latest surviving row per key, carried across micro-batches. */
 case class CdcState(us: Long, eventId: Long, eventType: String, value: Double)
@@ -57,15 +57,7 @@ object CdcStream {
   /** Run over the static events directory with availableNow, collecting
     * the materialized rows via an in-memory sink. */
   def runAvailableNow(spark: org.apache.spark.sql.SparkSession, sfDir: String,
-                      sinkTable: String): DataFrame = {
-    val q = compact(EventStream.readEvents(spark, sfDir))
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .outputMode("update")
-      .format("memory")
-      .queryName(sinkTable)
-      .start()
-    q.awaitTermination()
-    spark.table(sinkTable)
-  }
+                      sinkTable: String): DataFrame =
+    Drain.toMemory(compact(EventStream.readEvents(spark, sfDir)), "update",
+      sinkTable)
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Streaming document curation (engine extension, SURVEY.md §2.9/§7.5):
   * the batch cleaning operators — quality features, PII redaction, a
@@ -12,7 +11,7 @@ import org.apache.spark.sql.types._
   *  - the curation transforms ([[graft.ops.TextOps.withQuality]],
   *    [[graft.ops.TextOps.withRedaction]]) are stateless codegen'd
   *    projections, so the SAME function composes into a batch job or a
-  *    `readStream` — one code path, no reimplementation, no state store;
+  *    stream — one code path, no reimplementation, no state store;
   *  - the per-language thresholds arrive as a STREAM-STATIC broadcast
   *    join: the static side is planned once and broadcast to every
   *    micro-batch, the standard shape for slowly-changing reference
@@ -22,13 +21,6 @@ import org.apache.spark.sql.types._
   * directory.
   */
 object CurateStream {
-  val rawSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("text", StringType),
-    StructField("lang", StringType),
-    StructField("source", StringType),
-    StructField("n_chars", LongType)))
-
   /** Stateless curation pass; identical logic batch & stream.
     * @param thresholds static `(lang, min_words)` reference frame */
   def curated(docs: DataFrame, thresholds: DataFrame): DataFrame =
@@ -41,20 +33,7 @@ object CurateStream {
 
   /** Run to completion over the current directory contents. */
   def runAvailableNow(spark: SparkSession, dir: String,
-                      thresholds: DataFrame, sinkTable: String): DataFrame = {
-    val q = curated(
-        spark.readStream
-          .schema(rawSchema)
-          .option("pathGlobFilter", "documents.parquet")
-          .parquet(dir),
-        thresholds)
-      .writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .outputMode("append")
-      .format("memory")
-      .queryName(sinkTable)
-      .start()
-    q.awaitTermination()
-    spark.table(sinkTable)
-  }
+                      thresholds: DataFrame, sinkTable: String): DataFrame =
+    Drain.toMemory(curated(Drain.read(spark, dir, Drain.DocumentsSchema,
+      "documents.parquet"), thresholds), "append", sinkTable)
 }

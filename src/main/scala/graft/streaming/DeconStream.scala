@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, LongType, StructField, StructType}
 
 /** Streaming SEMANTIC DECONTAMINATION (d27) — d25's shape at the
   * stream edge, closing the decontamination family's last seam: in a
@@ -29,13 +28,6 @@ import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, LongType, 
   * vectors against the broadcast benchmark, no shuffle of corpus
   * vectors, no within-corpus pairs. */
 object DeconStream {
-  /** The harness embeddings schema, declared explicitly — streaming
-    * reads never infer. */
-  val rawSchema: StructType = StructType(Seq(
-    StructField("vec_id", LongType),
-    StructField("embedding", ArrayType(FloatType)),
-    StructField("label", IntegerType)))
-
   /** Drain the directory as a delta stream of corpus vectors, scoring
     * each micro-batch against the standing `bench` frame and appending
     * flagged rows to `outPath` (batchId-keyed — read back with
@@ -52,8 +44,9 @@ object DeconStream {
                         org.apache.spark.sql.functions.lit(true),
                       checkpointDir: Option[String] = None,
                       glob: String = "embeddings.parquet"): Unit =
-    Drain.availableNow(spark, dir, rawSchema, glob, deltaFilter,
-      checkpointDir, sinks = Seq(outPath)) { (batch, id) =>
+    Drain.availableNow(Drain.read(spark, dir, Drain.EmbeddingsSchema, glob)
+      .filter(deltaFilter), "append", checkpointDir, Seq(outPath)) {
+      (batch, id) =>
       Drain.appendBatch(
         graft.ops.Dedup.semanticDecontaminate(batch, bench,
           "vec_id", "embedding", threshold),

@@ -32,15 +32,7 @@ object DedupStream {
     * mode: dedup is row-wise (no windows to hold open), so rows emit as
     * soon as they are first seen. */
   def runAvailableNow(spark: org.apache.spark.sql.SparkSession, dir: String,
-                      sinkTable: String): DataFrame = {
-    val q = dedupped(EventStream.readEvents(spark, dir, glob = "*.parquet"))
-      .writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .outputMode("append")
-      .format("memory")
-      .queryName(sinkTable)
-      .start()
-    q.awaitTermination()
-    spark.table(sinkTable)
-  }
+                      sinkTable: String): DataFrame =
+    Drain.toMemory(dedupped(EventStream.readEvents(spark, dir,
+      glob = "*.parquet")), "append", sinkTable)
 }

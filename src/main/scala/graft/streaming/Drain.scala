@@ -1,15 +1,16 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types._
 
-/** The ONE availableNow file-drain the frozen-artifact stream runners
-  * share (IndexStream, MediaStream, QualityStream grew three copies of
-  * the same reader/checkpoint/foreachBatch scaffolding — three places
-  * for the exactly-once wiring to drift apart): read the directory as
-  * a delta stream under an explicit schema (streaming reads never
-  * infer), filter, and hand each micro-batch — WITH its batchId — to
-  * `body` with exact batch semantics.
+/** The ONE copy of the stream plumbing every `graft.streaming` runner
+  * shares: the documents and embeddings schemas, the file-stream
+  * reader ([[read]]), the availableNow memory-sink runner ([[toMemory]]) and
+  * the availableNow checkpointed `foreachBatch` runner
+  * ([[availableNow]]) with its idempotent sink ([[appendBatch]],
+  * [[readSink]], [[guardSinks]]). Each stream keeps only its transform,
+  * its output mode and its sink.
   *
   * Exactly-once across restarts needs BOTH halves:
   *  - `checkpointDir` makes the SOURCE exact: a re-run replays only
@@ -26,6 +27,46 @@ import org.apache.spark.sql.types.StructType
   *    claims restart recovery appends through it and reads back
   *    through [[readSink]]. */
 object Drain {
+  /** The harness documents schema, declared explicitly — streaming
+    * reads never infer. */
+  val DocumentsSchema: StructType = StructType(Seq(
+    StructField("doc_id", LongType),
+    StructField("text", StringType),
+    StructField("lang", StringType),
+    StructField("source", StringType),
+    StructField("n_chars", LongType)))
+
+  /** The harness embeddings schema, declared explicitly — streaming
+    * reads never infer. */
+  val EmbeddingsSchema: StructType = StructType(Seq(
+    StructField("vec_id", LongType),
+    StructField("embedding", ArrayType(FloatType)),
+    StructField("label", IntegerType)))
+
+  /** Open the parquet files under `dir` matching `glob` as a stream
+    * under an explicit `schema`. FileStreamSource wants a directory, so
+    * a single file streams its directory with a glob filter — which is
+    * also the production shape: new files landing in the directory are
+    * picked up incrementally. */
+  def read(spark: SparkSession, dir: String, schema: StructType,
+           glob: String): DataFrame =
+    spark.readStream.schema(schema).option("pathGlobFilter", glob)
+      .parquet(dir)
+
+  /** Run `stream` to completion over what has arrived (availableNow)
+    * into the in-memory table `sinkTable`, and return that table. */
+  def toMemory(stream: Dataset[_], outputMode: String,
+               sinkTable: String): DataFrame = {
+    stream.writeStream
+      .trigger(Trigger.AvailableNow())
+      .outputMode(outputMode)
+      .format("memory")
+      .queryName(sinkTable)
+      .start()
+      .awaitTermination()
+    stream.sparkSession.table(sinkTable)
+  }
+
   /** Guard standing [[appendBatch]] sinks against CHECKPOINT-LINEAGE
     * MIXUPS: batchIds are unique only PER CHECKPOINT, so a drain under
     * a NEW or recreated checkpoint restarts at batch 0 and its
@@ -69,25 +110,19 @@ object Drain {
     }
   }
 
-  def availableNow(spark: SparkSession, dir: String, schema: StructType,
-                   glob: String, deltaFilter: Column,
-                   checkpointDir: Option[String],
-                   sinks: Seq[String] = Nil)
+  /** Run `stream` to completion over what has arrived (availableNow),
+    * handing each micro-batch — WITH its batchId — to `body` with exact
+    * batch semantics, after [[guardSinks]] has checked `sinks`. */
+  def availableNow(stream: DataFrame, outputMode: String,
+                   checkpointDir: Option[String], sinks: Seq[String])
                   (body: (DataFrame, Long) => Unit): Unit = {
     guardSinks(sinks, checkpointDir)
-    val reader = spark.readStream
-      .schema(schema)
-      .option("pathGlobFilter", glob)
-      .parquet(dir)
-      .filter(deltaFilter)
-    val writer0 = reader.writeStream
-    val writer = checkpointDir.fold(writer0)(cp =>
-      writer0.option("checkpointLocation", cp))
-    val q = writer
+    val writer = stream.writeStream.outputMode(outputMode)
+    checkpointDir.fold(writer)(cp => writer.option("checkpointLocation", cp))
       .foreachBatch { (batch: DataFrame, id: Long) => body(batch, id) }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination()
+      .awaitTermination()
   }
 
   /** IDEMPOTENT per-batch parquet append: batch `batchId`'s rows write

@@ -21,16 +21,9 @@ import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
   * ≡ the one-pass batch v13 on the same split. */
 object DriftStream {
   /** Minimal metric-stream schema — the monitor needs only the value
-    * column; declared explicitly (streaming reads never infer). */
+    * column; read it with [[Drain.read]]. */
   val rawSchema: StructType = StructType(Seq(
     StructField("value", DoubleType)))
-
-  def readValues(spark: SparkSession, dir: String,
-                 glob: String = "*.parquet"): DataFrame =
-    spark.readStream
-      .schema(rawSchema)
-      .option("pathGlobFilter", glob)
-      .parquet(dir)
 
   /** Cumulative current-population bin counts `(bin, n)` as a
     * streaming aggregation — complete-mode output is the monitor's
@@ -49,25 +42,19 @@ object DriftStream {
     * every consumer. Complete-mode `foreachBatch` hands each trigger
     * the full O(bins) state snapshot, which feeds
     * [[graft.ops.Profile.driftPsiVerdictFrom]] (itself the oracled sum
-    * of the per-bin v13 readout); verdict rows append to `outPath`, so
-    * the table is the monitor's alert history. State is O(bins) —
-    * never O(rows) — and survives restarts via `checkpointDir`
-    * (pinned by RestartRecoverySpec's PSI test). */
+    * of the per-bin v13 readout); verdict rows append to `outPath`
+    * (batchId-keyed — read back with [[Drain.readSink]]), so the table
+    * is the monitor's alert history. State is O(bins) — never O(rows)
+    * — and survives restarts via `checkpointDir` (pinned by
+    * RestartRecoverySpec's PSI test); a replayed trigger overwrites its
+    * own alert row instead of appending a second one (DriftStreamSpec). */
   def runAvailableNowVerdict(spark: SparkSession, dir: String,
                              refCounts: DataFrame, outPath: String,
                              checkpointDir: Option[String] = None,
-                             glob: String = "*.parquet"): Unit = {
-    val writer0 = binCountsStream(readValues(spark, dir, glob)).writeStream
-    val writer = checkpointDir.fold(writer0)(cp =>
-      writer0.option("checkpointLocation", cp))
-    val q = writer
-      .outputMode("complete")
-      .foreachBatch { (snapshot: DataFrame, _: Long) =>
-        graft.ops.Profile.driftPsiVerdictFrom(refCounts, snapshot)
-          .write.mode("append").parquet(outPath)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                             glob: String = "*.parquet"): Unit =
+    Drain.availableNow(binCountsStream(Drain.read(spark, dir, rawSchema, glob)),
+      "complete", checkpointDir, Seq(outPath)) { (snapshot, id) =>
+      Drain.appendBatch(
+        graft.ops.Profile.driftPsiVerdictFrom(refCounts, snapshot), outPath, id)
+    }
 }

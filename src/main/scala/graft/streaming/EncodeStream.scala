@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, LongType, StructField, StructType}
 
 /** Streaming PQ encoding (engine extension, SURVEY.md §2.9/§7.5): the
   * k18 frozen-codebook encode at the stream edge — new vectors arrive,
@@ -21,13 +20,6 @@ import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, LongType, 
   * recall readout says drift has accumulated.
   */
 object EncodeStream {
-  /** The harness embeddings schema, declared explicitly — streaming
-    * reads never infer. */
-  val rawSchema: StructType = StructType(Seq(
-    StructField("vec_id", LongType),
-    StructField("embedding", ArrayType(FloatType)),
-    StructField("label", IntegerType)))
-
   /** Drain the current directory contents as a delta stream, encoding
     * each micro-batch against `codebooks` and appending the code
     * tuples to `outPath` (batchId-keyed — read back with
@@ -43,8 +35,9 @@ object EncodeStream {
                       deltaFilter: org.apache.spark.sql.Column,
                       checkpointDir: Option[String] = None,
                       glob: String = "embeddings.parquet"): Unit =
-    Drain.availableNow(spark, dir, rawSchema, glob, deltaFilter,
-      checkpointDir, sinks = Seq(outPath)) { (batch, id) =>
+    Drain.availableNow(Drain.read(spark, dir, Drain.EmbeddingsSchema, glob)
+      .filter(deltaFilter), "append", checkpointDir, Seq(outPath)) {
+      (batch, id) =>
       Drain.appendBatch(
         graft.ops.Similarity
           .pqEncodeWith(batch, "vec_id", "embedding", codebooks),

@@ -57,19 +57,13 @@ object EventStream {
       .select(col("w.start").cast("long").as("hour_epoch"),
         col("event_type"), col("n_events"))
 
-  /** Open the events parquet as a stream with `ts` normalized to a
-    * µs TimestampType — the contract every transform in `streaming/`
-    * expects. The testdata ships a single file, but FileStreamSource
-    * wants a directory — stream the sf dir with a glob filter (which is
-    * also the production shape: new event files landing in a directory
-    * are picked up incrementally). */
+  /** Open the events parquet as a stream ([[Drain.read]]) with `ts`
+    * normalized to a µs TimestampType — the contract every transform in
+    * `streaming/` expects. */
   def readEvents(spark: SparkSession, sfDir: String,
                  glob: String = "events.parquet"): DataFrame = {
     val div = rawTsDivisor(spark, sfDir, glob)
-    spark.readStream
-      .schema(rawSchema)
-      .option("pathGlobFilter", glob)
-      .parquet(sfDir)
+    Drain.read(spark, sfDir, rawSchema, glob)
       .withColumn("ts", timestamp_micros(expr(s"ts div $div")))
   }
 
@@ -92,33 +86,17 @@ object EventStream {
 
   /** [[sessionAggs]] drained availableNow into a memory sink. */
   def runSessionsAvailableNow(spark: SparkSession, sfDir: String,
-                              sinkTable: String): DataFrame = {
-    val q = sessionAggs(readEvents(spark, sfDir))
-      .writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .outputMode("complete")
-      .format("memory")
-      .queryName(sinkTable)
-      .start()
-    q.awaitTermination()
-    spark.table(sinkTable)
-  }
+                              sinkTable: String): DataFrame =
+    Drain.toMemory(sessionAggs(readEvents(spark, sfDir)), "complete",
+      sinkTable)
 
   /** Run to completion over the current directory contents
     * (availableNow), collecting results via an in-memory sink table. */
   def runAvailableNow(spark: SparkSession, sfDir: String,
-                      sinkTable: String): DataFrame = {
-    val q = hourlyCounts(readEvents(spark, sfDir))
-      .writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+                      sinkTable: String): DataFrame =
+    Drain.toMemory(hourlyCounts(readEvents(spark, sfDir)),
       // complete, not append: with a static input processed availableNow,
       // append-mode would hold every window open until a later batch's
       // watermark closes it and emit nothing.
-      .outputMode("complete")
-      .format("memory")
-      .queryName(sinkTable)
-      .start()
-    q.awaitTermination()
-    spark.table(sinkTable)
-  }
+      "complete", sinkTable)
 }

@@ -30,8 +30,6 @@ import org.apache.spark.sql.functions._
   * as the batch operator.
   */
 object IncrementalDedupStream {
-  val rawSchema: org.apache.spark.sql.types.StructType = CurateStream.rawSchema
-
   /** Drain the current directory contents as a delta stream (odd doc
     * ids in the harness wiring), appending near-dup pairs vs `corpus`
     * to `outPath` (batchId-keyed — read back with [[Drain.readSink]]).
@@ -43,8 +41,9 @@ object IncrementalDedupStream {
                       outPath: String, threshold: Double = 0.6,
                       deltaFilter: org.apache.spark.sql.Column,
                       checkpointDir: Option[String] = None): Unit =
-    Drain.availableNow(spark, dir, rawSchema, "documents.parquet",
-      deltaFilter, checkpointDir, sinks = Seq(outPath)) { (batch, id) =>
+    Drain.availableNow(Drain.read(spark, dir, Drain.DocumentsSchema,
+      "documents.parquet").filter(deltaFilter), "append", checkpointDir,
+      Seq(outPath)) { (batch, id) =>
       Drain.appendBatch(
         graft.ops.Dedup
           .minhashVerifiedAgainst(corpus, batch, "doc_id", "text", threshold),
@@ -69,8 +68,9 @@ object IncrementalDedupStream {
                              n: Int = 3): Unit = {
     val (_, bands) = graft.ops.Dedup.minhashLoadIndex(spark, indexDir, n)
     val corpusBands = bands.withColumnRenamed("doc_id", "corpus_id")
-    Drain.availableNow(spark, dir, rawSchema, "documents.parquet",
-      deltaFilter, checkpointDir, sinks = Seq(outPath)) { (batch, id) =>
+    Drain.availableNow(Drain.read(spark, dir, Drain.DocumentsSchema,
+      "documents.parquet").filter(deltaFilter), "append", checkpointDir,
+      Seq(outPath)) { (batch, id) =>
       Drain.appendBatch(
         graft.ops.Dedup
           .minhashServeDelta(corpus, corpusBands, batch, "doc_id", "text",
@@ -108,8 +108,9 @@ object IncrementalDedupStream {
       .withColumnRenamed("doc_id", "corpus_id")
     val bands = spark.read.parquet(s"$indexDir/bands")
       .withColumnRenamed("doc_id", "corpus_id")
-    Drain.availableNow(spark, dir, rawSchema, glob,
-      deltaFilter, checkpointDir, sinks = Seq(outPath)) { (batch, id) =>
+    Drain.availableNow(Drain.read(spark, dir, Drain.DocumentsSchema, glob)
+      .filter(deltaFilter), "append", checkpointDir, Seq(outPath)) {
+      (batch, id) =>
       Drain.appendBatch(
         graft.ops.Dedup.minhashServeDeltaFrom(hashes, bands,
           batch.select(col("doc_id"), concat_ws(" ",

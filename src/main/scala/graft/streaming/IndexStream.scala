@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.ops.Search
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Streaming search-index maintenance (engine extension, SURVEY.md
   * §2.9/§7.5): the r06/r07 seam at the stream edge — documents arrive,
@@ -39,15 +38,6 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * reads the store recursively so flat publisher segments and
   * streamed batch subdirs merge identically. */
 object IndexStream {
-  /** The harness documents schema, declared explicitly — streaming
-    * reads never infer. */
-  val rawSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("text", StringType),
-    StructField("lang", StringType),
-    StructField("source", StringType),
-    StructField("n_chars", LongType)))
-
   /** Append one micro-batch's three index tables as a segment — the
     * idempotent sink both drains share: batchId-keyed subdirs under
     * each subtable, overwrite on replay ([[Drain.appendBatch]]). */
@@ -216,9 +206,9 @@ object IndexStream {
           "old-definition segments as current; republish the store.")
     }
     val unstamped = new java.util.concurrent.atomic.AtomicBoolean(false)
-    Drain.availableNow(spark, dir, rawSchema, glob,
-      deltaFilter, checkpointDir,
-      sinks = Seq("postings", "lexicon", "stats").map(t => s"$segDir/$t")) {
+    Drain.availableNow(Drain.read(spark, dir, Drain.DocumentsSchema, glob)
+      .filter(deltaFilter), "append", checkpointDir,
+      Seq("postings", "lexicon", "stats").map(t => s"$segDir/$t")) {
       (batch, id) =>
       if (unstamped.compareAndSet(false, true)) {
         // pending marker FIRST, then the unstamp: a crash between the

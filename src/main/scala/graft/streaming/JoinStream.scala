@@ -27,9 +27,6 @@ import org.apache.spark.sql.functions._
   * stream≡batch pair in `streaming/`.
   */
 object JoinStream {
-  /** Raw streaming-read schema (see [[EventStream.rawSchema]]). */
-  val rawSchema: org.apache.spark.sql.types.StructType = EventStream.rawSchema
-
   /** The attribution join; identical logic batch & stream. Inputs are
     * event frames with a µs-TimestampType `ts` (see
     * [[EventStream.readEvents]]); output matches e09's schema:
@@ -60,14 +57,7 @@ object JoinStream {
     def side(eventType: String): DataFrame =
       EventStream.readEvents(spark, dir)
         .filter(col("event_type") === eventType)
-    val q = attributed(side("view"), side("purchase"))
-      .writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .outputMode("append")
-      .format("memory")
-      .queryName(sinkTable)
-      .start()
-    q.awaitTermination()
-    spark.table(sinkTable)
+    Drain.toMemory(attributed(side("view"), side("purchase")), "append",
+      sinkTable)
   }
 }

@@ -38,18 +38,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * recovery is exact even for a crash INSIDE a batch, the same
   * contract as [[IndexStream]]'s segment store. */
 object MediaStream {
-  /** The harness documents schema — streaming reads never infer. */
-  val rawSchema: org.apache.spark.sql.types.StructType =
-    CurateStream.rawSchema
-
-  private def drain(spark: SparkSession, dir: String,
-                    deltaFilter: org.apache.spark.sql.Column,
-                    checkpointDir: Option[String], glob: String,
-                    sink: String)
-                   (body: (DataFrame, Long) => Unit): Unit =
-    Drain.availableNow(spark, dir, rawSchema, glob,
-      deltaFilter, checkpointDir, sinks = Seq(sink))(body)
-
   /** Drain the current directory contents as a delta stream,
     * fingerprinting each micro-batch and appending its signature rows
     * to `storePath` as parquet — the stream-edge writer of the m10
@@ -101,7 +89,8 @@ object MediaStream {
     // IndexStream discipline): a drain that fails before any batch —
     // bad source dir, bad glob — leaves a healthy store stamped
     val unstamped = new java.util.concurrent.atomic.AtomicBoolean(false)
-    drain(spark, dir, deltaFilter, checkpointDir, glob, storePath) {
+    Drain.availableNow(Drain.read(spark, dir, Drain.DocumentsSchema, glob)
+      .filter(deltaFilter), "append", checkpointDir, Seq(storePath)) {
       (batch, id) =>
       if (unstamped.compareAndSet(false, true)) {
         graft.ops.IndexMeta.notePending(storePath,
@@ -133,7 +122,8 @@ object MediaStream {
                              checkpointDir: Option[String] = None,
                              glob: String = "documents.parquet"): Unit = {
     val store = graft.ops.Multimodal.frameLoadStore(spark, indexDir)
-    drain(spark, dir, deltaFilter, checkpointDir, glob, outPath) {
+    Drain.availableNow(Drain.read(spark, dir, Drain.DocumentsSchema, glob)
+      .filter(deltaFilter), "append", checkpointDir, Seq(outPath)) {
       (batch, id) =>
       Drain.appendBatch(
         graft.ops.Multimodal

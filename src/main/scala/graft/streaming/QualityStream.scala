@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Streaming quality gating (engine extension, SURVEY.md §2.9/§7.5):
   * the t22 frozen-LM score-and-gate at the stream edge — documents
@@ -24,15 +23,6 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * build), publish, then gate every arriving shard online; retraining
   * happens only when the published model is re-fit nightly. */
 object QualityStream {
-  /** The harness documents schema, declared explicitly — streaming
-    * reads never infer. */
-  val rawSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("text", StringType),
-    StructField("lang", StringType),
-    StructField("source", StringType),
-    StructField("n_chars", LongType)))
-
   /** Drain the current directory contents as a delta stream, scoring
     * each micro-batch against the frozen `(uniTop, biTop)` model and
     * appending the gated verdicts to `outPath` (batchId-keyed — read
@@ -48,8 +38,9 @@ object QualityStream {
                       deltaFilter: org.apache.spark.sql.Column,
                       checkpointDir: Option[String] = None,
                       glob: String = "documents.parquet"): Unit =
-    Drain.availableNow(spark, dir, rawSchema, glob, deltaFilter,
-      checkpointDir, sinks = Seq(outPath)) { (batch, id) =>
+    Drain.availableNow(Drain.read(spark, dir, Drain.DocumentsSchema, glob)
+      .filter(deltaFilter), "append", checkpointDir, Seq(outPath)) {
+      (batch, id) =>
       Drain.appendBatch(
         graft.ops.TextOps
           .lmScoreWith(batch, "doc_id", "text", uniTop, biTop)

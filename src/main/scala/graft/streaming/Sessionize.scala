@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Per-user state carried across micro-batches: timestamp of the last
   * event seen and running session/event counts. */
@@ -58,17 +58,10 @@ object Sessionize {
     * the final per-user rows via an in-memory sink. */
   def runAvailableNow(spark: org.apache.spark.sql.SparkSession, sfDir: String,
                       sinkTable: String): DataFrame = {
-    val q = sessionize(EventStream.readEvents(spark, sfDir))
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .outputMode("update")
-      .format("memory")
-      .queryName(sinkTable)
-      .start()
-    q.awaitTermination()
     // update-mode memory sink appends one row per user per batch — keep
     // the final (highest-event-count) row per user.
-    spark.table(sinkTable)
+    Drain.toMemory(sessionize(EventStream.readEvents(spark, sfDir)),
+        "update", sinkTable)
       .groupBy("user_id")
       .agg(max(struct(col("n_events"), col("n_sessions"))).as("m"))
       .select(col("user_id"), col("m.n_sessions").as("n_sessions"),

@@ -3,141 +3,53 @@ package graft.streaming
 import graft.ops.Sketches
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Streaming cardinality monitoring (engine extension, SURVEY.md
-  * §2.9/§7.5): the portable HLL of [[graft.ops.Sketches]] maintained
-  * incrementally over a stream.
+/** Streaming sketch monitoring (engine extension, SURVEY.md
+  * §2.9/§7.5): the portable sketches of [[graft.ops.Sketches]] —
+  * cardinality (HLL), frequency (CMS), sliding cardinality (per-hour
+  * HLL) and join size (AMS) — maintained incrementally over a stream.
   *
-  * Works because the register table IS a streaming-friendly aggregate:
-  * `max(rho) per bucket` is associative/commutative/idempotent, so the
-  * state store holds at most m = 64 rows forever — O(1) state at any
-  * stream rate — and every micro-batch folds in mergeably. The same
-  * [[graft.ops.Sketches.hllRegisters]] column expressions run
-  * unchanged; only the groupBy executes under the streaming state
-  * manager. `SketchStreamSpec` asserts the availableNow registers (and
-  * therefore the estimate) are bit-identical to the batch sketch of
-  * the same input.
+  * Works because each register table IS a streaming-friendly
+  * aggregate: `max` or `sum` per cell is associative and commutative,
+  * so the state store stays register-sized forever and every
+  * micro-batch folds in mergeably. The same [[graft.ops.Sketches]]
+  * column expressions run unchanged; only the groupBy executes under
+  * the streaming state manager, in complete mode (the register table
+  * is the whole bounded state). `SketchStreamSpec` asserts the
+  * availableNow registers (and therefore the read-outs) are
+  * bit-identical to the batch sketch of the same input.
   */
 object SketchStream {
-  /** Incremental register table of a streaming string column — at most
-    * [[graft.ops.Sketches.M]] rows, complete-mode output. */
-  def hllRegistersStream(df: DataFrame, valueCol: String): DataFrame =
-    Sketches.hllRegisters(df, valueCol)
-
-  /** Incremental Count-Min cell table of a streaming text column —
-    * at most d·w rows of state, complete-mode output; per-cell `sum`
-    * is associative/commutative, so micro-batching cannot change the
-    * fixpoint. Probe with [[graft.ops.Sketches.cmsProbe]]. */
-  def cmsCellsStream(df: DataFrame, textCol: String): DataFrame =
-    Sketches.cmsCells(df, textCol)
+  /** Run the HLL stream to completion over a documents directory,
+    * returning the final register table from the in-memory sink. */
+  def runAvailableNow(spark: SparkSession, dir: String,
+                      sinkTable: String): DataFrame =
+    Drain.toMemory(Sketches.hllRegisters(Drain.read(spark, dir,
+      Drain.DocumentsSchema, "documents.parquet"), "doc_id"),
+      "complete", sinkTable)
 
   /** Run the CMS stream to completion over a documents directory,
-    * returning the final cell table from the in-memory sink. */
+    * returning the final cell table from the in-memory sink; probe it
+    * with [[graft.ops.Sketches.cmsProbe]]. */
   def runCmsAvailableNow(spark: SparkSession, dir: String,
-                         sinkTable: String): DataFrame = {
-    val q = cmsCellsStream(
-        spark.readStream
-          .schema(CurateStream.rawSchema)
-          .option("pathGlobFilter", "documents.parquet")
-          .parquet(dir),
-        "text")
-      .writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .outputMode("complete")
-      .format("memory")
-      .queryName(sinkTable)
-      .start()
-    q.awaitTermination()
-    spark.table(sinkTable)
-  }
-
-  /** Incremental HISTOGRAM register table of a streaming numeric
-    * column — at most range/width rows of state, complete-mode output;
-    * per-bucket `count` is a plain sum, so micro-batching cannot
-    * change the fixpoint and restart-recovered registers are
-    * bit-identical (RestartRecoverySpec). Read quantiles out of the
-    * sink snapshot with [[graft.ops.Sketches.histQuantiles]] — the
-    * same owner/reader split as the HLL and CMS streams, completing
-    * the sketch-stream family (cardinality, frequency, sliding
-    * cardinality, quantiles). */
-  def histRegistersStream(df: DataFrame, valueCol: String,
-                          width: Double): DataFrame =
-    Sketches.histRegisters(df, valueCol, width)
-
-  /** Incremental PER-HOUR register table of a streaming events frame
-    * (the x12 state): `max(rho)` per (hour, bucket) is associative,
-    * commutative, and IDEMPOTENT, so state is O(hours·m) — bounded by
-    * the time range, not the event rate — and any micro-batch split
-    * reaches the same fixpoint. The trailing-window merge + readout
-    * ([[graft.ops.Sketches.hllSlidingReadout]]) runs downstream of the
-    * sink: the registers are the stream's state contract, the readout
-    * is a register-sized batch step over them — the standard
-    * sketch-owner/reader split, here along the time axis. */
-  def hourlyHllRegistersStream(events: DataFrame, ts: String,
-                               valueCol: String): DataFrame =
-    Sketches.hourlyHllRegisters(events, ts, valueCol)
+                         sinkTable: String): DataFrame =
+    Drain.toMemory(Sketches.cmsCells(Drain.read(spark, dir,
+      Drain.DocumentsSchema, "documents.parquet"), "text"),
+      "complete", sinkTable)
 
   /** Run the sliding-HLL register stream to completion over an events
-    * directory and return the x12 readout over the sink's registers. */
+    * directory and return the x12 readout over the sink's registers:
+    * the registers are the stream's state contract, the readout is a
+    * register-sized batch step over them. */
   def runSlidingHllAvailableNow(spark: SparkSession, dir: String,
-                                sinkTable: String): DataFrame = {
-    val q = hourlyHllRegistersStream(
-        EventStream.readEvents(spark, dir), "ts", "user_id")
-      .writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .outputMode("complete")
-      .format("memory")
-      .queryName(sinkTable)
-      .start()
-    q.awaitTermination()
-    Sketches.hllSlidingReadout(spark.table(sinkTable))
-  }
-
-  /** Incremental AMS sketch row of a streaming integer key (the x13
-    * state): each `z_i` is a plain ±1 sum — associative and
-    * commutative, so the state store holds ONE row of r atoms forever
-    * and any micro-batch split reaches the same fixpoint. The sink
-    * snapshot prices self-join/skew ([[graft.ops.Sketches.amsF2]]'s
-    * readout arithmetic) or equi-join size against any other sketch
-    * ([[graft.ops.Sketches.amsJoinSize]]) — the owner/reader split
-    * again, and because the sketch is LINEAR, a standing batch Z row
-    * adds component-wise to this streaming one: the incremental
-    * corpus-plus-delta story needs no recompute at all. */
-  def amsZStream(df: DataFrame, key: String): DataFrame =
-    Sketches.amsZ(df, key)
+                                sinkTable: String): DataFrame =
+    Sketches.hllSlidingReadout(Drain.toMemory(Sketches.hourlyHllRegisters(
+      EventStream.readEvents(spark, dir), "ts", "user_id"),
+      "complete", sinkTable))
 
   /** Run the AMS stream to completion over an events directory,
     * returning the final sketch row from the in-memory sink. */
   def runAmsAvailableNow(spark: SparkSession, dir: String,
-                         sinkTable: String): DataFrame = {
-    val q = amsZStream(EventStream.readEvents(spark, dir), "user_id")
-      .writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .outputMode("complete")
-      .format("memory")
-      .queryName(sinkTable)
-      .start()
-    q.awaitTermination()
-    spark.table(sinkTable)
-  }
-
-  /** Run to completion over a documents directory, returning the final
-    * register table from the in-memory sink. */
-  def runAvailableNow(spark: SparkSession, dir: String,
-                      sinkTable: String): DataFrame = {
-    val q = hllRegistersStream(
-        spark.readStream
-          .schema(CurateStream.rawSchema)
-          .option("pathGlobFilter", "documents.parquet")
-          .parquet(dir),
-        "doc_id")
-      .writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      // complete mode: the register table is the whole (bounded) state
-      .outputMode("complete")
-      .format("memory")
-      .queryName(sinkTable)
-      .start()
-    q.awaitTermination()
-    spark.table(sinkTable)
-  }
+                         sinkTable: String): DataFrame =
+    Drain.toMemory(Sketches.amsZ(EventStream.readEvents(spark, dir),
+      "user_id"), "complete", sinkTable)
 }

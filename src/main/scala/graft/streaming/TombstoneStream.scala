@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, SparkSession}
 
 /** Streaming TOMBSTONE PROPAGATION (r16) — deletes as a STREAM, the
   * shape they actually arrive in (a takedown feed, an opt-out queue,
@@ -33,22 +33,20 @@ object TombstoneStream {
     * standing tombstone set at `setPath` — one narrow batch subdir per
     * micro-batch. Exactly-once across restarts requires
     * `checkpointDir` (the [[Drain]] contract); serves tolerate
-    * duplicate ids regardless (they distinct the set). */
+    * duplicate ids regardless (they distinct the set). Read the
+    * standing set back with [[Drain.readSink]] and feed it to any
+    * tombstone serve ([[graft.ops.Search.bm25QueryIndexTombstoned]]
+    * and siblings). */
   def runAvailableNow(spark: SparkSession, dir: String,
                       schema: org.apache.spark.sql.types.StructType,
                       idCol: String, setPath: String,
                       deltaFilter: Column,
                       checkpointDir: Option[String] = None,
                       glob: String = "documents.parquet"): Unit =
-    Drain.availableNow(spark, dir, schema, glob, deltaFilter,
-      checkpointDir, sinks = Seq(setPath)) { (batch, id) =>
+    Drain.availableNow(Drain.read(spark, dir, schema, glob)
+      .filter(deltaFilter), "append", checkpointDir, Seq(setPath)) {
+      (batch, id) =>
       Drain.appendBatch(
         batch.select(org.apache.spark.sql.functions.col(idCol)), setPath, id)
     }
-
-  /** The standing tombstone set accumulated so far — feed it to any
-    * tombstone serve ([[graft.ops.Search.bm25QueryIndexTombstoned]]
-    * and siblings). */
-  def loadSet(spark: SparkSession, setPath: String): DataFrame =
-    Drain.readSink(spark, setPath)
 }

@@ -151,19 +151,11 @@ class OpsSpec extends AnyFunSuite {
     def asSet(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val viaDriver = asSet(Clusters.connectedComponents(edges, "a", "b"))
-    val prev = spark.conf.getOption("graft.cc.maxDriverEdges")
-    spark.conf.set("graft.cc.maxDriverEdges", "0") // force the fixpoint
-    try {
-      val viaFixpoint = asSet(Clusters.connectedComponents(edges, "a", "b"))
-      assert(viaDriver == viaFixpoint,
-        s"driver-path labels diverge: onlyDriver=${(viaDriver -- viaFixpoint).take(3)} " +
-          s"onlyFixpoint=${(viaFixpoint -- viaDriver).take(3)}")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("graft.cc.maxDriverEdges", v)
-        case None => spark.conf.unset("graft.cc.maxDriverEdges")
-      }
-    }
+    // gate 0 forces the fixpoint
+    val viaFixpoint = asSet(Clusters.connectedComponents(edges, "a", "b", 0L))
+    assert(viaDriver == viaFixpoint,
+      s"driver-path labels diverge: onlyDriver=${(viaDriver -- viaFixpoint).take(3)} " +
+        s"onlyFixpoint=${(viaFixpoint -- viaDriver).take(3)}")
   }
 
   test("c01 connected components: chain graph, clique merge, and union-find cross-check") {

@@ -14,7 +14,7 @@ class AnomalyStreamSpec extends AnyFunSuite {
 
   test("availableNow streaming counts + z read-out equals batch e14") {
     val streamed = AnomalyStream.runAvailableNow(spark, sf, "anomaly_stream_sink")
-    val scoredStream = AnomalyStream.anomalyReadout(streamed).collect()
+    val scoredStream = graft.ops.Events.anomalyReadout(streamed).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
       .toSet
     val batch = graft.SparkEntry.queries("e14_hourly_anomaly")(spark, sf)

@@ -21,7 +21,7 @@ class CurateStreamSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getString(2), r.getLong(3))).toSet
 
     val batch = CurateStream.curated(
-        spark.read.schema(CurateStream.rawSchema).parquet(s"$sf/documents.parquet"),
+        spark.read.schema(Drain.DocumentsSchema).parquet(s"$sf/documents.parquet"),
         thresholds)
       .collect().map(r => (r.getLong(0), r.getString(2), r.getLong(3))).toSet
 

@@ -47,7 +47,7 @@ class DrainGuardSpec extends AnyFunSuite {
     val setDir = Files.createTempDirectory("graft_dg_set").toString + "/set"
     stage(docs.filter(col("doc_id") % 5 === 2), watch, "del0")
     TombstoneStream.runAvailableNow(spark, watch.toString,
-      IndexStream.rawSchema, "doc_id", setDir,
+      Drain.DocumentsSchema, "doc_id", setDir,
       deltaFilter = lit(true), checkpointDir = Some(ckptA),
       glob = "*.parquet")
     val n0 = Drain.readSink(spark, setDir).count()
@@ -57,7 +57,7 @@ class DrainGuardSpec extends AnyFunSuite {
     val ckptB = Files.createTempDirectory("graft_dg_ckB").toString
     val eFresh = intercept[IllegalStateException] {
       TombstoneStream.runAvailableNow(spark, watch.toString,
-        IndexStream.rawSchema, "doc_id", setDir,
+        Drain.DocumentsSchema, "doc_id", setDir,
         deltaFilter = lit(true), checkpointDir = Some(ckptB),
         glob = "*.parquet")
     }
@@ -65,7 +65,7 @@ class DrainGuardSpec extends AnyFunSuite {
     // ...and so would an uncheckpointed re-run
     val eNone = intercept[IllegalStateException] {
       TombstoneStream.runAvailableNow(spark, watch.toString,
-        IndexStream.rawSchema, "doc_id", setDir,
+        Drain.DocumentsSchema, "doc_id", setDir,
         deltaFilter = lit(true), checkpointDir = None,
         glob = "*.parquet")
     }
@@ -76,7 +76,7 @@ class DrainGuardSpec extends AnyFunSuite {
     // monotonically increasing batchIds, nothing is replaced
     stage(docs.filter(col("doc_id") % 5 === 4).limit(7), watch, "del1")
     TombstoneStream.runAvailableNow(spark, watch.toString,
-      IndexStream.rawSchema, "doc_id", setDir,
+      Drain.DocumentsSchema, "doc_id", setDir,
       deltaFilter = lit(true), checkpointDir = Some(ckptA),
       glob = "*.parquet")
     assert(Drain.readSink(spark, setDir).count() == n0 + 7)

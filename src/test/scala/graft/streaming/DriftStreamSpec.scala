@@ -32,8 +32,8 @@ class DriftStreamSpec extends AnyFunSuite {
     val watch = Files.createTempDirectory("graft_drift_watch")
     events.filter(!isRef).select(col("value"))
       .coalesce(1).write.mode("overwrite").parquet(watch.toString)
-    val q = DriftStream.binCountsStream(
-        DriftStream.readValues(spark, watch.toString))
+    val q = DriftStream.binCountsStream(Drain.read(spark, watch.toString,
+        DriftStream.rawSchema, "*.parquet"))
       .writeStream
       .trigger(Trigger.AvailableNow())
       .outputMode("complete")
@@ -61,7 +61,7 @@ class DriftStreamSpec extends AnyFunSuite {
     val out = Files.createTempDirectory("graft_drift_v14_out").toString +
       "/verdicts"
     DriftStream.runAvailableNowVerdict(spark, watch.toString, refCounts, out)
-    val alerts = spark.read.parquet(out).collect()
+    val alerts = Drain.readSink(spark, out).collect()
     assert(alerts.length == 1, "one trigger must append exactly one alert row")
     val a = (alerts.head.getLong(0), alerts.head.getString(1))
     val batch = Profile.driftPsiVerdict(events, "value", isRef).collect().head
@@ -74,6 +74,30 @@ class DriftStreamSpec extends AnyFunSuite {
       else if (a._1 <= Profile.PsiDriftedQ6) "shifting"
       else "drifted"
     assert(a._2 == expectBand)
+  }
+
+  test("a replayed verdict trigger (crash after the sink write, before " +
+    "the commit) overwrites its alert row instead of appending a second") {
+    val events = Tables.events(spark, sf)
+    val isRef = col("user_id") % 2 === 0
+    val refCounts = Profile.psiBinCounts(events.filter(isRef), "value")
+    val watch = Files.createTempDirectory("graft_drift_replay_watch")
+    events.filter(!isRef).select(col("value"))
+      .coalesce(1).write.mode("overwrite").parquet(watch.toString)
+    val ckpt = Files.createTempDirectory("graft_drift_replay_ckpt")
+    val out = Files.createTempDirectory("graft_drift_replay_out").toString +
+      "/verdicts"
+    def runOnce(): Unit = DriftStream.runAvailableNowVerdict(spark,
+      watch.toString, refCounts, out, checkpointDir = Some(ckpt.toString))
+    runOnce()
+    assert(Drain.readSink(spark, out).count() == 1)
+    // simulate the crash: batch 0's rows are in the sink, but its commit
+    // never landed, so the restart replays batch 0
+    Seq("0", ".0.crc").foreach(f =>
+      Files.deleteIfExists(ckpt.resolve("commits").resolve(f)))
+    runOnce()
+    assert(Drain.readSink(spark, out).count() == 1,
+      "the replayed trigger must not double the alert history")
   }
 
   test("driftPsiFrom over materialized counts equals the one-pass " +

@@ -58,7 +58,7 @@ class RestartRecoverySpec extends org.scalatest.funsuite.AnyFunSuite {
     val (t1, t2) = tranches()
 
     def runOnce(sink: String): DataFrame = {
-      val q = AnomalyStream.hourlyCounts(
+      val q = Events.hourlyCounts(
           EventStream.readEvents(spark, watch.toString, "*.parquet"))
         .writeStream
         .trigger(Trigger.AvailableNow())
@@ -94,7 +94,7 @@ class RestartRecoverySpec extends org.scalatest.funsuite.AnyFunSuite {
     val (t1, t2) = tranches()
 
     def runOnce(sink: String): Map[(Long, Long), Long] = {
-      val q = SketchStream.hourlyHllRegistersStream(
+      val q = graft.ops.Sketches.hourlyHllRegisters(
           EventStream.readEvents(spark, watch.toString, "*.parquet"),
           "ts", "user_id")
         .writeStream
@@ -141,7 +141,7 @@ class RestartRecoverySpec extends org.scalatest.funsuite.AnyFunSuite {
     val r = graft.ops.Sketches.AmsR
 
     def runOnce(sink: String): Seq[Long] = {
-      val q = SketchStream.amsZStream(
+      val q = graft.ops.Sketches.amsZ(
           EventStream.readEvents(spark, watch.toString, "*.parquet"),
           "user_id")
         .writeStream
@@ -176,7 +176,7 @@ class RestartRecoverySpec extends org.scalatest.funsuite.AnyFunSuite {
     val width = 10.0
 
     def runOnce(sink: String): Map[Long, Long] = {
-      val q = SketchStream.histRegistersStream(
+      val q = graft.ops.Sketches.histRegisters(
           EventStream.readEvents(spark, watch.toString, "*.parquet"),
           "value", width)
         .writeStream
@@ -219,7 +219,7 @@ class RestartRecoverySpec extends org.scalatest.funsuite.AnyFunSuite {
     val (t1, t2) = tranches()
 
     def runOnce(sink: String): DataFrame = {
-      val q = TrendStream.dailySpend(
+      val q = Events.dailySpend(
           EventStream.readEvents(spark, watch.toString, "*.parquet"))
         .writeStream
         .trigger(Trigger.AvailableNow())
@@ -241,14 +241,14 @@ class RestartRecoverySpec extends org.scalatest.funsuite.AnyFunSuite {
     val resumedDf = runOnce("trend_restart_r2")
     val resumed = norm(resumedDf)
 
-    val batchAgg = TrendStream.dailySpend(Tables.events(spark, sf))
+    val batchAgg = Events.dailySpend(Tables.events(spark, sf))
     assert(resumed == norm(batchAgg),
       "post-restart spend aggregate must equal the uninterrupted batch aggregate")
     assert(firstRun != resumed, "split produced no partial first run")
     // the dashboard readout over the recovered snapshot ranks the same
     // rows the batch trending query ranks
-    assert(norm(TrendStream.rankTopK(resumedDf, 3)) ==
-      norm(TrendStream.rankTopK(batchAgg, 3)),
+    assert(norm(Events.rankTopK(resumedDf, 3)) ==
+      norm(Events.rankTopK(batchAgg, 3)),
       "top-k rank over recovered state must equal the batch readout")
   }
 
@@ -332,8 +332,8 @@ class RestartRecoverySpec extends org.scalatest.funsuite.AnyFunSuite {
     val t2 = cur.filter(pmod(col("event_id"), lit(2)) === 1).select(col("value"))
 
     def runOnce(sink: String): Map[Long, Long] = {
-      val q = DriftStream.binCountsStream(
-          DriftStream.readValues(spark, watch.toString))
+      val q = DriftStream.binCountsStream(Drain.read(spark,
+          watch.toString, DriftStream.rawSchema, "*.parquet"))
         .writeStream
         .trigger(Trigger.AvailableNow())
         .outputMode("complete")
@@ -484,15 +484,15 @@ class RestartRecoverySpec extends org.scalatest.funsuite.AnyFunSuite {
       .toString + "/set"
     def runOnce(): Unit =
       TombstoneStream.runAvailableNow(spark, watch.toString,
-        IndexStream.rawSchema, "doc_id", setDir,
+        Drain.DocumentsSchema, "doc_id", setDir,
         deltaFilter = col("doc_id") % 5 === 2,
         checkpointDir = Some(ckpt), glob = "*.parquet")
     stageTranche(docs.filter(col("doc_id") % 10 === 2), watch, "delA")
     runOnce() // run 1 sees tranche A only, then "dies"
-    val afterA = TombstoneStream.loadSet(spark, setDir).count()
+    val afterA = Drain.readSink(spark, setDir).count()
     stageTranche(docs.filter(col("doc_id") % 10 === 7), watch, "delB")
     runOnce() // restart from the same checkpoint
-    val set = TombstoneStream.loadSet(spark, setDir)
+    val set = Drain.readSink(spark, setDir)
     assert(set.count() ==
       afterA + docs.filter(col("doc_id") % 10 === 7).count(),
       "resume must append exactly the unseen tranche's ids — no " +

@@ -52,14 +52,14 @@ class TombstoneLifecycleSpec extends AnyFunSuite {
     val setDir = Files.createTempDirectory("graft_lc_set").toString + "/set"
     def drain(): Unit =
       TombstoneStream.runAvailableNow(spark, watch.toString,
-        IndexStream.rawSchema, "doc_id", setDir,
+        Drain.DocumentsSchema, "doc_id", setDir,
         deltaFilter = lit(true), checkpointDir = Some(ckpt),
         glob = "*.parquet")
     val firstDead = docs.filter(col("doc_id") % 2 === 0 &&
       col("doc_id") % 5 === 2).limit(1)
     stage(firstDead, watch, "delA")
     drain()
-    val setA = TombstoneStream.loadSet(spark, setDir)
+    val setA = Drain.readSink(spark, setDir)
 
     // phase 1: one delete over a whole store — the ratio policy says
     // the serve-time anti-join is the cheaper deal, nothing compacts
@@ -82,7 +82,7 @@ class TombstoneLifecycleSpec extends AnyFunSuite {
       .join(firstDead.select(col("doc_id")), Seq("doc_id"), "left_anti"),
       watch, "delB")
     drain()
-    val setFull = TombstoneStream.loadSet(spark, setDir)
+    val setFull = Drain.readSink(spark, setDir)
     assert(Dedup.cjkCompactIfNeeded(spark, dir, setFull, maxDeleteRatio = 0.05),
       "the accumulated set must cross the ratio and trigger the expunge")
 
@@ -121,7 +121,7 @@ class TombstoneLifecycleSpec extends AnyFunSuite {
     val setDir = Files.createTempDirectory("graft_lcs_set").toString + "/set"
     def drain(): Unit =
       TombstoneStream.runAvailableNow(spark, watch.toString,
-        DeconStream.rawSchema, "vec_id", setDir,
+        Drain.EmbeddingsSchema, "vec_id", setDir,
         deltaFilter = lit(true), checkpointDir = Some(ckpt),
         glob = "*.parquet")
     val dead = vecs.filter(col("vec_id") % 7 === 3)
@@ -129,7 +129,7 @@ class TombstoneLifecycleSpec extends AnyFunSuite {
       .orderBy(col("vec_id")).limit(1)
     stage(firstDead, watch, "delA")
     drain()
-    val setA = TombstoneStream.loadSet(spark, setDir)
+    val setA = Drain.readSink(spark, setDir)
 
     // phase 1: one delete over a whole store — the ratio policy says
     // the serve-time anti-join is the cheaper deal, nothing compacts
@@ -149,7 +149,7 @@ class TombstoneLifecycleSpec extends AnyFunSuite {
     stage(dead.join(firstDead.select(col("vec_id")), Seq("vec_id"),
       "left_anti"), watch, "delB")
     drain()
-    val setFull = TombstoneStream.loadSet(spark, setDir)
+    val setFull = Drain.readSink(spark, setDir)
     assert(Dedup.semanticBucketsCompactIfNeeded(spark, dir, setFull),
       "the accumulated set must cross the ratio and trigger the expunge")
 

@@ -47,7 +47,7 @@ class TombstoneStreamSpec extends AnyFunSuite {
     val setDir = Files.createTempDirectory("graft_ts_set").toString + "/set"
     def drain(): Unit =
       TombstoneStream.runAvailableNow(spark, watch.toString,
-        IndexStream.rawSchema, "doc_id", setDir,
+        Drain.DocumentsSchema, "doc_id", setDir,
         deltaFilter = lit(true), checkpointDir = Some(ckpt),
         glob = "*.parquet")
     // the full delete set (≡ 2 mod 5) arrives as two tranches:
@@ -59,7 +59,7 @@ class TombstoneStreamSpec extends AnyFunSuite {
 
     stage(trancheA, watch, "delA")
     drain()
-    val setAfterA = TombstoneStream.loadSet(spark, setDir)
+    val setAfterA = Drain.readSink(spark, setDir)
     assert(setAfterA.count() == trancheA.count(),
       "after one batch the set must hold exactly that batch's ids")
     // a serve between the drains reflects the deletes SO FAR: equal to
@@ -71,7 +71,7 @@ class TombstoneStreamSpec extends AnyFunSuite {
 
     stage(trancheB, watch, "delB")
     drain()
-    val setFull = TombstoneStream.loadSet(spark, setDir)
+    val setFull = Drain.readSink(spark, setDir)
     assert(setFull.count() == trancheA.count() + trancheB.count(),
       "the restarted drain must append exactly the unseen tranche")
     val streamed = ranking(

@@ -14,7 +14,7 @@ class TrendStreamSpec extends AnyFunSuite {
 
   test("availableNow streaming spend + rank read-out equals batch e11") {
     val streamed = TrendStream.runAvailableNow(spark, sf, "trend_stream_sink")
-    val rankedStream = TrendStream.rankTopK(streamed, 3).collect()
+    val rankedStream = graft.ops.Events.rankTopK(streamed, 3).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
       .toSet
     val batch = graft.SparkEntry.queries("e11_trending_topk")(spark, sf)
