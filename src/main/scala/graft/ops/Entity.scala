@@ -446,33 +446,70 @@ object Entity {
           .as("canon_name"))
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // er09: the er08 map round-tripped through parquet and served back
-    // — write + load in one entry, hash-matching er08's oracle
-    // verbatim (the map IS the published artifact; bit-equality of the
-    // loaded copy is the whole contract)
-    "er09_map_persisted" -> ((s, d) => {
-      val dir = IndexPaths.dir("er09_map", d)
-      canonicalWriteMap(
-        canonicalMapFromPairs(Tables.part(s, d), "p_name",
-          jaroWinklerPairsUnion(Tables.part(s, d), "p_name")), dir)
-      canonicalLoadMap(s, dir)
-    }),
-    // er10: the INGEST half of the MDM loop — the standing dictionary
-    // (names with polyhash % 4 ≠ 3) publishes its er08-scheme map;
-    // the arriving batch (polyhash % 4 ∈ {2,3} — an overlapping
-    // quarter plus a novel quarter, so all three triage branches
-    // exercise on real data) resolves against the LOADED copy only
-    "er10_delta_canonicalize" -> ((s, d) => {
+  def phases: IndexPaths.Phases = {
+    // er10's standing dictionary: names with polyhash % 4 ≠ 3
+    def standing(s: SparkSession, d: String) = {
       graft.functions.VectorFunctions.register(s)
-      val part = Tables.part(s, d)
-      val standing = part.filter(expr("graft_polyhash(p_name) % 4") =!= 3)
-      val delta = part.filter(expr("graft_polyhash(p_name) % 4").isin(2, 3))
-      val dir = IndexPaths.dir("er10_map", d)
-      canonicalWriteMap(canonicalMapFromPairs(standing, "p_name",
-        jaroWinklerPairsUnion(standing, "p_name")), dir)
-      deltaCanonicalize(standing, delta, "p_name", canonicalLoadMap(s, dir))
-    }),
+      Tables.part(s, d).filter(expr("graft_polyhash(p_name) % 4") =!= 3)
+    }
+    def publishShared(tag: String): (SparkSession, String) => Unit =
+      (s, d) => canonicalWriteMap(sharedCanonicalMap(s, d),
+        IndexPaths.dir(tag, d))
+    Map(
+      // er09: the er08 map round-tripped through parquet and served
+      // back — hash-matching er08's oracle verbatim (the map IS the
+      // published artifact; bit-equality of the loaded copy is the
+      // whole contract)
+      "er09_map_persisted" -> ((
+        (s, d) => canonicalWriteMap(
+          canonicalMapFromPairs(Tables.part(s, d), "p_name",
+            jaroWinklerPairsUnion(Tables.part(s, d), "p_name")),
+          IndexPaths.dir("er09_map", d)),
+        (s, d) => canonicalLoadMap(s, IndexPaths.dir("er09_map", d)))),
+      // er10: the INGEST half of the MDM loop — the standing dictionary
+      // (names with polyhash % 4 ≠ 3) publishes its er08-scheme map;
+      // the arriving batch (polyhash % 4 ∈ {2,3} — an overlapping
+      // quarter plus a novel quarter, so all three triage branches
+      // exercise on real data) resolves against the LOADED copy only
+      "er10_delta_canonicalize" -> ((
+        (s, d) => {
+          val st = standing(s, d)
+          canonicalWriteMap(canonicalMapFromPairs(st, "p_name",
+            jaroWinklerPairsUnion(st, "p_name")), IndexPaths.dir("er10_map", d))
+        },
+        (s, d) => deltaCanonicalize(standing(s, d),
+          Tables.part(s, d).filter(expr("graft_polyhash(p_name) % 4").isin(2, 3)),
+          "p_name", canonicalLoadMap(s, IndexPaths.dir("er10_map", d))))),
+      // p09: the ER nightly PUBLISH loop end-to-end — er09 proved the
+      // map round-trips parquet; this entry proves the published copy
+      // SERVES: write the standing canonical map, load it back, and run
+      // the er03 rollup from the LOADED map only (the consumer a
+      // master-data deployment actually ships — broadcast-joins the
+      // published artifact, never touches the pair machinery). Strings
+      // round-trip parquet byte-exactly, so p09 shares er03's oracle
+      // verbatim.
+      "p09_entity_maintenance" -> ((publishShared("p09_map"),
+        (s, d) => entityRollupFromMap(Tables.part(s, d), "p_name",
+          canonicalLoadMap(s, IndexPaths.dir("p09_map", d))))),
+      // p10: SURVIVORSHIP FROM THE PUBLISHED MAP — the golden-record
+      // election (er05) served from the loaded parquet artifact, the
+      // second consumer of the p09 deployment: a master-data system
+      // publishes the canonical map precisely so downstream jobs can
+      // elect authoritative rows without re-running the pair machinery.
+      // Same broadcast-join + per-attribute rank-1 elections as er05,
+      // with the map arriving from storage instead of the session memo;
+      // strings and int64s round-trip parquet byte-exactly, so p10
+      // shares er05's oracle verbatim (pinned by the loaded≡in-session
+      // spec).
+      "p10_survivorship_serve" -> ((publishShared("p10_map"),
+        (s, d) => survivorshipFromMap(Tables.part(s, d), "p_name",
+          Seq("p_brand", "p_type", "p_size"),
+          canonicalLoadMap(s, IndexPaths.dir("p10_map", d)))
+          .withColumn("p_size", col("p_size").cast("long")))))
+  }
+
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    IndexPaths.oneShot(phases) ++ Map(
     "er06_blocking_audit" -> ((s, d) =>
       blockingAudit(Tables.part(s, d), "p_name",
         sampleMod = AuditSampleMod)),
@@ -494,37 +531,6 @@ object Entity {
     "er03_entity_rollup" -> ((s, d) =>
       entityRollupFromMap(Tables.part(s, d), "p_name",
         sharedCanonicalMap(s, d))),
-    // p09: the ER nightly PUBLISH loop end-to-end — er09 proved the
-    // map round-trips parquet; this entry proves the published copy
-    // SERVES: write the standing canonical map, load it back, and run
-    // the er03 rollup from the LOADED map only (the consumer a
-    // master-data deployment actually ships — broadcast-joins the
-    // published artifact, never touches the pair machinery). Strings
-    // round-trip parquet byte-exactly, so p09 shares er03's oracle
-    // verbatim.
-    "p09_entity_maintenance" -> ((s, d) => {
-      val dir = IndexPaths.dir("p09_map", d)
-      canonicalWriteMap(sharedCanonicalMap(s, d), dir)
-      entityRollupFromMap(Tables.part(s, d), "p_name",
-        canonicalLoadMap(s, dir))
-    }),
-    // p10: SURVIVORSHIP FROM THE PUBLISHED MAP — the golden-record
-    // election (er05) served from the loaded parquet artifact, the
-    // second consumer of the p09 deployment: a master-data system
-    // publishes the canonical map precisely so downstream jobs can
-    // elect authoritative rows without re-running the pair machinery.
-    // Same broadcast-join + per-attribute rank-1 elections as er05,
-    // with the map arriving from storage instead of the session memo;
-    // strings and int64s round-trip parquet byte-exactly, so p10
-    // shares er05's oracle verbatim (pinned by the loaded≡in-session
-    // spec).
-    "p10_survivorship_serve" -> ((s, d) => {
-      val dir = IndexPaths.dir("p10_map", d)
-      canonicalWriteMap(sharedCanonicalMap(s, d), dir)
-      survivorshipFromMap(Tables.part(s, d), "p_name",
-        Seq("p_brand", "p_type", "p_size"), canonicalLoadMap(s, dir))
-        .withColumn("p_size", col("p_size").cast("long"))
-    }),
     "er04_jw_pairs" -> ((s, d) =>
       jaroWinklerPairs(Tables.part(s, d), "p_name")),
     // er08: the canonical map BUILT FROM union-blocked JW pairs —

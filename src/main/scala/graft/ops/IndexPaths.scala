@@ -1,5 +1,7 @@
 package graft.ops
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 /** Per-process roots for the persisted-index seams (k15 PQ, k24 SQ8,
   * p07 IVF coarse, d19 MinHash bands, r06 BM25, er09 canonical map,
   * m10 frame store, and the p05–p09 maintenance pipelines).
@@ -18,6 +20,20 @@ package graft.ops
   * to the write/load seams instead; this object only names the
   * harness's scratch locations. */
 object IndexPaths {
+  /** The persisted catalog entries, one `(build, serve)` pair per key:
+    * `build` publishes the entry's artifacts under [[dir]], `serve`
+    * answers from the published copies. `build` must run before
+    * `serve` in the same JVM (the mapping is per-process), and both may
+    * rerun: every build clears or overwrites what it publishes. */
+  type Phases = Map[String, ((SparkSession, String) => Unit,
+                             (SparkSession, String) => DataFrame)]
+
+  /** The one-shot `queries` entries of `phases`: build, then serve. */
+  def oneShot(phases: Phases): Map[String, (SparkSession, String) => DataFrame] =
+    phases.map { case (k, (build, serve)) =>
+      k -> ((s: SparkSession, d: String) => { build(s, d); serve(s, d) })
+    }
+
   private lazy val base: java.io.File = {
     val p = java.nio.file.Files.createTempDirectory("graft_idx_")
     // deleteOnExit only removes EMPTY directories, and this base fills

@@ -342,20 +342,6 @@ object Multimodal {
     * equals `fingerprint(corpus minus tombstones)` bit-for-bit and
     * `compact → serve` equals m12's tombstone serve. One broadcast
     * anti-join over the signature rows; blobs are never touched. */
-  /** [[frameCompactStore]] behind the deletes-ratio merge policy
-    * ([[StoreSwap.deletesExceed]]) — compact only when the tombstoned
-    * signature rows exceed `maxDeleteRatio` of the store; returns
-    * whether it compacted (true ⇒ the tombstone set retires). */
-  def frameCompactIfNeeded(spark: SparkSession, dir: String,
-                           tombstones: DataFrame,
-                           maxDeleteRatio: Double = 0.1): Boolean = {
-    val (dead, total) = StoreSwap.deadAndTotal(
-      frameLoadStore(spark, dir), "doc_id", tombstones)
-    val go = StoreSwap.deletesExceed(dead, total, maxDeleteRatio)
-    if (go) frameCompactStore(spark, dir, tombstones)
-    go
-  }
-
   def frameCompactStore(spark: SparkSession, dir: String,
                         tombstones: DataFrame): Unit = {
     // frameLoadStore checks the stamp — compacting a torn or stale
@@ -368,61 +354,12 @@ object Multimodal {
     StoreSwap.swapDir(dir, frameVersion)
   }
 
-  /** m13 — [[tombstonedNearDup]]'s rebuild-time twin: publish the
-    * standing store, COMPACT the tombstoned items out, and serve the
-    * delta readout with no tombstone logic at all. Shares m12's
-    * oracle (compact → serve ≡ publish-over-remainder + serve). */
-  def compactedNearDup(s: SparkSession, d: String): DataFrame = {
-    val dir = IndexPaths.dir("m13_frames", d)
-    frameWriteStore(framesOf(Tables.documents(s, d)
-      .filter(col("doc_id") % 2 === 0)), dir)
-    frameCompactStore(s, dir,
-      Tables.documents(s, d).filter(col("doc_id") % 5 === 2)
-        .select(col("doc_id")))
-    crossNearDupVsStore(frameLoadStore(s, dir),
-      framesOf(Tables.documents(s, d).filter(col("doc_id") % 2 =!= 0)))
-  }
-
-  /** m14 — [[tombstonedNearDup]] with the delete set arriving AS A
-    * STREAM (the r16 takedown-feed shape on the media family): item
-    * takedowns drain through [[graft.streaming.TombstoneStream]] into
-    * the standing set (batchId-keyed idempotent appends), and the m12
-    * serve anti-joins the ACCUMULATED set off the loaded store. The
-    * set union over any batch split equals the static %5==2 table
-    * (zero streaming state; the anti-join distincts the set), so m14
-    * shares m12's oracle verbatim. Set dir cleared at entry start
-    * (the r12 clear-then-append discipline — no stream checkpoint). */
-  def tombstoneStreamNearDup(s: SparkSession, d: String): DataFrame = {
-    val dir = IndexPaths.dir("m14_frames", d)
-    val setDir = IndexPaths.dir("m14_tombstones", d)
-    IndexPaths.clear(setDir)
-    frameWriteStore(framesOf(Tables.documents(s, d)
-      .filter(col("doc_id") % 2 === 0)), dir)
-    // documents.parquet is a single FILE at the driver's sf dirs but
-    // a parquet DIRECTORY in ScaleGen output (the r12 note)
-    val src = new java.io.File(d, "documents.parquet")
-    val (srcDir, glob) =
-      if (src.isDirectory) (src.getPath, "*.parquet")
-      else (d, "documents.parquet")
-    graft.streaming.TombstoneStream.runAvailableNow(s, srcDir,
-      graft.streaming.Drain.DocumentsSchema, "doc_id", setDir,
-      deltaFilter = col("doc_id") % 5 === 2, glob = glob)
-    val dead = graft.streaming.Drain.readSink(s, setDir)
-      .select(col("doc_id")).distinct()
-    crossNearDupVsStore(
-      frameLoadStore(s, dir).join(broadcast(dead), Seq("doc_id"), "left_anti"),
-      framesOf(Tables.documents(s, d).filter(col("doc_id") % 2 =!= 0)))
-  }
-
   /** m10 — the persisted-store round trip: fingerprint the corpus,
     * WRITE the frame store, and serve the m08 near-dup pairs entirely
     * from the LOADED signatures (no blob re-decode on the serve
     * path). */
-  def persistedNearDup(s: SparkSession, d: String): DataFrame = {
-    val dir = IndexPaths.dir("m10_frames", d)
-    frameWriteStore(mediaFrames(s, d), dir)
-    videoNearDupPairs(frameLoadStore(s, dir))
-  }
+  def persistedNearDup(s: SparkSession, d: String): DataFrame =
+    queries("m10_frame_store")(s, d)
 
   /** p08 — the NIGHTLY MEDIA MAINTENANCE loop end-to-end (p05's shape
     * on the media seam): the standing (even) corpus's frame
@@ -443,10 +380,8 @@ object Multimodal {
     * pair set and each pair's Jaccard uses the same global sets ⇒
     * the merged labels equal the one-shot m09 clustering exactly,
     * whichever branch the guard takes. */
-  def mediaMaintenance(s: SparkSession, d: String): DataFrame = {
-    mediaStorePublish(s, d)
-    mediaServeMerged(s, d)
-  }
+  def mediaMaintenance(s: SparkSession, d: String): DataFrame =
+    queries("p08_media_maintenance")(s, d)
 
   /** p08's build half: fingerprint the standing (even) corpus, publish
     * its signatures, AND publish its cluster labels — the nightly
@@ -676,13 +611,8 @@ object Multimodal {
     * back, and score the whole delta against the loaded copy — the
     * one-shot equivalent of what [[graft.streaming.MediaStream]] does
     * micro-batch by micro-batch. */
-  def streamEdgeNearDup(s: SparkSession, d: String): DataFrame = {
-    val dir = IndexPaths.dir("m11_frames", d)
-    frameWriteStore(framesOf(Tables.documents(s, d)
-      .filter(col("doc_id") % 2 === 0)), dir)
-    crossNearDupVsStore(frameLoadStore(s, dir),
-      framesOf(Tables.documents(s, d).filter(col("doc_id") % 2 =!= 0)))
-  }
+  def streamEdgeNearDup(s: SparkSession, d: String): DataFrame =
+    queries("m11_stream_neardup")(s, d)
 
   /** m12 — [[streamEdgeNearDup]] under a STANDING DELETE SET: the
     * r13/k25/d29 tombstone move on the media store, completing the
@@ -707,16 +637,85 @@ object Multimodal {
       framesOf(Tables.documents(s, d).filter(col("doc_id") % 2 =!= 0)))
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def phases: IndexPaths.Phases = {
+    // harness wiring: standing = even ids, delta = odd ids, each
+    // fingerprinted from its documents blob
+    def frames(s: SparkSession, d: String, f: Column) =
+      framesOf(Tables.documents(s, d).filter(f))
+    def publishEven(tag: String): (SparkSession, String) => Unit =
+      (s, d) => frameWriteStore(frames(s, d, col("doc_id") % 2 === 0),
+        IndexPaths.dir(tag, d))
+    def serveOdd(tag: String, store: DataFrame => DataFrame = identity)
+        : (SparkSession, String) => DataFrame =
+      (s, d) => crossNearDupVsStore(
+        store(frameLoadStore(s, IndexPaths.dir(tag, d))),
+        frames(s, d, col("doc_id") % 2 =!= 0))
+    Map(
+      // m13 — m12's deletes EXPUNGED at rebuild time (the twin of
+      // tombstonedNearDup): publish the standing store, COMPACT the
+      // tombstoned items out, retire the tombstone set, and serve the
+      // delta readout with no tombstone logic at all. Shares m12's
+      // oracle (compact → serve ≡ publish-over-remainder + serve).
+      "m13_compacted_serve" -> ((
+        (s, d) => {
+          publishEven("m13_frames")(s, d)
+          frameCompactStore(s, IndexPaths.dir("m13_frames", d),
+            Tables.documents(s, d).filter(col("doc_id") % 5 === 2)
+              .select(col("doc_id")))
+        },
+        serveOdd("m13_frames"))),
+      // m14 — m12 with the delete set arriving AS A STREAM (the r16
+      // takedown-feed shape on the media family): item takedowns drain
+      // through [[graft.streaming.TombstoneStream]] into the standing
+      // set (batchId-keyed idempotent appends), and the m12 serve
+      // anti-joins the ACCUMULATED set off the loaded store. The set
+      // union over any batch split equals the static %5==2 table (zero
+      // streaming state; the anti-join distincts the set), so m14
+      // shares m12's oracle verbatim. Set dir cleared at entry start
+      // (the r12 clear-then-append discipline — no stream checkpoint).
+      "m14_tombstone_stream" -> ((
+        (s, d) => {
+          val setDir = IndexPaths.dir("m14_tombstones", d)
+          IndexPaths.clear(setDir)
+          publishEven("m14_frames")(s, d)
+          val (srcDir, glob) = Tables.streamSource(d, "documents")
+          graft.streaming.TombstoneStream.runAvailableNow(s, srcDir,
+            graft.streaming.Drain.DocumentsSchema, "doc_id", setDir,
+            deltaFilter = col("doc_id") % 5 === 2, glob = glob)
+        },
+        (s, d) => {
+          val dead = graft.streaming.Drain.readSink(s,
+            IndexPaths.dir("m14_tombstones", d)).select(col("doc_id")).distinct()
+          serveOdd("m14_frames",
+            _.join(broadcast(dead), Seq("doc_id"), "left_anti"))(s, d)
+        })),
+      // m10: the frame-signature store round trip — fingerprint once,
+      // persist, serve the near-dup pairs from the LOADED store (no
+      // blob re-decode); shares m08's oracle verbatim
+      "m10_frame_store" -> ((
+        (s, d) => frameWriteStore(mediaFrames(s, d),
+          IndexPaths.dir("m10_frames", d)),
+        (s, d) => videoNearDupPairs(frameLoadStore(s,
+          IndexPaths.dir("m10_frames", d))))),
+      // p08: the nightly media-dedup loop — standing signatures loaded
+      // from the store, delta fingerprinted fresh, labels rolled
+      // forward by star merge; equals one-shot m09 exactly
+      "p08_media_maintenance" -> ((
+        (s, d) => mediaStorePublish(s, d),
+        (s, d) => mediaServeMerged(s, d))),
+      // m11: the stream-edge cross readout — arriving (odd) items scored
+      // against the loaded standing store with the df cap FROZEN at the
+      // standing corpus; the one-shot twin of MediaStream's micro-batch
+      // loop (batch-independent by construction)
+      "m11_stream_neardup" -> ((publishEven("m11_frames"),
+        serveOdd("m11_frames"))))
+  }
+
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    IndexPaths.oneShot(phases) ++ Map(
     // m12: m11 under a standing delete set — the tombstone move on
     // the media store (see tombstonedNearDup)
     "m12_tombstone_serve" -> ((s, d) => tombstonedNearDup(s, d)),
-    // m13: m12's deletes EXPUNGED at rebuild time — compact the store,
-    // retire the tombstone set, serve clean (see compactedNearDup)
-    "m13_compacted_serve" -> ((s, d) => compactedNearDup(s, d)),
-    // m14: m12 with the delete set STREAMED in (the r16 takedown-feed
-    // shape on the media family — see tombstoneStreamNearDup)
-    "m14_tombstone_stream" -> ((s, d) => tombstoneStreamNearDup(s, d)),
     // frame-set Jaccard between media items — re-encode/trim/watermark
     // near-dups the text shingle family can't see
     // m09: the c01 closure over m08's pairs — duplicate-media CLUSTERS
@@ -729,19 +728,6 @@ object Multimodal {
         "doc_a", "doc_b")),
     "m08_video_neardup" -> ((s, d) =>
       videoNearDupPairs(mediaFrames(s, d))),
-    // m10: the frame-signature store round trip — fingerprint once,
-    // persist, serve the near-dup pairs from the LOADED store (no
-    // blob re-decode); shares m08's oracle verbatim
-    "m10_frame_store" -> ((s, d) => persistedNearDup(s, d)),
-    // p08: the nightly media-dedup loop — standing signatures loaded
-    // from the store, delta fingerprinted fresh, labels rolled
-    // forward by star merge; equals one-shot m09 exactly
-    "p08_media_maintenance" -> ((s, d) => mediaMaintenance(s, d)),
-    // m11: the stream-edge cross readout — arriving (odd) items scored
-    // against the loaded standing store with the df cap FROZEN at the
-    // standing corpus; the one-shot twin of MediaStream's micro-batch
-    // loop (batch-independent by construction)
-    "m11_stream_neardup" -> ((s, d) => streamEdgeNearDup(s, d)),
     "m01_media_meta" -> ((s, d) => {
       val blobs = Tables.documents(s, d)
         .select(col("doc_id"), col("text").cast("binary").as("media"))

@@ -710,7 +710,88 @@ object Search {
       .select(col(id), col("rrf_q6"))
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def phases: IndexPaths.Phases = Map(
+    // the full index persisted and served back — write + load + query;
+    // shares r01's oracle verbatim (same terms, same scoring tail,
+    // postings pruned at the parquet scan)
+    "r06_bm25_persisted" -> ((
+      (s, d) => {
+        val (p, l, st) = bm25BuildIndex(Tables.documents(s, d), "doc_id", "text")
+        bm25WriteIndex(p, l, st, IndexPaths.dir("r06_index", d))
+      },
+      (s, d) => {
+        val (lp, ll, ls) = bm25LoadIndexWs(s, IndexPaths.dir("r06_index", d))
+        bm25QueryIndex(lp, ll, ls)
+      })),
+    // the p06 move on the CJK seam (r09): the tokenized corpus is
+    // derived ONCE (the r08 checkpoint), the full unigram+bigram index
+    // built from the arrays in one corpus pass and persisted, and the
+    // Chinese query served entirely from the loaded tables — postings
+    // pruned at the parquet scan. For any term subset the pruned
+    // tf/df/stats equal the query-time ones (r06's argument), so r09
+    // shares r08's oracle verbatim. This is the nightly shape a CJK
+    // deployment actually runs: tokenize+index once at ingest, serve
+    // every query from the store.
+    "r09_cjk_bm25_persisted" -> ((
+      (s, d) => {
+        val (p, l, st) = bm25BuildIndexTokens(Clusters.sharedCjkTerms(s, d),
+          "doc_id", "terms")
+        bm25WriteIndex(p, l, st, IndexPaths.dir("r09_index", d),
+          graft.ops.TextOps.tokenizerVersion)
+      },
+      (s, d) => {
+        val (lp, ll, ls) = bm25LoadIndexChecked(s,
+          IndexPaths.dir("r09_index", d))
+        bm25QueryIndex(lp, ll, ls, terms = CjkQuery)
+      })),
+    // r13: the r06 persisted store served under a standing delete set
+    // (docs ≡ 2 mod 5 tombstoned) — deletes WITHOUT rebuild. The
+    // df-corrected serve equals a full rebuild over the remaining
+    // corpus bit-for-bit, so the oracle is r01's SQL with the
+    // tombstone predicate on the base table.
+    // r13's tombstones carry dl (r19 — the documented deployment
+    // remedy: every deletion knows its doc's length at delete time),
+    // so the removed-stats correction reads the delete table itself
+    // instead of semi-join-scanning the store's full postings; dl =
+    // the tokenizer's array size, exactly the dl the build wrote.
+    "r13_bm25_tombstoned" -> ((
+      (s, d) => {
+        val (p, l, st) = bm25BuildIndex(Tables.documents(s, d), "doc_id", "text")
+        bm25WriteIndex(p, l, st, IndexPaths.dir("r13_index", d))
+      },
+      (s, d) => {
+        val (lp, ll, ls) = bm25LoadIndexWs(s, IndexPaths.dir("r13_index", d))
+        bm25QueryIndexTombstoned(lp, ll, ls,
+          Tables.documents(s, d).filter(col("doc_id") % 5 === 2)
+            .select(col("doc_id"),
+              expr("size(filter(split(text, ' '), x -> x <> ''))")
+                .cast("long").as("dl")))
+      })),
+    // r14: the tombstone serve on the CJK seam — the r09 persisted
+    // unigram+bigram store under the same delete set, served with the
+    // Chinese query. Shares r08's oracle text under the tombstone
+    // WHERE (the r09 shared-oracle move composed with r13's).
+    // dl-carrying tombstones (the r13 note): dl = size(terms) read
+    // from the session's checkpointed term arrays — the removed-stats
+    // pass over the store's postings disappears.
+    "r14_cjk_tombstoned" -> ((
+      (s, d) => {
+        val (p, l, st) = bm25BuildIndexTokens(Clusters.sharedCjkTerms(s, d),
+          "doc_id", "terms")
+        bm25WriteIndex(p, l, st, IndexPaths.dir("r14_index", d),
+          graft.ops.TextOps.tokenizerVersion)
+      },
+      (s, d) => {
+        val (lp, ll, ls) = bm25LoadIndexChecked(s,
+          IndexPaths.dir("r14_index", d))
+        bm25QueryIndexTombstoned(lp, ll, ls,
+          Clusters.sharedCjkTerms(s, d).filter(col("doc_id") % 5 === 2)
+            .select(col("doc_id"), size(col("terms")).cast("long").as("dl")),
+          terms = CjkQuery)
+      })))
+
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    IndexPaths.oneShot(phases) ++ Map(
     "r01_bm25" -> ((s, d) =>
       bm25TopK(Tables.documents(s, d), "doc_id", "text")),
     // r08 harness: the fixture-translated unsegmented corpus indexed
@@ -724,73 +805,6 @@ object Search {
     "r08_cjk_bm25" -> ((s, d) =>
       bm25TopKTokens(Clusters.sharedCjkTerms(s, d),
         "doc_id", "terms", terms = CjkQuery)),
-    // the full index persisted and served back — write + load + query
-    // in one entry; shares r01's oracle verbatim (same terms, same
-    // scoring tail, postings pruned at the parquet scan)
-    // the p06 move on the CJK seam (r09): the tokenized corpus is
-    // derived ONCE (the r08 checkpoint), the full unigram+bigram index
-    // built from the arrays in one corpus pass and persisted, and the
-    // Chinese query served entirely from the loaded tables — postings
-    // pruned at the parquet scan. For any term subset the pruned
-    // tf/df/stats equal the query-time ones (r06's argument), so r09
-    // shares r08's oracle verbatim. This is the nightly shape a CJK
-    // deployment actually runs: tokenize+index once at ingest, serve
-    // every query from the store.
-    "r09_cjk_bm25_persisted" -> ((s, d) => {
-      val idxDir = IndexPaths.dir("r09_index", d)
-      val toks = Clusters.sharedCjkTerms(s, d)
-      val (p, l, st) = bm25BuildIndexTokens(toks, "doc_id", "terms")
-      bm25WriteIndex(p, l, st, idxDir, graft.ops.TextOps.tokenizerVersion)
-      val (lp, ll, ls) = bm25LoadIndexChecked(s, idxDir)
-      bm25QueryIndex(lp, ll, ls, terms = CjkQuery)
-    }),
-    "r06_bm25_persisted" -> ((s, d) => {
-      val idxDir = IndexPaths.dir("r06_index", d)
-      val (p, l, st) = bm25BuildIndex(Tables.documents(s, d), "doc_id", "text")
-      bm25WriteIndex(p, l, st, idxDir)
-      val (lp, ll, ls) = bm25LoadIndexWs(s, idxDir)
-      bm25QueryIndex(lp, ll, ls)
-    }),
-    // r13: the r06 persisted store served under a standing delete set
-    // (docs ≡ 2 mod 5 tombstoned) — deletes WITHOUT rebuild. The
-    // df-corrected serve equals a full rebuild over the remaining
-    // corpus bit-for-bit, so the oracle is r01's SQL with the
-    // tombstone predicate on the base table.
-    // r13's tombstones carry dl (r19 — the documented deployment
-    // remedy: every deletion knows its doc's length at delete time),
-    // so the removed-stats correction reads the delete table itself
-    // instead of semi-join-scanning the store's full postings; dl =
-    // the tokenizer's array size, exactly the dl the build wrote.
-    "r13_bm25_tombstoned" -> ((s, d) => {
-      val idxDir = IndexPaths.dir("r13_index", d)
-      val docs = Tables.documents(s, d)
-      val (p, l, st) = bm25BuildIndex(docs, "doc_id", "text")
-      bm25WriteIndex(p, l, st, idxDir)
-      val (lp, ll, ls) = bm25LoadIndexWs(s, idxDir)
-      bm25QueryIndexTombstoned(lp, ll, ls,
-        docs.filter(col("doc_id") % 5 === 2)
-          .select(col("doc_id"),
-            expr("size(filter(split(text, ' '), x -> x <> ''))")
-              .cast("long").as("dl")))
-    }),
-    // r14: the tombstone serve on the CJK seam — the r09 persisted
-    // unigram+bigram store under the same delete set, served with the
-    // Chinese query. Shares r08's oracle text under the tombstone
-    // WHERE (the r09 shared-oracle move composed with r13's).
-    // dl-carrying tombstones (the r13 note): dl = size(terms) read
-    // from the session's checkpointed term arrays — the removed-stats
-    // pass over the store's postings disappears.
-    "r14_cjk_tombstoned" -> ((s, d) => {
-      val idxDir = IndexPaths.dir("r14_index", d)
-      val toks = Clusters.sharedCjkTerms(s, d)
-      val (p, l, st) = bm25BuildIndexTokens(toks, "doc_id", "terms")
-      bm25WriteIndex(p, l, st, idxDir, graft.ops.TextOps.tokenizerVersion)
-      val (lp, ll, ls) = bm25LoadIndexChecked(s, idxDir)
-      bm25QueryIndexTombstoned(lp, ll, ls,
-        toks.filter(col("doc_id") % 5 === 2)
-          .select(col("doc_id"), size(col("terms")).cast("long").as("dl")),
-        terms = CjkQuery)
-    }),
     // nightly maintenance: the standing (even) index merged with the
     // delta (odd) batch's, served without any rebuild — exact integer
     // merge ⇒ equals build(all) ⇒ shares r01's oracle too

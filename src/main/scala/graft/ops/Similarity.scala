@@ -1345,31 +1345,16 @@ object Similarity {
     * bit-for-bit and k28 shares its oracle. Cost: two broadcast
     * anti-joins over narrow int tables — corpus-linear I/O, no
     * retraining, no re-encode. */
-  /** [[ivfPqCompactStore]] behind the deletes-ratio merge policy
-    * ([[StoreSwap.deletesExceed]]) — compact only when the tombstoned
-    * code rows exceed `maxDeleteRatio` of the store; returns whether
-    * it compacted (true ⇒ the tombstone set retires). */
-  def ivfPqCompactIfNeeded(spark: SparkSession, dir: String,
-                           tombstones: DataFrame,
-                           maxDeleteRatio: Double = 0.1): Boolean = {
-    val (dead, total) = StoreSwap.deadAndTotal(
-      pqLoadIndex(spark, s"$dir/pq")._1, "vec_id", tombstones)
-    val go = StoreSwap.deletesExceed(dead, total, maxDeleteRatio)
-    if (go) ivfPqCompactStore(spark, dir, tombstones)
-    go
-  }
-
   def ivfPqCompactStore(spark: SparkSession, dir: String,
                         tombstones: DataFrame): Unit = {
     val ts = broadcast(tombstones.select(col("vec_id")).distinct())
-    // ORDER MATTERS: coarse first, pq second. The ratio probe
-    // ([[ivfPqCompactIfNeeded]]) reads the CODES table, so a crash
-    // between the two swaps must leave codes still carrying its dead
-    // rows — the retry's probe then still fires and the rerun heals
-    // both dirs (each anti-join is idempotent over already-compacted
-    // rows). The reverse order would leave codes clean and assign
-    // dirty, the probe reading dead≈0 forever — a half-compacted
-    // state the policy could never see.
+    // ORDER MATTERS: coarse first, pq second. The CODES table keeps
+    // its dead rows until the last swap, so a crash between the two
+    // swaps leaves a store whose code list still shows the deletes,
+    // and a rerun heals both dirs (each anti-join is idempotent over
+    // already-compacted rows). The reverse order would leave codes
+    // clean and assign dirty — a half-compacted store whose code
+    // list reads as fully compacted.
     locally { // coarse family: assignment shrinks, centroids persist
       val cDir = s"$dir/coarse"
       val (assign, _) = ivfLoadCoarse(spark, cDir) // stamp-checked
@@ -1388,22 +1373,10 @@ object Similarity {
     }
   }
 
-  /** The generic IVFPQ search over CALLER artifacts (the library-API
-    * form the catalog instantiates): normalized vectors, a trained
-    * cell `assign`ment, its `cellCentroids`, and a PQ index — gate
-    * each probe to its `nprobe` top cells, ADC-score only gated
-    * members' codes, refine exactly. */
-  def ivfPqQuery(vectors: DataFrame, id: String, vec: String,
-                 codes: DataFrame, codebooks: DataFrame,
-                 assign: DataFrame, cellCentroids: DataFrame,
-                 isProbe: Column => Column, k: Int, nprobe: Int,
-                 m: Int = PqSubspaces, refine: Int = PqRefine,
-                 dims: Int = 64): DataFrame = {
-    val vn = pqNormalized(vectors, id, vec)
-    ivfPqOnNormalized(vn, codes, codebooks, assign, cellCentroids,
-      isProbe, k, nprobe, m, refine, dims)
-  }
-
+  /** The IVFPQ search over normalized vectors `vn` and caller
+    * artifacts: a trained cell `assign`ment, its `cellCentroids`, and
+    * a PQ index — gate each probe to its `nprobe` top cells,
+    * ADC-score only gated members' codes, refine exactly. */
   private def ivfPqOnNormalized(vn: DataFrame, codes: DataFrame,
                                 codebooks: DataFrame, assign: DataFrame,
                                 cellCentroids: DataFrame,
@@ -1537,32 +1510,6 @@ object Similarity {
           "ELSE (dx * 255) div w END)").as("codes"),
         col("qmins"), col("widths"))
 
-  /** SQ8-compressed k-NN (k21) — the THIRD production index family
-    * next to PQ (k08) and IVF (k05): FAISS's `ScalarQuantizer` path.
-    * Each normalized corpus vector is stored as dims 8-bit codes
-    * (16× smaller than float32; vs PQ's m integers the codes keep
-    * per-dimension structure and need no codebook training — range
-    * stats only, one cheap corpus pass). Serving is asymmetric: the
-    * probe stays at full Quant precision while each corpus element is
-    * reconstructed from its code (`qmin + code·width div 255`), and
-    * the score is the exact integer dot `Σ rec_j·probe_j` — entirely
-    * deterministic int64 arithmetic (|rec|,|probe| ≤ 2²⁰ ⇒ the
-    * 64-term sum ≤ 2⁴⁶), so both engines agree bit-for-bit with no
-    * float fold anywhere in the serve path.
-    *
-    * Scale shape: stats are one O(dims) aggregation; encode and
-    * reconstruction are map-side under a one-row broadcast; probes
-    * broadcast against the code table exactly like [[knnBrute]] — the
-    * corpus never shuffles. At 100 TB the wins compound: the standing
-    * side a serve scan reads is the 64-byte code table, not the
-    * 256-byte float corpus. Output: `(probe_id, rnk, neighbor_id,
-    * score_q)` with the integer reconstruction score. */
-  def sqAdcKnn(vectors: DataFrame, id: String, vec: String,
-               isProbe: Column => Column, k: Int): DataFrame = {
-    val vn = pqNormalized(vectors, id, vec)
-    sqAdcOnNormalized(vn, isProbe, k)
-  }
-
   /** TRAIN the SQ8 index (the k24 persistence seam): the two frames a
     * deployment stores — the one-row per-dimension range `stats` and
     * the `codes` table `(vec_id, codes)`, dims 8-bit values per
@@ -1621,6 +1568,27 @@ object Similarity {
       _ < NumProbes, k)
   }
 
+  /** SQ8-compressed k-NN (k21) over the normalized corpus `vn` — the
+    * THIRD production index family next to PQ (k08) and IVF (k05):
+    * FAISS's `ScalarQuantizer` path.
+    * Each normalized corpus vector is stored as dims 8-bit codes
+    * (16× smaller than float32; vs PQ's m integers the codes keep
+    * per-dimension structure and need no codebook training — range
+    * stats only, one cheap corpus pass). Serving is asymmetric: the
+    * probe stays at full Quant precision while each corpus element is
+    * reconstructed from its code (`qmin + code·width div 255`), and
+    * the score is the exact integer dot `Σ rec_j·probe_j` — entirely
+    * deterministic int64 arithmetic (|rec|,|probe| ≤ 2²⁰ ⇒ the
+    * 64-term sum ≤ 2⁴⁶), so both engines agree bit-for-bit with no
+    * float fold anywhere in the serve path.
+    *
+    * Scale shape: stats are one O(dims) aggregation; encode and
+    * reconstruction are map-side under a one-row broadcast; probes
+    * broadcast against the code table exactly like [[knnBrute]] — the
+    * corpus never shuffles. At 100 TB the wins compound: the standing
+    * side a serve scan reads is the 64-byte code table, not the
+    * 256-byte float corpus. Output: `(probe_id, rnk, neighbor_id,
+    * score_q)` with the integer reconstruction score. */
   private def sqAdcOnNormalized(vn: DataFrame, isProbe: Column => Column,
                                 k: Int): DataFrame = {
     // In-session serve attaches the one-row stats frame ONCE:
@@ -1653,7 +1621,64 @@ object Similarity {
       .select(col("probe_id"), col("rnk"), col("neighbor_id"), col("score_q"))
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def phases: IndexPaths.Phases = Map(
+    // k29: k25 with the delete set STREAMED in (the r16 takedown-feed
+    // shape on the ANN family): vector deletes drain through
+    // TombstoneStream into the standing set (batchId-keyed idempotent
+    // appends), and the k25 serve anti-joins the ACCUMULATED set off
+    // the code list. Set union over any batch split equals the static
+    // %7==3 table (zero streaming state; the serve's anti-join is
+    // set-semantic), so k29 shares k25's oracle verbatim. Set dir
+    // cleared at entry start (no stream checkpoint here).
+    "k29_tombstone_stream" -> ((
+      (s, d) => {
+        val setDir = IndexPaths.dir("k29_tombstones", d)
+        IndexPaths.clear(setDir)
+        val (srcDir, glob) = Tables.streamSource(d, "embeddings")
+        graft.streaming.TombstoneStream.runAvailableNow(s, srcDir,
+          graft.streaming.Drain.EmbeddingsSchema, "vec_id", setDir,
+          deltaFilter = col("vec_id") % 7 === 3, glob = glob)
+      },
+      (s, d) => ivfPqServeTombstoned(s, d, graft.streaming.Drain.readSink(s,
+        IndexPaths.dir("k29_tombstones", d))))),
+    // k28: k25's deletes EXPUNGED at rebuild time — publish the full
+    // IVFPQ store, compact the tombstoned vectors out of codes +
+    // assignment (trained artifacts untouched), retire the set, and
+    // serve all-loaded with no tombstone logic; equals k25 exactly
+    "k28_ann_compacted_serve" -> ((
+      (s, d) => {
+        val dir = IndexPaths.dir("k28_index", d)
+        ivfPqWriteAll(s, d, dir)
+        ivfPqCompactStore(s, dir,
+          Tables.embeddings(s, d).select(col("vec_id"))
+            .filter(col("vec_id") % 7 === 3))
+      },
+      (s, d) => ivfPqServeLoaded(s, d, IndexPaths.dir("k28_index", d)))),
+    // k24: the SQ8 index persisted (stats + codes parquet) and served
+    // back entirely from the loaded artifacts - the k15/p07 round
+    // trip on the third index family; shares k21's oracle verbatim
+    "k24_sq8_persisted" -> ((
+      (s, d) => {
+        val (stats, codes) = sqTrainIndex(sharedNormalized(s, d))
+        sqWriteIndex(stats, codes, IndexPaths.dir("sq_index", d))
+      },
+      (s, d) => sqServeLoaded(s, d, IndexPaths.dir("sq_index", d)))),
+    // k15: the PERSISTED-index serve path — train the k08 index, WRITE
+    // codes+codebooks to parquet, LOAD them back, and serve the probes
+    // from the loaded index only. A deployment trains once and serves
+    // many probe batches; this entry exercises that full round trip.
+    // Output (and oracle) are k08's verbatim: parquet round-trips the
+    // integer codes and double centroids bit-exactly, so persistence
+    // changes where the index lives, not what it answers.
+    "k15_pq_persisted" -> ((
+      (s, d) => {
+        val (codes, cbs) = sharedPqIndex(s, d)
+        pqWriteIndex(codes, cbs, IndexPaths.dir("pq_index", d))
+      },
+      (s, d) => pqServeLoaded(s, d, IndexPaths.dir("pq_index", d)))))
+
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    IndexPaths.oneShot(phases) ++ Map(
     // the production composite: coarse cells gate, PQ codes score,
     // exact refine ranks — all from the shared trained artifacts
     "k19_ivfpq" -> ((s, d) => ivfPqServe(s, d, IvfPqNprobe)),
@@ -1663,41 +1688,6 @@ object Similarity {
       ivfPqServeTombstoned(s, d,
         Tables.embeddings(s, d).select(col("vec_id"))
           .filter(col("vec_id") % 7 === 3))),
-    // k29: k25 with the delete set STREAMED in (the r16 takedown-feed
-    // shape on the ANN family): vector deletes drain through
-    // TombstoneStream into the standing set (batchId-keyed idempotent
-    // appends), and the k25 serve anti-joins the ACCUMULATED set off
-    // the code list. Set union over any batch split equals the static
-    // %7==3 table (zero streaming state; the serve's anti-join is
-    // set-semantic), so k29 shares k25's oracle verbatim. Set dir
-    // cleared at entry start (no stream checkpoint here).
-    "k29_tombstone_stream" -> ((s, d) => {
-      val setDir = IndexPaths.dir("k29_tombstones", d)
-      IndexPaths.clear(setDir)
-      // embeddings.parquet is a single FILE at the driver's sf dirs
-      // but a parquet DIRECTORY in ScaleGen output (the r12 note)
-      val src = new java.io.File(d, "embeddings.parquet")
-      val (srcDir, glob) =
-        if (src.isDirectory) (src.getPath, "*.parquet")
-        else (d, "embeddings.parquet")
-      graft.streaming.TombstoneStream.runAvailableNow(s, srcDir,
-        graft.streaming.Drain.EmbeddingsSchema, "vec_id", setDir,
-        deltaFilter = col("vec_id") % 7 === 3, glob = glob)
-      ivfPqServeTombstoned(s, d,
-        graft.streaming.Drain.readSink(s, setDir))
-    }),
-    // k28: k25's deletes EXPUNGED at rebuild time — publish the full
-    // IVFPQ store, compact the tombstoned vectors out of codes +
-    // assignment (trained artifacts untouched), retire the set, and
-    // serve all-loaded with no tombstone logic; equals k25 exactly
-    "k28_ann_compacted_serve" -> ((s, d) => {
-      val dir = IndexPaths.dir("k28_index", d)
-      ivfPqWriteAll(s, d, dir)
-      ivfPqCompactStore(s, dir,
-        Tables.embeddings(s, d).select(col("vec_id"))
-          .filter(col("vec_id") % 7 === 3))
-      ivfPqServeLoaded(s, d, dir)
-    }),
     // k19 under a metadata predicate (even labels only): the
     // eligibility set semi-joins the code list before ADC, so every
     // probe ranks its full top-k among the eligible vectors
@@ -1722,15 +1712,6 @@ object Similarity {
     // SQ8: training-free 8-bit compression, integer-exact ADC serve
     "k21_sq8" -> ((s, d) =>
       sqAdcOnNormalized(sharedNormalized(s, d), _ < NumProbes, TopK)),
-    // k24: the SQ8 index persisted (stats + codes parquet) and served
-    // back entirely from the loaded artifacts - the k15/p07 round
-    // trip on the third index family; shares k21's oracle verbatim
-    "k24_sq8_persisted" -> ((s, d) => {
-      val dir = IndexPaths.dir("sq_index", d)
-      val (stats, codes) = sqTrainIndex(sharedNormalized(s, d))
-      sqWriteIndex(stats, codes, dir)
-      sqServeLoaded(s, d, dir)
-    }),
     // recall@k of the combined index vs the exact baseline — the
     // number that tunes k19's nprobe/refine pair (its loss composes
     // the coarse gate's misses with PQ shortlist misses; k17 and k09
@@ -1799,19 +1780,6 @@ object Similarity {
     // memory-compressed search: per-subspace codebooks + ADC lookups,
     // served from the shared trained index
     "k08_pq_adc" -> ((s, d) => sharedPqServe(s, d)),
-    // k15: the PERSISTED-index serve path — train the k08 index, WRITE
-    // codes+codebooks to parquet, LOAD them back, and serve the probes
-    // from the loaded index only. A deployment trains once and serves
-    // many probe batches; this entry exercises that full round trip.
-    // Output (and oracle) are k08's verbatim: parquet round-trips the
-    // integer codes and double centroids bit-exactly, so persistence
-    // changes where the index lives, not what it answers.
-    "k15_pq_persisted" -> ((s, d) => {
-      val idxDir = IndexPaths.dir("pq_index", d)
-      val (codes, cbs) = sharedPqIndex(s, d)
-      pqWriteIndex(codes, cbs, idxDir)
-      pqServeLoaded(s, d, idxDir)
-    }),
     // k17: the nprobe RECALL SWEEP — recall@k of the trained IVF index
     // at nprobe ∈ {1, 2, 4} in one frame: the tuning curve a
     // deployment reads to pick its latency/recall operating point

@@ -33,6 +33,17 @@ object Tables {
   def documents(s: SparkSession, d: String): DataFrame = t(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = t(s, d, "embeddings")
 
+  /** `(dir, glob)` for a stream that drains table `name`. The table is
+    * a single parquet FILE in the sf dirs but a parquet DIRECTORY in
+    * ScaleGen output, and a stream's `pathGlobFilter` matches LEAF file
+    * names, so the drain points at whichever level holds the part
+    * files. */
+  def streamSource(sfDir: String, name: String): (String, String) = {
+    val src = new java.io.File(sfDir, s"$name.parquet")
+    if (src.isDirectory) (src.getPath, "*.parquet")
+    else (sfDir, s"$name.parquet")
+  }
+
   /** `events` with `ts` normalized to TimestampType (micros, UTC) whether
     * the reader surfaced nanos-as-long or a native timestamp. */
   def events(s: SparkSession, d: String): DataFrame = {

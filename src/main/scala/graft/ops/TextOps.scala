@@ -786,16 +786,8 @@ object TextOps {
     * Frozen-model scoring also makes the gate batch-independent (a
     * doc's score is a pure function of the published tables), which is
     * what lets the same serve run per micro-batch on the stream edge. */
-  def lmQualityPersisted(spark: SparkSession, dataDir: String): DataFrame = {
-    val docs = Tables.documents(spark, dataDir)
-    val dir = IndexPaths.dir("t22_lm", dataDir)
-    val (uni, bi) = lmTrain(docs.filter(col("doc_id") % 2 === 0),
-      "doc_id", "text")
-    lmWriteModel(uni, bi, dir)
-    val (lu, lb) = lmLoadModel(spark, dir)
-    lmScoreWith(docs.filter(col("doc_id") % 2 =!= 0), "doc_id", "text", lu, lb)
-      .withColumn("keep", col("logp2_q6") >= lit(LmKeepThresholdQ6))
-  }
+  def lmQualityPersisted(spark: SparkSession, dataDir: String): DataFrame =
+    queries("t22_lm_quality_persisted")(spark, dataDir)
 
   /** STUPID-BACKOFF LM score (t20) — Brants et al. 2007's web-scale
     * smoothing: score a bigram by its conditional frequency when the
@@ -1346,7 +1338,25 @@ object TextOps {
        |  FROM documents) w, bests""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def phases: IndexPaths.Phases = Map(
+    // t22: train the quality LM on the standing half, publish it, score
+    // the arriving half with the LOADED model (see lmQualityPersisted)
+    "t22_lm_quality_persisted" -> ((
+      (s, d) => {
+        val (uni, bi) = lmTrain(
+          Tables.documents(s, d).filter(col("doc_id") % 2 === 0),
+          "doc_id", "text")
+        lmWriteModel(uni, bi, IndexPaths.dir("t22_lm", d))
+      },
+      (s, d) => {
+        val (lu, lb) = lmLoadModel(s, IndexPaths.dir("t22_lm", d))
+        lmScoreWith(Tables.documents(s, d).filter(col("doc_id") % 2 =!= 0),
+          "doc_id", "text", lu, lb)
+          .withColumn("keep", col("logp2_q6") >= lit(LmKeepThresholdQ6))
+      })))
+
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    IndexPaths.oneShot(phases) ++ Map(
     "t21_bpe_train" -> ((s, d) =>
       bpeTrain(Tables.documents(s, d), "text")),
     "t23_bpe_encode" -> ((s, d) =>
@@ -1434,8 +1444,7 @@ object TextOps {
       withDedupAdjacent(Tables.documents(s, d), "text")
         .select("doc_id", "cleaned", "n_removed")),
     "t13_bigram_logprob" -> ((s, d) =>
-      bigramLogProb(Tables.documents(s, d), "doc_id", "text")),
-    "t22_lm_quality_persisted" -> ((s, d) => lmQualityPersisted(s, d)))
+      bigramLogProb(Tables.documents(s, d), "doc_id", "text")))
 
   def oracle: Map[String, String] = Map(
     // t21 — the 8 fixed merge rounds unrolled as generated CTEs; see

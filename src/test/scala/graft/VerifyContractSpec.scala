@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The catalog's structural contracts — the checks that make a
@@ -31,5 +32,26 @@ class VerifyContractSpec extends AnyFunSuite {
 
   test("phase decompositions decompose real catalog entries") {
     assert(SparkEntry.phases.keySet.subsetOf(SparkEntry.queries.keySet))
+  }
+
+  test("every persisted entry's build then serve equals its one-shot " +
+    "query at sf0.001") {
+    val spark = graft.etl.TestSpark.session
+    val sf = "/root/testdata/sf0.001"
+    def rows(df: DataFrame): Seq[String] =
+      df.collect().toSeq.map(_.toSeq.map {
+        case b: Array[Byte] => b.mkString("bytes(", ",", ")")
+        case v => String.valueOf(v)
+      }.mkString("|")).sorted
+    val differ = SparkEntry.phases.toSeq.sortBy(_._1).flatMap {
+      case (k, (build, serve)) =>
+        val oneShot = rows(SparkEntry.queries(k)(spark, sf))
+        build(spark, sf)
+        val phased = rows(serve(spark, sf))
+        if (phased == oneShot) None
+        else Some(s"$k: one-shot ${oneShot.size} rows, phases " +
+          s"${phased.size} rows")
+    }
+    assert(differ.isEmpty, differ.mkString("\n"))
   }
 }
