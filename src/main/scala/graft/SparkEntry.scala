@@ -100,104 +100,6 @@ object SparkEntry {
             Seq("doc_id"), "left_semi")
           ops.Sampling.splitAssign(good, "doc_id", ops.Sampling.DefaultSplits)
             .select(col("doc_id"), col("split"))
-        }),
-        // The r06/r07 seam at the STREAM edge on the CJK analyzer
-        // (r12), in the deployment shape: the STANDING (even) half is
-        // one segment built from the persisted token arrays (the
-        // nightly ingest product — no re-tokenize), and only the
-        // arriving (odd) half drains through the stream, each
-        // micro-batch's unigram+bigram postings appending as an
-        // immutable segment. The Chinese query serves from the
-        // exact-integer segment merge — equal to the one-shot r09
-        // build by r07's token-agnostic merge theorem (segments
-        // partition the corpus, postings concatenate, dfs/stats ADD),
-        // so r12 shares r08's oracle verbatim. The segment store is a
-        // FIXED per-(entry, dataDir) path CLEARED at entry start: this
-        // catalog entry runs without a stream checkpoint, so an
-        // un-cleared reused store would double its postings (the
-        // IndexStream scaladoc contract), while a fresh path per
-        // invocation would leak one full postings/lexicon/stats copy
-        // per timed bench iteration until JVM exit.
-        "r12_cjk_index_stream" -> ((s: SparkSession, d: String) => {
-          import org.apache.spark.sql.functions.col
-          val segDir = ops.IndexPaths.dir("r12_seg", d)
-          ops.IndexPaths.clear(segDir)
-          val standing = ops.Search.bm25BuildIndexTokens(
-            ops.Clusters.sharedCjkTerms(s, d)
-              .filter(col("doc_id") % 2 === 0), "doc_id", "terms")
-          standing._1.write.mode("append").parquet(s"$segDir/postings")
-          standing._2.write.mode("append").parquet(s"$segDir/lexicon")
-          standing._3.write.mode("append").parquet(s"$segDir/stats")
-          ops.IndexMeta.stamp(segDir)
-          val (srcDir, glob) = ops.Tables.streamSource(d, "documents")
-          graft.streaming.IndexStream.runAvailableNowCjk(s, srcDir, segDir,
-            textOf = graft.ops.TextOps.cjkFixture(col("text")),
-            glob = glob,
-            deltaFilter = col("doc_id") % 2 =!= 0)
-          val (p, l, st) =
-            graft.streaming.IndexStream.mergedIndexCjk(s, segDir)
-          ops.Search.bm25QueryIndex(p, l, st, terms = ops.Search.CjkQuery)
-        }),
-        // Segment COMPACTION with expunge-deletes (r15): the
-        // background half of the r12 stream edge — two segments are
-        // appended (the stream's shape), then compactCjk folds them
-        // into ONE segment while dropping the tombstoned docs'
-        // postings and correcting dfs/stats (Lucene's
-        // forceMergeDeletes), and the query serves from the compacted
-        // store with NO tombstone logic at all. The compacted store
-        // equals a fresh build over corpus-minus-tombstones exactly,
-        // so r15 shares r14's oracle text. Store cleared at entry
-        // start (the r12 clear-then-append discipline).
-        "r15_cjk_compacted_serve" -> ((s: SparkSession, d: String) => {
-          import org.apache.spark.sql.functions.col
-          val segDir = ops.IndexPaths.dir("r15_seg", d)
-          ops.IndexPaths.clear(segDir)
-          val toks = ops.Clusters.sharedCjkTerms(s, d)
-          Seq(col("doc_id") % 2 === 0, col("doc_id") % 2 =!= 0)
-            .foreach { pred =>
-              val (p, l, st) = ops.Search.bm25BuildIndexTokens(
-                toks.filter(pred), "doc_id", "terms")
-              p.write.mode("append").parquet(s"$segDir/postings")
-              l.write.mode("append").parquet(s"$segDir/lexicon")
-              st.write.mode("append").parquet(s"$segDir/stats")
-            }
-          ops.IndexMeta.stamp(segDir)
-          // dl-CARRYING tombstones (the compactCjk deployment remedy —
-          // every deletion knows its doc's length): the removed stats
-          // come straight off this table, skipping the extraction pass
-          // over the merged postings; dl = size(terms) is exactly the
-          // dl the build wrote, read from the session's checkpointed
-          // term arrays. Same ids as harnessTombstones (≡ 2 mod 5).
-          graft.streaming.IndexStream.compactCjk(s, segDir,
-            Some(toks.filter(col("doc_id") % 5 === 2)
-              .select(col("doc_id"),
-                org.apache.spark.sql.functions.size(col("terms"))
-                  .cast("long").as("dl"))))
-          val (p, l, st) =
-            graft.streaming.IndexStream.mergedIndexCjk(s, segDir)
-          ops.Search.bm25QueryIndex(p, l, st, terms = ops.Search.CjkQuery)
-        }),
-        // The decontamination family's stream edge (d27): corpus
-        // vectors drain as delta micro-batches, each checked against
-        // the STANDING broadcast benchmark with d25's exact cosine
-        // sweep and appended to the audit sink — the ingest-time gate
-        // a real pipeline runs. Zero streaming state (a verdict
-        // depends only on (vector, benchmark)), so the union over
-        // batches equals one-shot d25 identically and d27 shares its
-        // oracle verbatim. Sink cleared at entry start (the r12
-        // clear-then-append discipline — this entry runs without a
-        // stream checkpoint).
-        "d27_semantic_decon_stream" -> ((s: SparkSession, d: String) => {
-          import org.apache.spark.sql.functions.col
-          val out = ops.IndexPaths.dir("d27_out", d)
-          ops.IndexPaths.clear(out)
-          val bench = ops.Tables.embeddings(s, d)
-            .filter(col("vec_id") % 10 === 0)
-          val (srcDir, glob) = ops.Tables.streamSource(d, "embeddings")
-          graft.streaming.DeconStream.runAvailableNow(s, srcDir, bench,
-            out, threshold = 0.45,
-            deltaFilter = col("vec_id") % 10 =!= 0, glob = glob)
-          graft.streaming.Drain.readSink(s, out)
         }))
 
   /** Build/serve decomposition of the persisted catalog entries —
@@ -229,7 +131,109 @@ object SparkEntry {
         graft.streaming.Drain.DocumentsSchema, "doc_id", setDir,
         deltaFilter = f, glob = glob)
     }
+    // one index segment (postings/lexicon/stats) appended to `segDir`
+    def appendSegment(segDir: String,
+                      seg: (DataFrame, DataFrame, DataFrame)): Unit = {
+      seg._1.write.mode("append").parquet(s"$segDir/postings")
+      seg._2.write.mode("append").parquet(s"$segDir/lexicon")
+      seg._3.write.mode("append").parquet(s"$segDir/stats")
+    }
+    // the Chinese query over a CJK segment store's merged index
+    def serveCjk(tag: String): (SparkSession, String) => DataFrame =
+      (s, d) => {
+        val (p, l, st) = graft.streaming.IndexStream.mergedIndexCjk(s,
+          ops.IndexPaths.dir(tag, d))
+        ops.Search.bm25QueryIndex(p, l, st, terms = ops.Search.CjkQuery)
+      }
     Map(
+      // The r06/r07 seam at the STREAM edge on the CJK analyzer
+      // (r12), in the deployment shape: the STANDING (even) half is
+      // one segment built from the persisted token arrays (the
+      // nightly ingest product — no re-tokenize), and only the
+      // arriving (odd) half drains through the stream, each
+      // micro-batch's unigram+bigram postings appending as an
+      // immutable segment. The Chinese query serves from the
+      // exact-integer segment merge — equal to the one-shot r09
+      // build by r07's token-agnostic merge theorem (segments
+      // partition the corpus, postings concatenate, dfs/stats ADD),
+      // so r12 shares r08's oracle verbatim. The segment store is a
+      // FIXED per-(entry, dataDir) path CLEARED at build start: this
+      // catalog entry runs without a stream checkpoint, so an
+      // un-cleared reused store would double its postings (the
+      // IndexStream scaladoc contract), while a fresh path per
+      // invocation would leak one full postings/lexicon/stats copy
+      // per timed bench iteration until JVM exit.
+      "r12_cjk_index_stream" -> ((
+        (s, d) => {
+          val segDir = ops.IndexPaths.dir("r12_seg", d)
+          ops.IndexPaths.clear(segDir)
+          appendSegment(segDir, ops.Search.bm25BuildIndexTokens(
+            ops.Clusters.sharedCjkTerms(s, d)
+              .filter(col("doc_id") % 2 === 0), "doc_id", "terms"))
+          ops.IndexMeta.stamp(segDir)
+          val (srcDir, glob) = ops.Tables.streamSource(d, "documents")
+          graft.streaming.IndexStream.runAvailableNowCjk(s, srcDir, segDir,
+            textOf = graft.ops.TextOps.cjkFixture(col("text")),
+            glob = glob,
+            deltaFilter = col("doc_id") % 2 =!= 0)
+        },
+        serveCjk("r12_seg"))),
+      // Segment COMPACTION with expunge-deletes (r15): the
+      // background half of the r12 stream edge — two segments are
+      // appended (the stream's shape), then compactCjk folds them
+      // into ONE segment while dropping the tombstoned docs'
+      // postings and correcting dfs/stats (Lucene's
+      // forceMergeDeletes), and the query serves from the compacted
+      // store with NO tombstone logic at all. The compacted store
+      // equals a fresh build over corpus-minus-tombstones exactly,
+      // so r15 shares r14's oracle text. Store cleared at build
+      // start (the r12 clear-then-append discipline).
+      "r15_cjk_compacted_serve" -> ((
+        (s, d) => {
+          val segDir = ops.IndexPaths.dir("r15_seg", d)
+          ops.IndexPaths.clear(segDir)
+          val toks = ops.Clusters.sharedCjkTerms(s, d)
+          Seq(col("doc_id") % 2 === 0, col("doc_id") % 2 =!= 0)
+            .foreach { pred =>
+              appendSegment(segDir, ops.Search.bm25BuildIndexTokens(
+                toks.filter(pred), "doc_id", "terms"))
+            }
+          ops.IndexMeta.stamp(segDir)
+          // dl-CARRYING tombstones (the compactCjk deployment remedy —
+          // every deletion knows its doc's length): the removed stats
+          // come straight off this table, skipping the extraction pass
+          // over the merged postings; dl = size(terms) is exactly the
+          // dl the build wrote, read from the session's checkpointed
+          // term arrays. Same ids as harnessTombstones (≡ 2 mod 5).
+          graft.streaming.IndexStream.compactCjk(s, segDir,
+            Some(toks.filter(col("doc_id") % 5 === 2)
+              .select(col("doc_id"),
+                org.apache.spark.sql.functions.size(col("terms"))
+                  .cast("long").as("dl"))))
+        },
+        serveCjk("r15_seg"))),
+      // The decontamination family's stream edge (d27): corpus
+      // vectors drain as delta micro-batches, each checked against
+      // the STANDING broadcast benchmark with d25's exact cosine
+      // sweep and appended to the audit sink — the ingest-time gate
+      // a real pipeline runs. Zero streaming state (a verdict
+      // depends only on (vector, benchmark)), so the union over
+      // batches equals one-shot d25 identically and d27 shares its
+      // oracle verbatim. Sink cleared at build start (the r12
+      // clear-then-append discipline — this entry runs without a
+      // stream checkpoint); the serve reads the audit sink back.
+      "d27_semantic_decon_stream" -> ((
+        (s, d) => {
+          val out = ops.IndexPaths.dir("d27_out", d)
+          ops.IndexPaths.clear(out)
+          val (srcDir, glob) = ops.Tables.streamSource(d, "embeddings")
+          graft.streaming.DeconStream.runAvailableNow(s, srcDir,
+            ops.Tables.embeddings(s, d).filter(col("vec_id") % 10 === 0),
+            out, threshold = 0.45,
+            deltaFilter = col("vec_id") % 10 =!= 0, glob = glob)
+        },
+        (s, d) => graft.streaming.Drain.readSink(s,
+          ops.IndexPaths.dir("d27_out", d)))),
       // The NIGHTLY INCREMENTAL MAINTENANCE job end-to-end: PUBLISH
       // the standing corpus's index + verify arrays + component
       // labels (Dedup.minhashPublishStanding), then serve the
@@ -323,8 +327,8 @@ object SparkEntry {
       // unions them), serve CORRECTED against the accumulated set
       // between drains, let the deletes-ratio merge policy DECLINE
       // while the set is a trickle (1% of the store) and FIRE once
-      // it crosses (20%), expunge-compact (cjkCompactStore under the
-      // poison-stamp swap), RETIRE the set, and serve clean. The
+      // it crosses (20%), expunge-compact (StoreSwap.compactIfNeeded
+      // under the poison-stamp swap), RETIRE the set, and serve clean. The
       // final serve equals publish-over-remainder (d33's rebuild-
       // equivalence contract), so p12 shares d33's oracle text. The
       // decline/fire decisions are require()d — a policy regression
@@ -339,7 +343,8 @@ object SparkEntry {
           // tranche A: a trickle — ids ≡ 2 mod 100 (1% of the evens)
           drainDeletes(s, d, s"$setDir/a", col("doc_id") % 100 === 2)
           val trickle = graft.streaming.Drain.readSink(s, setDir)
-          require(!ops.Dedup.cjkCompactIfNeeded(s, idxDir, trickle),
+          require(!ops.StoreSwap.compactIfNeeded(s, ops.Dedup.cjkStore(idxDir),
+            trickle),
             "p12: a 1% delete trickle must not trigger a store rebuild")
           // the between-compactions phase: the tombstone serve corrects
           // against the accumulated set (materialized — this cost IS
@@ -350,7 +355,7 @@ object SparkEntry {
           // tranche B: the rest of the ≡ 2 mod 5 takedown set arrives
           drainDeletes(s, d, s"$setDir/b",
             col("doc_id") % 5 === 2 && col("doc_id") % 100 =!= 2)
-          require(ops.Dedup.cjkCompactIfNeeded(s, idxDir,
+          require(ops.StoreSwap.compactIfNeeded(s, ops.Dedup.cjkStore(idxDir),
             graft.streaming.Drain.readSink(s, setDir)),
             "p12: the accumulated set must cross the ratio and compact")
           // the set retires — the compacted store needs nothing from it

@@ -600,27 +600,28 @@ object Dedup {
                                     n: Int = CjkCharShingleN,
                                     maxBandDocs: Int = MaxBandDocs): DataFrame = {
     IndexMeta.check(dir)
-    val ts = broadcast(tombstones.select(col("doc_id")).distinct())
     minhashServeDeltaFrom(
-      spark.read.parquet(s"$dir/hashes")
-        .join(ts, Seq("doc_id"), "left_anti")
-        .withColumnRenamed("doc_id", "corpus_id"),
-      spark.read.parquet(s"$dir/bands")
-        .join(ts, Seq("doc_id"), "left_anti")
-        .withColumnRenamed("doc_id", "corpus_id"),
+      StoreSwap.dropDead(spark.read.parquet(s"$dir/hashes"), "doc_id",
+        tombstones).withColumnRenamed("doc_id", "corpus_id"),
+      StoreSwap.dropDead(spark.read.parquet(s"$dir/bands"), "doc_id",
+        tombstones).withColumnRenamed("doc_id", "corpus_id"),
       deltaToks.select(col("doc_id"),
         concat_ws(" ", col("toks")).as("_script_text")),
       "doc_id", "_script_text", threshold, n, maxBandDocs)
   }
 
-  /** EXPUNGE-DELETES compaction of a d21-format near-dup store (d33) —
-    * the r15 move generalized to the second tombstoned family: d29's
-    * serve anti-joins its delete set on every query, so serve cost
-    * degrades monotonically as deletions accrue; this one pass drops
-    * the tombstoned docs' rows from all three persisted tables
-    * (signatures, bands, hashes), rewrites them beside the live store,
+  /** A d21-format near-dup store as [[StoreSwap]] compacts it (d33's
+    * EXPUNGE-DELETES) — the r15 move generalized to the second
+    * tombstoned family: d29's serve anti-joins its delete set on every
+    * query, so serve cost degrades monotonically as deletions accrue;
+    * this one pass drops the tombstoned docs' rows from all three
+    * persisted tables (signatures, bands, hashes), rewrites them beside
+    * the live store,
     * and swaps under the [[IndexMeta]] stamp-off/stamp-on torn-write
-    * contract ([[StoreSwap]]) — after which the tombstone set RETIRES.
+    * contract ([[StoreSwap.compact]]) — after which the tombstone set
+    * RETIRES. [[StoreSwap.compactIfNeeded]] decides on the signatures'
+    * tombstoned share: below it the d29 serve-time anti-join is the
+    * cheaper deal and the store is left untouched.
     *
     * Unlike the BM25 store there is NOTHING to correct: every store
     * row is a pure per-doc function (a doc's signature, band keys, and
@@ -635,41 +636,9 @@ object Dedup {
     * with the deletes broadcast — corpus-linear I/O, zero pair work,
     * the once-per-accumulation cost that keeps every subsequent serve
     * free of tombstone logic. */
-  /** [[cjkCompactStore]] behind the deletes-ratio merge policy
-    * ([[StoreSwap.deletesExceed]]): compact only when the tombstone
-    * set has grown past `maxDeleteRatio` of the store's docs — below
-    * that, the d29 serve-time anti-join is the cheaper deal and the
-    * store is left untouched. Returns whether it compacted, so the
-    * caller knows when the tombstone set can retire — the decision
-    * loop a nightly maintenance job actually runs (the maxSegments
-    * trigger's sibling on the delete axis; both are one driver-side
-    * count, the k-means convergence-counter precedent). */
-  def cjkCompactIfNeeded(spark: SparkSession, dir: String,
-                         tombstones: DataFrame,
-                         maxDeleteRatio: Double = 0.1): Boolean = {
-    IndexMeta.check(dir)
-    val (dead, total) = StoreSwap.deadAndTotal(
-      spark.read.parquet(s"$dir/signatures"), "doc_id", tombstones)
-    val go = StoreSwap.deletesExceed(dead, total, maxDeleteRatio)
-    if (go) cjkCompactStore(spark, dir, tombstones)
-    go
-  }
-
-  def cjkCompactStore(spark: SparkSession, dir: String,
-                      tombstones: DataFrame): Unit = {
-    // refuse to compact a torn or stale store — compaction would
-    // launder the tear under a fresh stamp
-    IndexMeta.check(dir)
-    val ts = broadcast(tombstones.select(col("doc_id")).distinct())
-    val subs = Seq("signatures", "bands", "hashes")
-    val tmp = StoreSwap.freshScratch(dir)
-    subs.foreach { sub =>
-      spark.read.parquet(s"$dir/$sub")
-        .join(ts, Seq("doc_id"), "left_anti")
-        .write.mode("overwrite").parquet(s"$tmp/$sub")
-    }
-    StoreSwap.swapSubtables(dir, subs, TextOps.tokenizerVersion)
-  }
+  def cjkStore(dir: String): StoreSwap.Store =
+    StoreSwap.Store(dir, TextOps.tokenizerVersion, "doc_id",
+      Seq("signatures", "bands", "hashes"))
 
   /** MinHash-ESTIMATED near-dup pairs (d15): band candidates scored by
     * signature agreement alone — `est_jaccard = matching components /
@@ -1385,17 +1354,21 @@ object Dedup {
     spark.read.parquet(s"$dir/buckets")
   }
 
-  /** EXPUNGE-DELETES compaction of a d32 bucket store (d35) — the
-    * d33/m13/k28 move applied to the newest store family, closing the
-    * one delete lifecycle the round-18 sweep left open: d34's serve
-    * anti-joins its delete set off the loaded buckets on EVERY query,
-    * so serve cost degrades monotonically as deletions accrue, and
+  /** A d32 bucket store as [[StoreSwap]] compacts it (d35's
+    * EXPUNGE-DELETES) — the d33/m13/k28 move applied to the newest
+    * store family, closing the one delete lifecycle the round-18 sweep
+    * left open: d34's serve anti-joins its delete set off the loaded
+    * buckets on EVERY query, so serve cost degrades monotonically as
+    * deletions accrue, and
     * [[semanticBucketsAppend]]'s nightly mode("append") batches
     * fragment the parquet footer-by-footer. This one pass drops the
     * tombstoned ids' bucket rows, rewrites the table beside the live
     * store (coalescing the append fragments as a side effect of the
-    * rewrite), and swaps under the [[StoreSwap]] poison-stamp
+    * rewrite), and swaps under the [[StoreSwap.compact]] poison-stamp
     * contract — after which the tombstone set RETIRES.
+    * [[StoreSwap.compactIfNeeded]] decides on the tombstoned bucket
+    * rows' share: below it, d34's serve-time anti-join is the cheaper
+    * deal.
     *
     * Nothing to correct: a bucket row is a pure per-vector function of
     * the fixed plane sets (the same argument as d33's per-doc store
@@ -1408,44 +1381,12 @@ object Dedup {
     * Cost shape: ONE broadcast anti-join over the narrow
     * `(vec_id, bk0…bk{sets−1})` table — corpus-linear I/O on the
     * store's smallest artifact, zero re-bucketing, zero vector reads. */
-  def semanticBucketsCompact(spark: SparkSession, dir: String,
-                             tombstones: DataFrame,
-                             planes: Int = Similarity.NumPlanes,
-                             sets: Int = NumPlaneSets,
-                             dims: Int = 64): Unit = {
-    val v = hplshVersion(planes, sets, dims)
-    // refuse to compact a torn, stale, or poison-stamped store —
-    // compaction would launder the tear under a fresh stamp
-    IndexMeta.checkVersion(dir, v)
-    val ts = broadcast(tombstones.select(col("vec_id")).distinct())
-    val tmp = StoreSwap.freshScratch(dir)
-    spark.read.parquet(s"$dir/buckets")
-      .join(ts, Seq("vec_id"), "left_anti")
-      .write.mode("overwrite").parquet(s"$tmp/buckets")
-    StoreSwap.swapSubtables(dir, Seq("buckets"), v)
-  }
-
-  /** [[semanticBucketsCompact]] behind the deletes-ratio merge policy
-    * ([[StoreSwap.deletesExceed]]): compact only when the tombstoned
-    * bucket rows have grown past `maxDeleteRatio` of the store — below
-    * that, d34's serve-time anti-join is the cheaper deal. Returns
-    * whether it compacted (true ⇒ the tombstone set retires), the
-    * decision a nightly maintenance job loops on — the
-    * cjk/frame/ivfPq `compactIfNeeded` contract on the fourth store
-    * family. */
-  def semanticBucketsCompactIfNeeded(spark: SparkSession, dir: String,
-                                     tombstones: DataFrame,
-                                     maxDeleteRatio: Double = 0.1,
-                                     planes: Int = Similarity.NumPlanes,
-                                     sets: Int = NumPlaneSets,
-                                     dims: Int = 64): Boolean = {
-    IndexMeta.checkVersion(dir, hplshVersion(planes, sets, dims))
-    val (dead, total) = StoreSwap.deadAndTotal(
-      spark.read.parquet(s"$dir/buckets"), "vec_id", tombstones)
-    val go = StoreSwap.deletesExceed(dead, total, maxDeleteRatio)
-    if (go) semanticBucketsCompact(spark, dir, tombstones, planes, sets, dims)
-    go
-  }
+  def semanticBucketsStore(dir: String,
+                           planes: Int = Similarity.NumPlanes,
+                           sets: Int = NumPlaneSets,
+                           dims: Int = 64): StoreSwap.Store =
+    StoreSwap.Store(dir, hplshVersion(planes, sets, dims), "vec_id",
+      Seq("buckets"))
 
   /** [[semanticDecontaminateLshMulti]] served FROM the persisted
     * bucket store (d32), optionally under a STANDING DELETE SET (d34,
@@ -1471,9 +1412,7 @@ object Dedup {
                                      dims: Int = 64): DataFrame = {
     graft.functions.VectorFunctions.register(corpus.sparkSession)
     val cb0 = semanticBucketsLoad(spark, dir, planes, sets, dims)
-    val cb = tombstones.fold(cb0)(t =>
-      cb0.join(broadcast(t.select(col("vec_id")).distinct()),
-        Seq("vec_id"), "left_anti"))
+    val cb = tombstones.fold(cb0)(StoreSwap.dropDead(cb0, "vec_id", _))
     semanticMultiProbeServe(cb, corpus, probe, id, vec, threshold,
       planes, sets, dims)
   }
@@ -2029,14 +1968,15 @@ object Dedup {
           IndexPaths.dir("d29_index", d), deadDocs(s, d)))),
       // d33: d29's delete problem solved at REBUILD time — publish the
       // standing (even) store, EXPUNGE the tombstoned docs' rows from
-      // all three tables (cjkCompactStore: anti-join + stamp-swap, the
+      // all three tables (StoreSwap.compact: anti-join + stamp-swap, the
       // r15 move on the near-dup family), then serve the delta with NO
       // tombstone logic at all. Compacted store ≡ publish-over-remainder
       // bit-for-bit (per-doc pure rows), so d33 shares d29's oracle.
       "d33_cjk_compacted_serve" -> ((
         (s, d) => {
           publishEven("d33_index")(s, d)
-          cjkCompactStore(s, IndexPaths.dir("d33_index", d), deadDocs(s, d))
+          StoreSwap.compact(s, Seq(cjkStore(IndexPaths.dir("d33_index", d))),
+            deadDocs(s, d))
         },
         (s, d) => cjkServeDeltaTokens(s, toks(s, d, col("doc_id") % 2 =!= 0),
           0.6, IndexPaths.dir("d33_index", d)))),
@@ -2057,14 +1997,15 @@ object Dedup {
         (s, d) => decon(s, d, "d34_index", Some(deadVecs(s, d))))),
       // d35: d34's delete problem solved at REBUILD time — publish the
       // bucket store, EXPUNGE the tombstoned ids' bucket rows
-      // (semanticBucketsCompact: one anti-join + poison-stamp swap, the
+      // (StoreSwap.compact: one anti-join + poison-stamp swap, the
       // d33/m13/k28 move on the semantic family), then serve with NO
       // tombstone logic at all. Compacted store ≡ publish-over-remainder
       // bit-for-bit (per-vector pure rows), so d35 shares d34's oracle.
       "d35_semantic_compacted_serve" -> ((
         (s, d) => {
           publishVecs("d35_index")(s, d)
-          semanticBucketsCompact(s, IndexPaths.dir("d35_index", d),
+          StoreSwap.compact(s,
+            Seq(semanticBucketsStore(IndexPaths.dir("d35_index", d))),
             deadVecs(s, d))
         },
         (s, d) => decon(s, d, "d35_index"))),

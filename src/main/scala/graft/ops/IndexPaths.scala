@@ -39,30 +39,19 @@ object IndexPaths {
     // deleteOnExit only removes EMPTY directories, and this base fills
     // with parquet index trees — a recursive shutdown hook is what
     // actually returns the scratch space when the JVM exits cleanly
-    // (an OS tmp reaper remains the backstop for hard kills)
-    Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRec(p.toFile)))
+    // (an OS tmp reaper remains the backstop for hard kills). The sweep
+    // is best-effort: another shutdown hook may still be touching the
+    // tree on abnormal exit. NonFatal only: tolerating IO races must
+    // not swallow VirtualMachineError, and an interrupt (fatal to the
+    // sweep, not NonFatal-matched) re-sets the thread's flag so the
+    // JVM's shutdown sequencing still observes it
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      try StoreSwap.deleteTree(p.toFile)
+      catch {
+        case _: InterruptedException => Thread.currentThread().interrupt()
+        case scala.util.control.NonFatal(_) => ()
+      }))
     p.toFile
-  }
-
-  private def deleteRec(f: java.io.File): Unit = {
-    // never follow a directory symlink — delete the link itself, not
-    // its target's contents — and tolerate per-file failures (another
-    // shutdown hook may still be touching the tree on abnormal exit;
-    // the OS tmp reaper backstops anything left behind)
-    // NonFatal only: tolerating IO races must not swallow
-    // VirtualMachineError, and an interrupt (fatal to the sweep, not
-    // NonFatal-matched) re-sets the thread's flag so the JVM's
-    // shutdown sequencing still observes it
-    try {
-      if (!java.nio.file.Files.isSymbolicLink(f.toPath)) {
-        val kids = f.listFiles()
-        if (kids != null) kids.foreach(deleteRec)
-      }
-      f.delete(): Unit
-    } catch {
-      case _: InterruptedException => Thread.currentThread().interrupt()
-      case scala.util.control.NonFatal(_) => ()
-    }
   }
 
   /** Scratch index directory for `tag` over `dataDir`, stable within
@@ -82,14 +71,10 @@ object IndexPaths {
     val f = new java.io.File(dirPath)
     require(f.toPath.normalize.startsWith(base.toPath.normalize),
       s"IndexPaths.clear refuses non-scratch path $dirPath")
-    deleteRec(f)
-    // deleteRec is best-effort by design (it doubles as the shutdown
-    // sweep), but clear-then-append callers depend on the clear for
-    // CORRECTNESS: a leftover file would let the subsequent appends
-    // double the store's rows silently. Fail loudly instead.
-    if (f.exists())
-      throw new IllegalStateException(
-        s"IndexPaths.clear could not fully remove $dirPath — appending " +
-          "into a partially cleared store would silently double its rows")
+    // clear-then-append callers depend on the clear for CORRECTNESS: a
+    // leftover file would let the subsequent appends double the
+    // store's rows silently, so the clear is verified
+    StoreSwap.clearTree(f, "appending into a partially cleared store " +
+      "would silently double its rows")
   }
 }

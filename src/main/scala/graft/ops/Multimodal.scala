@@ -329,59 +329,22 @@ object Multimodal {
     s"graft-frame-1 codec=stub-ascii frame_bytes=$FrameBytes " +
       "hash=graft_polyhash"
 
-  /** EXPUNGE-DELETES compaction of a frame-signature store (m13) — the
-    * r15 move on the media family: m12's serve anti-joins its delete
-    * set per query forever, so serve cost degrades as deletions
-    * accrue; this one pass drops the tombstoned items' signature rows,
-    * rewrites the store beside itself, and swaps under the
-    * [[IndexMeta]] stamp-off/stamp-on contract ([[StoreSwap]]) — after
-    * which the tombstone set RETIRES. Nothing to correct: every store
-    * row is a pure per-item function (frames of the item's own blob),
-    * and every global readout input (boilerplate list, set sizes) is
-    * recomputed from the store at serve time — so the compacted store
-    * equals `fingerprint(corpus minus tombstones)` bit-for-bit and
-    * `compact → serve` equals m12's tombstone serve. One broadcast
-    * anti-join over the signature rows; blobs are never touched. */
-  def frameCompactStore(spark: SparkSession, dir: String,
-                        tombstones: DataFrame): Unit = {
-    // frameLoadStore checks the stamp — compacting a torn or stale
-    // store would launder the tear under a fresh stamp
-    val live = frameLoadStore(spark, dir)
-      .join(broadcast(tombstones.select(col("doc_id")).distinct()),
-        Seq("doc_id"), "left_anti")
-    val tmp = StoreSwap.freshScratch(dir)
-    live.write.mode("overwrite").parquet(tmp)
-    StoreSwap.swapDir(dir, frameVersion)
-  }
-
-  /** m10 — the persisted-store round trip: fingerprint the corpus,
-    * WRITE the frame store, and serve the m08 near-dup pairs entirely
-    * from the LOADED signatures (no blob re-decode on the serve
-    * path). */
-  def persistedNearDup(s: SparkSession, d: String): DataFrame =
-    queries("m10_frame_store")(s, d)
-
-  /** p08 — the NIGHTLY MEDIA MAINTENANCE loop end-to-end (p05's shape
-    * on the media seam): the standing (even) corpus's frame
-    * signatures are published to the store and loaded back — the only
-    * blob decode the standing side ever pays happened at its own
-    * ingest — while the arriving (odd) delta batch is fingerprinted
-    * fresh. The df cap and set sizes are computed once over
-    * standing ∪ delta (global corpus properties, hash-table-sized
-    * work), then the full pair set is generated as its three parity
-    * classes against those same global sets: the standing cluster
-    * labels come from the PUBLISHED copy when the df-drift guard
-    * proves them still exact, from a recompute otherwise (see
-    * [[mediaServeFrom]]), and the cross + delta-delta pairs merge in
-    * by star contraction (c19). The store saves the DECODE — the
-    * standing corpus's only blob fingerprinting happened at its own
-    * ingest — and, when no standing hash crossed the df cap, the
-    * standing-standing pairing too. Pair classes partition m08's
-    * pair set and each pair's Jaccard uses the same global sets ⇒
-    * the merged labels equal the one-shot m09 clustering exactly,
-    * whichever branch the guard takes. */
-  def mediaMaintenance(s: SparkSession, d: String): DataFrame =
-    queries("p08_media_maintenance")(s, d)
+  /** The frame-signature store as [[StoreSwap]] compacts it (m13's
+    * EXPUNGE-DELETES) — the r15 move on the media family: m12's serve
+    * anti-joins its delete set per query forever, so serve cost
+    * degrades as deletions accrue; one [[StoreSwap.compact]] pass drops
+    * the tombstoned items' signature rows, rewrites the store beside
+    * itself, and swaps under the [[IndexMeta]] stamp-off/stamp-on
+    * contract — after which the tombstone set RETIRES. Nothing to
+    * correct: every store row is a pure per-item function (frames of
+    * the item's own blob), and every global readout input (boilerplate
+    * list, set sizes) is recomputed from the store at serve time — so
+    * the compacted store equals `fingerprint(corpus minus tombstones)`
+    * bit-for-bit and `compact → serve` equals m12's tombstone serve.
+    * One broadcast anti-join over the signature rows; blobs are never
+    * touched. The rows live at the store root (no subtables). */
+  def frameStore(dir: String): StoreSwap.Store =
+    StoreSwap.Store(dir, frameVersion, "doc_id", Nil)
 
   /** p08's build half: fingerprint the standing (even) corpus, publish
     * its signatures, AND publish its cluster labels — the nightly
@@ -420,8 +383,8 @@ object Multimodal {
     s"$frameVersion labels-1 floor=$VideoJacFloorQ6 df=$MaxFrameDf"
 
   /** p08's serve half: standing signatures from the store, delta
-    * fingerprinted fresh, labels rolled forward (see
-    * [[mediaMaintenance]] and [[mediaServeFrom]]). */
+    * fingerprinted fresh, labels rolled forward (see p08's `phases`
+    * entry and [[mediaServeFrom]]). */
   def mediaServeMerged(s: SparkSession, d: String): DataFrame =
     mediaServeFrom(
       frameLoadStore(s, IndexPaths.dir("p08_frames", d)),
@@ -456,7 +419,7 @@ object Multimodal {
     * pair join (the largest pair class) and its CC fixpoint. When a
     * crossover exists, the serve falls back to the full recompute.
     * Both branches produce exactly the one-shot m09 labels (the
-    * pair-class partition argument in [[mediaMaintenance]]), so p08's
+    * pair-class partition argument on p08's `phases` entry), so p08's
     * oracle is unchanged; the guard-pass branch is additionally
     * pinned by the synthetic both-branches spec in RoundOpsSpec.
     *
@@ -605,38 +568,6 @@ object Multimodal {
         col("jac_q6"))
   }
 
-  /** m11 — the stream-edge readout as a catalog entry, in the harness
-    * wiring (standing = even ids' PERSISTED store, delta = odd ids,
-    * fingerprinted fresh): publish the standing signatures, load them
-    * back, and score the whole delta against the loaded copy — the
-    * one-shot equivalent of what [[graft.streaming.MediaStream]] does
-    * micro-batch by micro-batch. */
-  def streamEdgeNearDup(s: SparkSession, d: String): DataFrame =
-    queries("m11_stream_neardup")(s, d)
-
-  /** m12 — [[streamEdgeNearDup]] under a STANDING DELETE SET: the
-    * r13/k25/d29 tombstone move on the media store, completing the
-    * symmetry across all four persisted families. A taken-down media
-    * item must stop matching arrivals NOW, not at the next nightly
-    * p08 republish; the broadcast tombstone set anti-joins the loaded
-    * store BEFORE the readout, and because every global input of
-    * [[crossNearDupVsStore]] (boilerplate list, standing set sizes)
-    * is a pure function of the store frame it receives, the result
-    * equals publish(standing minus tombstones) + serve exactly — the
-    * family's rebuild-equivalence contract, which is what lets the
-    * oracle be m11's text with the tombstone predicate folded into
-    * the standing side. */
-  def tombstonedNearDup(s: SparkSession, d: String): DataFrame = {
-    val dir = IndexPaths.dir("m12_frames", d)
-    frameWriteStore(framesOf(Tables.documents(s, d)
-      .filter(col("doc_id") % 2 === 0)), dir)
-    val dead = Tables.documents(s, d).filter(col("doc_id") % 5 === 2)
-      .select(col("doc_id"))
-    crossNearDupVsStore(
-      frameLoadStore(s, dir).join(broadcast(dead), Seq("doc_id"), "left_anti"),
-      framesOf(Tables.documents(s, d).filter(col("doc_id") % 2 =!= 0)))
-  }
-
   def phases: IndexPaths.Phases = {
     // harness wiring: standing = even ids, delta = odd ids, each
     // fingerprinted from its documents blob
@@ -650,18 +581,34 @@ object Multimodal {
       (s, d) => crossNearDupVsStore(
         store(frameLoadStore(s, IndexPaths.dir(tag, d))),
         frames(s, d, col("doc_id") % 2 =!= 0))
+    def dead(s: SparkSession, d: String) =
+      Tables.documents(s, d).filter(col("doc_id") % 5 === 2)
     Map(
-      // m13 — m12's deletes EXPUNGED at rebuild time (the twin of
-      // tombstonedNearDup): publish the standing store, COMPACT the
-      // tombstoned items out, retire the tombstone set, and serve the
-      // delta readout with no tombstone logic at all. Shares m12's
-      // oracle (compact → serve ≡ publish-over-remainder + serve).
+      // m12 — m11 under a STANDING DELETE SET: the r13/k25/d29
+      // tombstone move on the media store, completing the symmetry
+      // across all four persisted families. A taken-down media item
+      // must stop matching arrivals NOW, not at the next nightly p08
+      // republish; the broadcast tombstone set anti-joins the loaded
+      // store BEFORE the readout, and because every global input of
+      // [[crossNearDupVsStore]] (boilerplate list, standing set sizes)
+      // is a pure function of the store frame it receives, the result
+      // equals publish(standing minus tombstones) + serve exactly — the
+      // family's rebuild-equivalence contract, which is what lets the
+      // oracle be m11's text with the tombstone predicate folded into
+      // the standing side.
+      "m12_tombstone_serve" -> ((publishEven("m12_frames"),
+        (s, d) => serveOdd("m12_frames",
+          StoreSwap.dropDead(_, "doc_id", dead(s, d)))(s, d))),
+      // m13 — m12's deletes EXPUNGED at rebuild time: publish the
+      // standing store, COMPACT the tombstoned items out, retire the
+      // tombstone set, and serve the delta readout with no tombstone
+      // logic at all. Shares m12's oracle (compact → serve ≡
+      // publish-over-remainder + serve).
       "m13_compacted_serve" -> ((
         (s, d) => {
           publishEven("m13_frames")(s, d)
-          frameCompactStore(s, IndexPaths.dir("m13_frames", d),
-            Tables.documents(s, d).filter(col("doc_id") % 5 === 2)
-              .select(col("doc_id")))
+          StoreSwap.compact(s, Seq(frameStore(IndexPaths.dir("m13_frames", d))),
+            dead(s, d))
         },
         serveOdd("m13_frames"))),
       // m14 — m12 with the delete set arriving AS A STREAM (the r16
@@ -683,39 +630,54 @@ object Multimodal {
             graft.streaming.Drain.DocumentsSchema, "doc_id", setDir,
             deltaFilter = col("doc_id") % 5 === 2, glob = glob)
         },
-        (s, d) => {
-          val dead = graft.streaming.Drain.readSink(s,
-            IndexPaths.dir("m14_tombstones", d)).select(col("doc_id")).distinct()
-          serveOdd("m14_frames",
-            _.join(broadcast(dead), Seq("doc_id"), "left_anti"))(s, d)
-        })),
-      // m10: the frame-signature store round trip — fingerprint once,
-      // persist, serve the near-dup pairs from the LOADED store (no
-      // blob re-decode); shares m08's oracle verbatim
+        (s, d) => serveOdd("m14_frames", StoreSwap.dropDead(_, "doc_id",
+          graft.streaming.Drain.readSink(s,
+            IndexPaths.dir("m14_tombstones", d))))(s, d))),
+      // m10 — the persisted-store round trip: fingerprint the corpus,
+      // WRITE the frame store, and serve the m08 near-dup pairs
+      // entirely from the LOADED signatures (no blob re-decode on the
+      // serve path); shares m08's oracle verbatim
       "m10_frame_store" -> ((
         (s, d) => frameWriteStore(mediaFrames(s, d),
           IndexPaths.dir("m10_frames", d)),
         (s, d) => videoNearDupPairs(frameLoadStore(s,
           IndexPaths.dir("m10_frames", d))))),
-      // p08: the nightly media-dedup loop — standing signatures loaded
-      // from the store, delta fingerprinted fresh, labels rolled
-      // forward by star merge; equals one-shot m09 exactly
+      // p08 — the NIGHTLY MEDIA MAINTENANCE loop end-to-end (p05's
+      // shape on the media seam): the standing (even) corpus's frame
+      // signatures are published to the store and loaded back — the
+      // only blob decode the standing side ever pays happened at its
+      // own ingest — while the arriving (odd) delta batch is
+      // fingerprinted fresh. The df cap and set sizes are computed once
+      // over standing ∪ delta (global corpus properties,
+      // hash-table-sized work), then the full pair set is generated as
+      // its three parity classes against those same global sets: the
+      // standing cluster labels come from the PUBLISHED copy when the
+      // df-drift guard proves them still exact, from a recompute
+      // otherwise (see [[mediaServeFrom]]), and the cross + delta-delta
+      // pairs merge in by star contraction (c19). The store saves the
+      // DECODE — the standing corpus's only blob fingerprinting
+      // happened at its own ingest — and, when no standing hash
+      // crossed the df cap, the standing-standing pairing too. Pair
+      // classes partition m08's pair set and each pair's Jaccard uses
+      // the same global sets ⇒ the merged labels equal the one-shot m09
+      // clustering exactly, whichever branch the guard takes.
       "p08_media_maintenance" -> ((
         (s, d) => mediaStorePublish(s, d),
         (s, d) => mediaServeMerged(s, d))),
-      // m11: the stream-edge cross readout — arriving (odd) items scored
-      // against the loaded standing store with the df cap FROZEN at the
-      // standing corpus; the one-shot twin of MediaStream's micro-batch
-      // loop (batch-independent by construction)
+      // m11 — the stream-edge readout as a catalog entry, in the
+      // harness wiring (standing = even ids' PERSISTED store, delta =
+      // odd ids, fingerprinted fresh): publish the standing signatures,
+      // load them back, and score the whole delta against the loaded
+      // copy with the df cap FROZEN at the standing corpus — the
+      // one-shot equivalent of what [[graft.streaming.MediaStream]]
+      // does micro-batch by micro-batch (batch-independent by
+      // construction)
       "m11_stream_neardup" -> ((publishEven("m11_frames"),
         serveOdd("m11_frames"))))
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     IndexPaths.oneShot(phases) ++ Map(
-    // m12: m11 under a standing delete set — the tombstone move on
-    // the media store (see tombstonedNearDup)
-    "m12_tombstone_serve" -> ((s, d) => tombstonedNearDup(s, d)),
     // frame-set Jaccard between media items — re-encode/trim/watermark
     // near-dups the text shingle family can't see
     // m09: the c01 closure over m08's pairs — duplicate-media CLUSTERS
@@ -954,8 +916,8 @@ object Multimodal {
     // (r16's argument on the media family), so it shares m12's text
     "m14_tombstone_stream" ->
       crossNearDupSqlOver("doc_id % 2 = 0 AND doc_id % 5 <> 2"),
-    // p08 reconstructs m09's labels incrementally (see
-    // mediaMaintenance's pair-class partition argument)
+    // p08 reconstructs m09's labels incrementally (see the pair-class
+    // partition argument on its `phases` entry)
     "p08_media_maintenance" ->
       s"""WITH RECURSIVE ${Clusters.componentsCte(videoNearDupSql, withLab = false)}
          |SELECT id AS doc_id, min(label) AS cluster_id FROM comp GROUP BY id""".stripMargin,

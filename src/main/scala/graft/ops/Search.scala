@@ -468,11 +468,11 @@ object Search {
                                terms: Seq[String] = DefaultQuery,
                                k: Int = 10): DataFrame = {
     require(terms.nonEmpty, "at least one query term")
-    val ts = broadcast(tombstones.select(col("doc_id")).distinct())
+    val ts = StoreSwap.deadIds("doc_id", tombstones)
     // query-term postings (pushed scan filter), split live/removed
     val qp = postings.filter(col("token").isin(terms: _*))
       .select(col("doc_id"), col("token"), col("tf"), col("dl"))
-    val live = qp.join(ts, Seq("doc_id"), "left_anti")
+    val live = StoreSwap.dropDead(qp, "doc_id", tombstones)
     // df correction needs only the QUERY terms' removed postings —
     // (doc, token) is unique in the store, so count(*) is the number
     // of removed docs containing the term

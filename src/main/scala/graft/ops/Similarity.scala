@@ -1324,18 +1324,18 @@ object Similarity {
       _ < NumProbes, TopK, nprobe, PqSubspaces, PqRefine, 64)
   }
 
-  /** EXPUNGE-DELETES compaction of a published IVFPQ store (k28) — the
-    * r15 move on the ANN family, the last of the four tombstoned
-    * stores: k25's serve anti-joins its delete set on every query, so
-    * serve cost degrades monotonically as deletions accrue; this pass
-    * drops the tombstoned vectors' rows from the PER-VECTOR tables —
-    * the PQ code list and the coarse cell assignment — while the
-    * TRAINED artifacts (codebooks, cell centroids) stay untouched
-    * (they are corpus statistics, not memberships; FAISS's
-    * remove_ids does exactly this). Each family dir rewrites beside
-    * itself and swaps under its own [[IndexMeta]] stamp
-    * ([[StoreSwap]]), so a crash mid-swap leaves that dir unservable
-    * rather than mixed; after the swap the tombstone set RETIRES.
+  /** A published IVFPQ index as [[StoreSwap]] compacts it (k28's
+    * EXPUNGE-DELETES) — the r15 move on the ANN family, the last of the
+    * four tombstoned stores: k25's serve anti-joins its delete set on
+    * every query, so serve cost degrades monotonically as deletions
+    * accrue; [[StoreSwap.compact]] drops the tombstoned vectors' rows
+    * from the PER-VECTOR tables — the coarse cell assignment and the
+    * PQ code list — while the TRAINED artifacts (cell centroids,
+    * codebooks) stay untouched (they are corpus statistics, not
+    * memberships; FAISS's remove_ids does exactly this). Each family
+    * dir rewrites beside itself and swaps under its own [[IndexMeta]]
+    * stamp, so a crash mid-swap leaves that dir unservable rather than
+    * mixed; after the swap the tombstone set RETIRES.
     *
     * Rebuild equivalence: the serve's only use of the two compacted
     * tables is the codes⋈assignment inner join feeding ADC — dropping
@@ -1345,9 +1345,7 @@ object Similarity {
     * bit-for-bit and k28 shares its oracle. Cost: two broadcast
     * anti-joins over narrow int tables — corpus-linear I/O, no
     * retraining, no re-encode. */
-  def ivfPqCompactStore(spark: SparkSession, dir: String,
-                        tombstones: DataFrame): Unit = {
-    val ts = broadcast(tombstones.select(col("vec_id")).distinct())
+  def ivfPqStores(dir: String): Seq[StoreSwap.Store] =
     // ORDER MATTERS: coarse first, pq second. The CODES table keeps
     // its dead rows until the last swap, so a crash between the two
     // swaps leaves a store whose code list still shows the deletes,
@@ -1355,23 +1353,8 @@ object Similarity {
     // already-compacted rows). The reverse order would leave codes
     // clean and assign dirty — a half-compacted store whose code
     // list reads as fully compacted.
-    locally { // coarse family: assignment shrinks, centroids persist
-      val cDir = s"$dir/coarse"
-      val (assign, _) = ivfLoadCoarse(spark, cDir) // stamp-checked
-      val tmp = StoreSwap.freshScratch(cDir)
-      assign.join(ts, Seq("vec_id"), "left_anti")
-        .write.mode("overwrite").parquet(s"$tmp/assign")
-      StoreSwap.swapSubtables(cDir, Seq("assign"), ivfVersion)
-    }
-    locally { // PQ family: codes shrink, codebooks persist
-      val pqDir = s"$dir/pq"
-      val (codes, _) = pqLoadIndex(spark, pqDir) // stamp-checked
-      val tmp = StoreSwap.freshScratch(pqDir)
-      codes.join(ts, Seq("vec_id"), "left_anti")
-        .write.mode("overwrite").parquet(s"$tmp/codes")
-      StoreSwap.swapSubtables(pqDir, Seq("codes"), pqVersion)
-    }
-  }
+    Seq(StoreSwap.Store(s"$dir/coarse", ivfVersion, "vec_id", Seq("assign")),
+      StoreSwap.Store(s"$dir/pq", pqVersion, "vec_id", Seq("codes")))
 
   /** The IVFPQ search over normalized vectors `vn` and caller
     * artifacts: a trained cell `assign`ment, its `cellCentroids`, and
@@ -1418,10 +1401,10 @@ object Similarity {
     * nightly rebuilds — the delete path is a parquet append to the
     * tombstone table, O(deletes), not O(index).
     *
-    * Scale shape: the anti-join keys on `vec_id`, the SAME key as the
-    * codes⋈assignment join it sits beside, so it rides that exchange
-    * (or broadcasts, when the tombstone set is small — AQE decides);
-    * the standing corpus is never re-encoded and the gate/ADC/refine
+    * Scale shape: the deduplicated tombstone set broadcasts
+    * ([[StoreSwap.dropDead]] — deletes are small by definition), so
+    * the anti-join is map-side over the code list and never shuffles
+    * it; the standing corpus is never re-encoded and the gate/ADC/refine
     * plan is k19's verbatim. Probes are NOT tombstone-filtered: a
     * deleted vector may still query, it just can't be returned.
     * Output: k19's `(probe_id, rnk, neighbor_id, score)`. */
@@ -1430,8 +1413,7 @@ object Similarity {
                            nprobe: Int = IvfPqNprobe): DataFrame = {
     val (codes, cbs) = sharedPqIndex(s, d)
     ivfPqOnNormalized(sharedNormalized(s, d),
-      codes.join(tombstones.select(col("vec_id")), Seq("vec_id"),
-        "left_anti"),
+      StoreSwap.dropDead(codes, "vec_id", tombstones),
       cbs, sharedKmeansAssign(s, d), sharedCellCentroids(s, d),
       _ < NumProbes, TopK, nprobe, PqSubspaces, PqRefine, 64)
   }
@@ -1649,9 +1631,8 @@ object Similarity {
       (s, d) => {
         val dir = IndexPaths.dir("k28_index", d)
         ivfPqWriteAll(s, d, dir)
-        ivfPqCompactStore(s, dir,
-          Tables.embeddings(s, d).select(col("vec_id"))
-            .filter(col("vec_id") % 7 === 3))
+        StoreSwap.compact(s, ivfPqStores(dir),
+          Tables.embeddings(s, d).filter(col("vec_id") % 7 === 3))
       },
       (s, d) => ivfPqServeLoaded(s, d, IndexPaths.dir("k28_index", d)))),
     // k24: the SQ8 index persisted (stats + codes parquet) and served

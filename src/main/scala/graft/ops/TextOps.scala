@@ -777,18 +777,6 @@ object TextOps {
     (spark.read.parquet(s"$dir/uni"), spark.read.parquet(s"$dir/bi"))
   }
 
-  /** The t22 catalog entry end-to-end: train the bigram LM on the
-    * STANDING (even-id) half, publish it, then score + gate the
-    * ARRIVING (odd-id) half with the model LOADED back — the CCNet
-    * move (Wenzek et al. 2020): a quality LM is trained once on a
-    * trusted corpus and frozen, then every new crawl shard is scored
-    * against it; the shard never influences its own acceptance bar.
-    * Frozen-model scoring also makes the gate batch-independent (a
-    * doc's score is a pure function of the published tables), which is
-    * what lets the same serve run per micro-batch on the stream edge. */
-  def lmQualityPersisted(spark: SparkSession, dataDir: String): DataFrame =
-    queries("t22_lm_quality_persisted")(spark, dataDir)
-
   /** STUPID-BACKOFF LM score (t20) — Brants et al. 2007's web-scale
     * smoothing: score a bigram by its conditional frequency when the
     * bigram is attested, and back off to a discounted add-1 unigram
@@ -1339,8 +1327,15 @@ object TextOps {
   }
 
   def phases: IndexPaths.Phases = Map(
-    // t22: train the quality LM on the standing half, publish it, score
-    // the arriving half with the LOADED model (see lmQualityPersisted)
+    // t22: train the bigram LM on the STANDING (even-id) half, publish
+    // it, then score + gate the ARRIVING (odd-id) half with the model
+    // LOADED back — the CCNet move (Wenzek et al. 2020): a quality LM
+    // is trained once on a trusted corpus and frozen, then every new
+    // crawl shard is scored against it; the shard never influences its
+    // own acceptance bar. Frozen-model scoring also makes the gate
+    // batch-independent (a doc's score is a pure function of the
+    // published tables), which is what lets the same serve run per
+    // micro-batch on the stream edge.
     "t22_lm_quality_persisted" -> ((
       (s, d) => {
         val (uni, bi) = lmTrain(

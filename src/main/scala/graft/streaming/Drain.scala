@@ -6,10 +6,11 @@ import org.apache.spark.sql.types._
 
 /** The ONE copy of the stream plumbing every `graft.streaming` runner
   * shares: the documents and embeddings schemas, the file-stream
-  * reader ([[read]]), the availableNow memory-sink runner ([[toMemory]]) and
+  * reader ([[read]]), the availableNow memory-sink runner ([[toMemory]]),
   * the availableNow checkpointed `foreachBatch` runner
   * ([[availableNow]]) with its idempotent sink ([[appendBatch]],
-  * [[readSink]], [[guardSinks]]). Each stream keeps only its transform,
+  * [[readSink]], [[guardSinks]]), and its stamped-store form
+  * ([[availableNowStamped]]). Each stream keeps only its transform,
   * its output mode and its sink.
   *
   * Exactly-once across restarts needs BOTH halves:
@@ -82,11 +83,6 @@ object Drain {
     * belong to THIS lineage, and the replay's same-batchId overwrite
     * is exactly the idempotent recovery the sink exists for. */
   def guardSinks(sinks: Seq[String], checkpointDir: Option[String]): Unit = {
-    def visible(d: java.io.File): Array[java.io.File] = {
-      val kids = d.listFiles()
-      if (kids == null) Array.empty
-      else kids.filterNot(_.getName.startsWith("."))
-    }
     val lineageKnown = checkpointDir.exists(cp =>
       Seq("offsets", "commits").exists(sub =>
         visible(new java.io.File(cp, sub)).nonEmpty))
@@ -123,6 +119,90 @@ object Drain {
       .trigger(Trigger.AvailableNow())
       .start()
       .awaitTermination()
+  }
+
+  /** [[availableNow]] appending into the version-stamped store at
+    * `storeDir` ([[graft.ops.IndexMeta]]) — the one torn-append
+    * protocol of every streamed store (the segment stores of
+    * [[IndexStream]], the frame store of [[MediaStream]]):
+    *  - the store EXISTS when its dir holds a visible entry (not `_`-
+    *    or `.`-prefixed) or a stamp; an empty or absent dir is fresh.
+    *    The stamp counts on its own because a compaction crash between
+    *    clearing a table and moving its rewrite in can leave a
+    *    poison-stamped store with no data entry at all — treated as
+    *    fresh, it would be drained over and re-stamped valid.
+    *  - appending rows built under a DIFFERENT definition than the
+    *    standing rows would corrupt the store silently, so an existing
+    *    stamped store is version-checked first. A POISON-stamped store
+    *    ([[graft.ops.StoreSwap.SwapPoison]]) is a crashed compaction
+    *    swap, not a torn append — a replay would launder the
+    *    half-swapped mix — so it fails that check loudly.
+    *  - an EXISTING but UNSTAMPED store is a crashed append: only a
+    *    CHECKPOINTED restart may touch it (the checkpoint replays
+    *    exactly the one uncommitted batch, whose batchId-keyed
+    *    overwrite completes the append without doubling); an
+    *    uncheckpointed re-run would reprocess everything under fresh
+    *    batchIds that need not match the standing subdirs. And it may
+    *    only be completed under the version it was running under: the
+    *    standing unstamped rows carry no stamp to check, so the
+    *    `_PENDING_VERSION` marker written at the original unstamp is
+    *    the only witness (ADVICE r18).
+    *  - the stamp comes off for the duration of the append — LAZILY,
+    *    at the first batch, so a drain that fails before touching the
+    *    store (bad source dir, bad glob, an analysis error in the first
+    *    batch's plan) leaves a healthy store stamped and servable.
+    *  - the store is re-stamped only when this run mutated it or it
+    *    completes a torn append whose batches had all committed (crash
+    *    between drain return and stamp): a zero-arrival drain over a
+    *    never-existing store must not mint a stamped-but-empty store,
+    *    and one over a healthy store has nothing to re-stamp. */
+  def availableNowStamped(stream: DataFrame, storeDir: String,
+                          version: String, checkpointDir: Option[String],
+                          sinks: Seq[String])
+                         (body: (DataFrame, Long) => Unit): Unit = {
+    import graft.ops.IndexMeta
+    val stamped = IndexMeta.isStamped(storeDir)
+    val exists = stamped || visible(new java.io.File(storeDir))
+      .exists(!_.getName.startsWith("_"))
+    val tornAppend = exists && !stamped
+    if (stamped) IndexMeta.checkVersion(storeDir, version)
+    if (tornAppend) {
+      require(checkpointDir.isDefined,
+        s"store at $storeDir is mid-append (unstamped); only a restart " +
+          "from the original stream checkpoint can complete it — an " +
+          "uncheckpointed re-run would double its rows. Provide the " +
+          "checkpoint or clear the store.")
+      val pending = IndexMeta.pendingVersion(storeDir)
+      require(pending.contains(version),
+        s"store at $storeDir is mid-append under engine version " +
+          s"'${pending.getOrElse("<unrecorded>")}' but the engine now " +
+          s"runs '$version' — completing the append would stamp " +
+          "old-definition rows as current; republish the store.")
+    }
+    val unstamped = new java.util.concurrent.atomic.AtomicBoolean(false)
+    availableNow(stream, "append", checkpointDir, sinks) { (batch, id) =>
+      if (unstamped.compareAndSet(false, true)) {
+        // pending marker FIRST, then the unstamp: a crash between the
+        // two leaves a stamped store with a stale marker (harmless —
+        // the stamp stays authoritative) rather than an unstamped
+        // store with no recorded in-flight version
+        IndexMeta.notePending(storeDir, version)
+        IndexMeta.unstamp(storeDir)
+      }
+      body(batch, id)
+    }
+    if (unstamped.get() || tornAppend) {
+      IndexMeta.stampVersion(storeDir, version)
+      IndexMeta.clearPending(storeDir)
+    }
+  }
+
+  /** The entries of `d` that are not `.`-prefixed (none if `d` is
+    * absent). */
+  private def visible(d: java.io.File): Array[java.io.File] = {
+    val kids = d.listFiles()
+    if (kids == null) Array.empty
+    else kids.filterNot(_.getName.startsWith("."))
   }
 
   /** IDEMPOTENT per-batch parquet append: batch `batchId`'s rows write

@@ -143,92 +143,24 @@ object IndexStream {
       Search.bm25BuildIndexTokens(toks, "doc_id", "terms")
     }
 
-  /** The guard / torn-append / merge-policy body both analyzer
-    * families share — one place for the exactly-once wiring:
-    *  - appending a segment built under a DIFFERENT analyzer than the
-    *    standing segments would corrupt the merged lexicon silently —
-    *    an existing stamped store is version-checked first. An
-    *    EXISTING but UNSTAMPED store is a crashed append: only a
-    *    CHECKPOINTED restart may touch it (the checkpoint replays
-    *    exactly the one uncommitted batch, whose batchId-keyed
-    *    overwrite completes the append without doubling); an
-    *    uncheckpointed re-run would reprocess everything under fresh
-    *    batchIds that need not match the standing subdirs, so it
-    *    fails loudly instead.
-    *  - torn-append fail-closed contract: the stamp comes off for the
-    *    duration of the append — but LAZILY, at the first actual
-    *    store mutation, so a drain that fails before touching the
-    *    store leaves the stamp (and the store's servability) intact.
-    *  - after the drain commits and re-stamps, the `maxSegments`
-    *    merge policy compacts when crossed (see
-    *    [[runAvailableNowCjk]]'s scaladoc for why never mid-drain). */
+  /** The stamped segment append both analyzer families share: the
+    * guard / torn-append / lazy-unstamp / restamp protocol is
+    * [[Drain.availableNowStamped]]'s (a segment built under a
+    * DIFFERENT analyzer than the standing segments would corrupt the
+    * merged lexicon silently); after the drain commits and re-stamps,
+    * the `maxSegments` merge policy compacts when crossed (see
+    * [[runAvailableNowCjk]]'s scaladoc for why never mid-drain). */
   private def runSegmented(spark: SparkSession, dir: String,
                            segDir: String, version: String,
                            checkpointDir: Option[String], glob: String,
                            deltaFilter: org.apache.spark.sql.Column,
                            maxSegments: Int)
                           (build: DataFrame => (DataFrame, DataFrame, DataFrame)): Unit = {
-    // "preexisting" must key on postings OR any stamp: a compaction
-    // crash between clearTree(postings) and its move leaves a
-    // poison-stamped store with NO postings subdir, and a
-    // postings-only test would treat it as fresh — skipping the
-    // poison check, draining over the corpse, and re-stamping it
-    // valid (the laundering hole, one window over)
-    val preexisting = new java.io.File(segDir, "postings").exists() ||
-      graft.ops.IndexMeta.isStamped(segDir)
-    val tornAppend = preexisting && !graft.ops.IndexMeta.isStamped(segDir)
-    if (preexisting) {
-      // a POISON-stamped store is a crashed compaction swap, NOT a
-      // torn append — a checkpointed restart would replay nothing and
-      // re-stamping would launder the half-swapped mix as valid, so
-      // the version check below fails it loudly (store=
-      // compaction-in-progress); only a full republish heals it
-      if (graft.ops.IndexMeta.isStamped(segDir))
-        graft.ops.IndexMeta.checkVersion(segDir, version)
-      else require(checkpointDir.isDefined,
-        s"segment store at $segDir is mid-append (unstamped); only a " +
-          "restart from the original stream checkpoint can complete it " +
-          "— an uncheckpointed re-run would double its postings. " +
-          "Provide the checkpoint or clear the store.")
-    }
-    // a torn append may only be COMPLETED under the version it was
-    // running under: the standing unstamped segments carry no stamp to
-    // check, so the pending marker written at the original unstamp is
-    // the only witness — restamping under a moved analyzer definition
-    // would mint a current stamp over old-analyzer segments and the
-    // merged lexicon would corrupt silently (ADVICE r18)
-    if (tornAppend) {
-      val pending = graft.ops.IndexMeta.pendingVersion(segDir)
-      require(pending.contains(version),
-        s"segment store at $segDir is mid-append under engine version " +
-          s"'${pending.getOrElse("<unrecorded>")}' but the engine now " +
-          s"runs '$version' — completing the append would stamp " +
-          "old-definition segments as current; republish the store.")
-    }
-    val unstamped = new java.util.concurrent.atomic.AtomicBoolean(false)
-    Drain.availableNow(Drain.read(spark, dir, Drain.DocumentsSchema, glob)
-      .filter(deltaFilter), "append", checkpointDir,
-      Seq("postings", "lexicon", "stats").map(t => s"$segDir/$t")) {
-      (batch, id) =>
-      if (unstamped.compareAndSet(false, true)) {
-        // pending marker FIRST, then the unstamp: a crash between the
-        // two leaves a stamped store with a stale marker (harmless —
-        // the stamp stays authoritative) rather than an unstamped
-        // store with no recorded in-flight version
-        graft.ops.IndexMeta.notePending(segDir, version)
-        graft.ops.IndexMeta.unstamp(segDir)
-      }
+    Drain.availableNowStamped(Drain.read(spark, dir, Drain.DocumentsSchema, glob)
+      .filter(deltaFilter), segDir, version, checkpointDir,
+      SegmentTables.map(t => s"$segDir/$t")) { (batch, id) =>
       val (p, l, st) = build(batch)
       appendSegment(p, l, st, segDir, id)
-    }
-    // stamp only when this run mutated the store OR it is completing a
-    // torn append whose batches had all committed (crash between drain
-    // return and stamp): a zero-arrival drain over a NEVER-EXISTING
-    // store must not mint a stamped-but-empty store, and one over a
-    // healthy store has nothing to re-stamp
-    if (unstamped.get() || tornAppend) {
-      graft.ops.IndexMeta.stampVersion(segDir, version)
-      graft.ops.IndexMeta.clearPending(segDir)
     }
     // the stats-exists guard covers the zero-arrival fresh-store edge:
     // a drain that appended nothing to a store that never existed has
@@ -335,59 +267,59 @@ object IndexStream {
 
   private def compactSegments(spark: SparkSession, segDir: String,
                               version: String,
-                              tombstones: Option[DataFrame] = None): Unit = {
-    import org.apache.spark.sql.functions.{broadcast, coalesce, col, count, lit, max, sum}
-    graft.ops.IndexMeta.checkVersion(segDir, version)
-    val (p0, l0, st0) = mergedIndex(spark, segDir)
-    val (p, l, st) = tombstones match {
-      case None => (p0, l0, st0)
-      case Some(tsRaw) =>
-        val ts = broadcast(tsRaw.select(col("doc_id")).distinct())
-        val live = p0.join(ts, Seq("doc_id"), "left_anti")
-        // The removed posting rows. NOT checkpointed (r19): since
-        // bm25WriteIndex derives the store lexicon from the live
-        // postings it just wrote (item 1), the rmDf-corrected lexicon
-        // below is never executed — rmPost's one LIVE consumer is the
-        // stats fallback (zero consumers when the tombstones carry
-        // dl), so an eager materialization here was a whole extra
-        // merged-postings scan per compaction.
-        val rmPost = p0.join(ts, Seq("doc_id"), "left_semi")
-          .select(col("doc_id"), col("token"), col("dl"))
-        // store-wide df correction: one row per (doc, token) in the
-        // postings, so count(*) per token over the removed rows is
-        // the number of removed docs carrying it
-        val rmDf = rmPost.groupBy(col("token")).agg(count(lit(1)).as("rm_df"))
-        val lex = l0.join(rmDf, Seq("token"), "left")
-          .select(col("token"),
-            (col("df") - coalesce(col("rm_df"), lit(0L))).as("df"))
-          .filter(col("df") > 0)
-        // removed corpus stats: from the tombstone table itself when
-        // it carries dl (exact for zero-term docs, zero store scans),
-        // else derived from the tombstoned docs' posting rows. Either
-        // way the set is collapsed PER DOC first — max(dl) per id —
-        // so a delete feed that delivered the same id twice (possibly
-        // with drifted dl) decrements n_docs/sum_dl exactly once.
-        val rm =
-          if (tsRaw.columns.contains("dl"))
-            tsRaw.select(col("doc_id"), col("dl"))
+                              tombstones: Option[DataFrame] = None): Unit =
+    // rewrite beside the live store (reads old paths, writes new —
+    // never overlapping), then swap under the stamp-off/stamp-on
+    // contract; the merged read runs after the version check
+    graft.ops.StoreSwap.rewrite(graft.ops.StoreSwap.Store(segDir, version,
+      "doc_id", SegmentTables)) { tmp =>
+      import org.apache.spark.sql.functions.{broadcast, coalesce, col, count, lit, max, sum}
+      val (p0, l0, st0) = mergedIndex(spark, segDir)
+      val (p, l, st) = tombstones match {
+        case None => (p0, l0, st0)
+        case Some(tsRaw) =>
+          val ts = graft.ops.StoreSwap.deadIds("doc_id", tsRaw)
+          val live = graft.ops.StoreSwap.dropDead(p0, "doc_id", tsRaw)
+          // The removed posting rows. NOT checkpointed (r19): since
+          // bm25WriteIndex derives the store lexicon from the live
+          // postings it just wrote (item 1), the rmDf-corrected lexicon
+          // below is never executed — rmPost's one LIVE consumer is the
+          // stats fallback (zero consumers when the tombstones carry
+          // dl), so an eager materialization here was a whole extra
+          // merged-postings scan per compaction.
+          val rmPost = p0.join(ts, Seq("doc_id"), "left_semi")
+            .select(col("doc_id"), col("token"), col("dl"))
+          // store-wide df correction: one row per (doc, token) in the
+          // postings, so count(*) per token over the removed rows is
+          // the number of removed docs carrying it
+          val rmDf = rmPost.groupBy(col("token")).agg(count(lit(1)).as("rm_df"))
+          val lex = l0.join(rmDf, Seq("token"), "left")
+            .select(col("token"),
+              (col("df") - coalesce(col("rm_df"), lit(0L))).as("df"))
+            .filter(col("df") > 0)
+          // removed corpus stats: from the tombstone table itself when
+          // it carries dl (exact for zero-term docs, zero store scans),
+          // else derived from the tombstoned docs' posting rows. Either
+          // way the set is collapsed PER DOC first — max(dl) per id —
+          // so a delete feed that delivered the same id twice (possibly
+          // with drifted dl) decrements n_docs/sum_dl exactly once.
+          val rm =
+            if (tsRaw.columns.contains("dl"))
+              tsRaw.select(col("doc_id"), col("dl"))
+                .groupBy(col("doc_id")).agg(max(col("dl")).as("dl"))
+                .agg(count(lit(1)).as("rm_n"),
+                  coalesce(sum(col("dl")), lit(0L)).as("rm_dl"))
+            else rmPost
               .groupBy(col("doc_id")).agg(max(col("dl")).as("dl"))
               .agg(count(lit(1)).as("rm_n"),
                 coalesce(sum(col("dl")), lit(0L)).as("rm_dl"))
-          else rmPost
-            .groupBy(col("doc_id")).agg(max(col("dl")).as("dl"))
-            .agg(count(lit(1)).as("rm_n"),
-              coalesce(sum(col("dl")), lit(0L)).as("rm_dl"))
-        val stats = st0.crossJoin(broadcast(rm))
-          .select((col("n_docs") - col("rm_n")).as("n_docs"),
-            (col("sum_dl") - col("rm_dl")).as("sum_dl"))
-        (live, lex, stats)
+          val stats = st0.crossJoin(broadcast(rm))
+            .select((col("n_docs") - col("rm_n")).as("n_docs"),
+              (col("sum_dl") - col("rm_dl")).as("sum_dl"))
+          (live, lex, stats)
+      }
+      graft.ops.Search.bm25WriteIndex(p, l, st, tmp, version)
     }
-    // rewrite beside the live store (reads old paths, writes new —
-    // never overlapping), then swap under the stamp-off/stamp-on
-    // contract
-    val tmp = graft.ops.StoreSwap.freshScratch(segDir)
-    graft.ops.Search.bm25WriteIndex(p, l, st, tmp, version)
-    graft.ops.StoreSwap.swapSubtables(segDir,
-      Seq("postings", "lexicon", "stats"), version)
-  }
+
+  private val SegmentTables = Seq("postings", "lexicon", "stats")
 }

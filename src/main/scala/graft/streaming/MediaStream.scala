@@ -49,65 +49,16 @@ object MediaStream {
                             storePath: String,
                             deltaFilter: org.apache.spark.sql.Column,
                             checkpointDir: Option[String] = None,
-                            glob: String = "documents.parquet"): Unit = {
+                            glob: String = "documents.parquet"): Unit =
     // the stream edge maintains the store's version stamp like every
     // other frame-store writer: appending under a DIFFERENT codec/
-    // fingerprint definition fails loudly, and the stamp is absent
-    // for the duration of the append so a torn append fails closed at
-    // the load seam. An existing-but-unstamped store is a crashed
-    // append: only a checkpointed restart may complete it (the replay
-    // of the one uncommitted batch overwrites its own batchId subdir
-    // — the IndexStream recovery contract on the media store).
-    val preexisting = new java.io.File(storePath).exists()
-    val tornAppend = preexisting &&
-      !graft.ops.IndexMeta.isStamped(storePath)
-    if (preexisting) {
-      // a poison-stamped store (crashed compaction swap) fails the
-      // version check loudly here — see IndexStream.runSegmented
-      if (graft.ops.IndexMeta.isStamped(storePath))
-        graft.ops.IndexMeta.checkVersion(storePath,
-          graft.ops.Multimodal.frameVersion)
-      else require(checkpointDir.isDefined,
-        s"frame store at $storePath is mid-append (unstamped); only a " +
-          "restart from the original stream checkpoint can complete it " +
-          "— an uncheckpointed re-run would double its signatures. " +
-          "Provide the checkpoint or clear the store.")
+    // fingerprint definition fails loudly, and a torn append fails
+    // closed at the load seam (the Drain.availableNowStamped protocol)
+    Drain.availableNowStamped(Drain.read(spark, dir, Drain.DocumentsSchema, glob)
+      .filter(deltaFilter), storePath, graft.ops.Multimodal.frameVersion,
+      checkpointDir, Seq(storePath)) { (batch, id) =>
+      Drain.appendBatch(graft.ops.Multimodal.framesOf(batch), storePath, id)
     }
-    // a torn append completes only under the version it was running
-    // under — the pending marker written at the original unstamp is
-    // the only witness (the IndexStream.runSegmented rationale)
-    if (tornAppend) {
-      val pending = graft.ops.IndexMeta.pendingVersion(storePath)
-      require(pending.contains(graft.ops.Multimodal.frameVersion),
-        s"frame store at $storePath is mid-append under codec version " +
-          s"'${pending.getOrElse("<unrecorded>")}' but the engine now " +
-          s"runs '${graft.ops.Multimodal.frameVersion}' — completing " +
-          "the append would stamp old-codec signatures as current; " +
-          "republish the store.")
-    }
-    // unstamp LAZILY at the first actual store mutation (the
-    // IndexStream discipline): a drain that fails before any batch —
-    // bad source dir, bad glob — leaves a healthy store stamped
-    val unstamped = new java.util.concurrent.atomic.AtomicBoolean(false)
-    Drain.availableNow(Drain.read(spark, dir, Drain.DocumentsSchema, glob)
-      .filter(deltaFilter), "append", checkpointDir, Seq(storePath)) {
-      (batch, id) =>
-      if (unstamped.compareAndSet(false, true)) {
-        graft.ops.IndexMeta.notePending(storePath,
-          graft.ops.Multimodal.frameVersion)
-        graft.ops.IndexMeta.unstamp(storePath)
-      }
-      Drain.appendBatch(graft.ops.Multimodal.framesOf(batch),
-        storePath, id)
-    }
-    // stamp only when this run mutated the store or it completes a
-    // torn append (the IndexStream.runSegmented rationale)
-    if (unstamped.get() || tornAppend) {
-      graft.ops.IndexMeta.stampVersion(storePath,
-        graft.ops.Multimodal.frameVersion)
-      graft.ops.IndexMeta.clearPending(storePath)
-    }
-  }
 
   /** Drain the current directory contents as a delta stream, scoring
     * each micro-batch's items against the standing store at `indexDir`

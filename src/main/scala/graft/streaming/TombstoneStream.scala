@@ -24,10 +24,12 @@ import org.apache.spark.sql.{Column, SparkSession}
   * map-side projection appended as a narrow one-column parquet batch
   * dir. The consuming serves broadcast the loaded set. When the set
   * has accrued enough to matter, the family's compaction pass
-  * (IndexStream.compactCjk, Dedup.cjkCompactStore,
-  * Multimodal.frameCompactStore, Similarity.ivfPqCompactStore) folds
-  * it into the store and the set directory can be cleared — the full
-  * delete lifecycle: stream in, serve corrected, expunge, retire. */
+  * ([[IndexStream.compactCjk]] for the BM25 segments,
+  * [[graft.ops.StoreSwap.compact]] / `compactIfNeeded` over the
+  * family's declared store for the near-dup, bucket, frame and IVFPQ
+  * stores) folds it into the store and the set directory can be
+  * cleared — the full delete lifecycle: stream in, serve corrected,
+  * expunge, retire. */
 object TombstoneStream {
   /** Drain delete records (any frame carrying `idCol`) into the
     * standing tombstone set at `setPath` — one narrow batch subdir per

@@ -123,7 +123,7 @@ class RoundEighteenOpsSpec extends AnyFunSuite {
     // compacted store ≡ publish(standing minus tombstones), per table
     val dirA = IndexPaths.dir("r18_d33_a", sf)
     Dedup.cjkPublishIndexTokens(even, dirA)
-    Dedup.cjkCompactStore(spark, dirA, dead)
+    StoreSwap.compact(spark, Seq(Dedup.cjkStore(dirA)), dead)
     val dirB = IndexPaths.dir("r18_d33_b", sf)
     Dedup.cjkPublishIndexTokens(
       even.join(dead, Seq("doc_id"), "left_anti"), dirB)
@@ -146,7 +146,7 @@ class RoundEighteenOpsSpec extends AnyFunSuite {
     // the tear under a fresh stamp
     IndexMeta.unstamp(dirC)
     intercept[IllegalStateException] {
-      Dedup.cjkCompactStore(spark, dirC, dead)
+      StoreSwap.compact(spark, Seq(Dedup.cjkStore(dirC)), dead)
     }
   }
 
@@ -157,7 +157,7 @@ class RoundEighteenOpsSpec extends AnyFunSuite {
     val dir = IndexPaths.dir("r18_m13", sf)
     Multimodal.frameWriteStore(
       Multimodal.framesOf(docs.filter(col("doc_id") % 2 === 0)), dir)
-    Multimodal.frameCompactStore(spark, dir, dead)
+    StoreSwap.compact(spark, Seq(Multimodal.frameStore(dir)), dead)
     val viaCompacted = pairRows(Multimodal.crossNearDupVsStore(
       Multimodal.frameLoadStore(spark, dir),
       Multimodal.framesOf(docs.filter(col("doc_id") % 2 =!= 0))))
@@ -184,7 +184,7 @@ class RoundEighteenOpsSpec extends AnyFunSuite {
     Similarity.ivfPqWriteAll(spark, sf, dir)
     val cbsBefore = pairRows(spark.read.parquet(s"$dir/pq/codebooks"))
     val centsBefore = pairRows(spark.read.parquet(s"$dir/coarse/centroids"))
-    Similarity.ivfPqCompactStore(spark, dir, ts)
+    StoreSwap.compact(spark, Similarity.ivfPqStores(dir), ts)
     // trained artifacts untouched, per-vector tables shrunk
     assert(pairRows(spark.read.parquet(s"$dir/pq/codebooks")) == cbsBefore)
     assert(pairRows(spark.read.parquet(s"$dir/coarse/centroids")) ==
@@ -196,6 +196,86 @@ class RoundEighteenOpsSpec extends AnyFunSuite {
       Similarity.ivfPqServeTombstoned(spark, sf, ts))
     assert(viaCompacted == viaTombstones,
       "the compacted all-loaded serve must equal the k25 tombstone serve")
+  }
+
+  test("store compaction is re-runnable and crash-safe on all four " +
+    "tombstoned families: a rerun keeps the rows, a stale scratch is " +
+    "cleared without leaking into the store, and an IVFPQ crash " +
+    "between its two swaps heals on a rerun") {
+    val docs = Tables.documents(spark, sf)
+    val vecs = Tables.embeddings(spark, sf)
+    val deadV = vecs.filter(col("vec_id") % 7 === 3).select(col("vec_id"))
+    def table(path: String) = pairRows(graft.streaming.Drain.readSink(spark, path))
+    // a crashed compaction leaves its scratch behind; plant one whose
+    // stray `stale` dir holds the store's own uncompacted rows (dead ids
+    // included), so a scratch that was not cleared shows up in the store
+    def plantStale(dir: String, from: String): Unit = {
+      val tmp = StoreSwap.scratch(dir)
+      graft.streaming.Drain.readSink(spark, from)
+        .write.mode("overwrite").parquet(s"$tmp/stale")
+    }
+    def check(family: String, dirs: Seq[String], paths: Seq[String],
+              key: String, deadIds: org.apache.spark.sql.DataFrame)
+             (compact: () => Unit): Unit = {
+      dirs.zip(paths).foreach { case (d, p) => plantStale(d, p) }
+      compact()
+      val once = paths.map(table)
+      dirs.foreach { d =>
+        assert(!new java.io.File(StoreSwap.scratch(d)).exists(),
+          s"$family: the stale scratch must be cleared")
+        assert(!new java.io.File(d, "stale").exists(),
+          s"$family: the stale scratch must not leak into the store")
+      }
+      paths.foreach { p =>
+        assert(graft.streaming.Drain.readSink(spark, p)
+          .join(deadIds, Seq(key), "left_semi").isEmpty,
+          s"$family: $p must hold no tombstoned row")
+      }
+      compact()
+      assert(paths.map(table) == once,
+        s"$family: re-running a completed compaction must keep the rows")
+    }
+    val cjkDir = IndexPaths.dir("r18_rerun_cjk", sf)
+    Dedup.cjkPublishIndexTokens(cjkToks(col("doc_id") % 2 === 0), cjkDir)
+    check("near-dup", Seq(cjkDir),
+      Seq("signatures", "bands", "hashes").map(t => s"$cjkDir/$t"),
+      "doc_id", dead) { () =>
+      StoreSwap.compact(spark, Seq(Dedup.cjkStore(cjkDir)), dead)
+    }
+    val bDir = IndexPaths.dir("r18_rerun_buckets", sf)
+    Dedup.semanticBucketsWrite(vecs.filter(col("vec_id") % 10 =!= 0),
+      "vec_id", "embedding", bDir)
+    check("buckets", Seq(bDir), Seq(s"$bDir/buckets"), "vec_id", deadV) {
+      () => StoreSwap.compact(spark, Seq(Dedup.semanticBucketsStore(bDir)),
+        deadV)
+    }
+    val fDir = IndexPaths.dir("r18_rerun_frames", sf)
+    Multimodal.frameWriteStore(
+      Multimodal.framesOf(docs.filter(col("doc_id") % 2 === 0)), fDir)
+    check("media", Seq(fDir), Seq(fDir), "doc_id", dead) {
+      () => StoreSwap.compact(spark, Seq(Multimodal.frameStore(fDir)), dead)
+    }
+    val aDir = IndexPaths.dir("r18_rerun_ann", sf)
+    Similarity.ivfPqWriteAll(spark, sf, aDir)
+    check("ANN", Seq(s"$aDir/coarse", s"$aDir/pq"),
+      Seq(s"$aDir/coarse/assign", s"$aDir/pq/codes"), "vec_id", deadV) {
+      () => StoreSwap.compact(spark, Similarity.ivfPqStores(aDir), deadV)
+    }
+    // IVFPQ crash between its two swaps: coarse/assign compacted and
+    // re-stamped (its store alone, through the subtable swap), pq/codes
+    // still holding the dead rows
+    val cDir = IndexPaths.dir("r18_crash_ann", sf)
+    Similarity.ivfPqWriteAll(spark, sf, cDir)
+    StoreSwap.compact(spark, Similarity.ivfPqStores(cDir).take(1), deadV)
+    assert(!spark.read.parquet(s"$cDir/pq/codes")
+      .join(deadV, Seq("vec_id"), "left_semi").isEmpty,
+      "the simulated crash must leave the codes uncompacted")
+    StoreSwap.compact(spark, Similarity.ivfPqStores(cDir), deadV)
+    assert(pairRows(Similarity.ivfPqServeLoaded(spark, sf, cDir)) ==
+      pairRows(Similarity.ivfPqServeTombstoned(spark, sf, deadV)),
+      "a rerun after a mid-compaction crash must heal both dirs")
+    assert(spark.read.parquet(s"$cDir/pq/codes")
+      .join(deadV, Seq("vec_id"), "left_semi").isEmpty)
   }
 
   test("the persisted multi-probe bucket store serves the exact " +

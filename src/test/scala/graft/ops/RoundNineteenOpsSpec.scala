@@ -51,7 +51,7 @@ class RoundNineteenOpsSpec extends AnyFunSuite {
     Dedup.semanticBucketsAppend(corpus.filter(col("vec_id") % 2 =!= 0),
       "vec_id", "embedding", dir)
     val dead = vecs.filter(col("vec_id") % 7 === 3).select(col("vec_id"))
-    Dedup.semanticBucketsCompact(spark, dir, dead)
+    StoreSwap.compact(spark, Seq(Dedup.semanticBucketsStore(dir)), dead)
     val ref = IndexPaths.dir("d35_append_ref", sf)
     Dedup.semanticBucketsWrite(
       corpus.filter(col("vec_id") % 7 =!= 3), "vec_id", "embedding", ref)
@@ -71,14 +71,16 @@ class RoundNineteenOpsSpec extends AnyFunSuite {
     val n = spark.read.parquet(s"$dir/buckets").count()
     assert(n > 20, "fixture store too small for a 10% threshold")
     val one = corpus.select(col("vec_id")).orderBy(col("vec_id")).limit(1)
-    assert(!Dedup.semanticBucketsCompactIfNeeded(spark, dir, one),
+    assert(!StoreSwap.compactIfNeeded(spark, Dedup.semanticBucketsStore(dir),
+        one),
       "one delete must not trigger a store rebuild")
     assert(IndexMeta.isStamped(dir) &&
       spark.read.parquet(s"$dir/buckets").count() == n,
       "a declined compaction must leave the store untouched")
     // the full %7==3 set (~14% of the store) crosses the default ratio
     val dead = vecs.filter(col("vec_id") % 7 === 3).select(col("vec_id"))
-    assert(Dedup.semanticBucketsCompactIfNeeded(spark, dir, dead),
+    assert(StoreSwap.compactIfNeeded(spark, Dedup.semanticBucketsStore(dir),
+        dead),
       "the accumulated set must cross the ratio and compact")
     // poison: a crashed swap leaves SwapPoison — every consumer fails
     IndexMeta.stampVersion(dir, StoreSwap.SwapPoison)
@@ -90,7 +92,7 @@ class RoundNineteenOpsSpec extends AnyFunSuite {
         dir)
     }
     intercept[IllegalStateException] {
-      Dedup.semanticBucketsCompactIfNeeded(spark, dir, dead)
+      StoreSwap.compactIfNeeded(spark, Dedup.semanticBucketsStore(dir), dead)
     }
     ()
   }

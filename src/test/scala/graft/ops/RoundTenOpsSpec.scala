@@ -113,7 +113,7 @@ class RoundTenOpsSpec extends AnyFunSuite {
     def pairRows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4))).toSet
-    assert(pairRows(Multimodal.persistedNearDup(spark, sf)) ==
+    assert(pairRows(Multimodal.queries("m10_frame_store")(spark, sf)) ==
       pairRows(Multimodal.videoNearDupPairs(Multimodal.mediaFrames(spark, sf))),
       "the loaded frame store must yield exactly the one-shot m08 pairs")
     // p08: standing-loaded + delta-fresh + star merge == one-shot m09
@@ -122,7 +122,8 @@ class RoundTenOpsSpec extends AnyFunSuite {
     val oneShot = Clusters.connectedComponents(
       Multimodal.videoNearDupPairs(Multimodal.mediaFrames(spark, sf))
         .select(col("doc_a"), col("doc_b")), "doc_a", "doc_b")
-    assert(labels(Multimodal.mediaMaintenance(spark, sf)) == labels(oneShot),
+    assert(labels(Multimodal.queries("p08_media_maintenance")(spark, sf)) ==
+      labels(oneShot),
       "rolled-forward media labels must equal the one-shot clustering")
   }
 

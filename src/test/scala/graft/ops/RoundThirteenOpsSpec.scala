@@ -75,7 +75,7 @@ class RoundThirteenOpsSpec extends AnyFunSuite {
 
   test("m11 stream-edge readout: frozen-df cross pairs are " +
     "standing×delta only and reproducible") {
-    val out = Multimodal.streamEdgeNearDup(spark, sf)
+    val out = Multimodal.queries("m11_stream_neardup")(spark, sf)
     val rows = out.collect().map(r => (r.getLong(0), r.getLong(1),
       r.getLong(2), r.getLong(3), r.getLong(4))).toSet
     assert(rows.nonEmpty, "fixture must contain cross-set media near-dups")
@@ -85,7 +85,7 @@ class RoundThirteenOpsSpec extends AnyFunSuite {
       assert(jac == inter * 1000000L / union && jac >= Multimodal.VideoJacFloorQ6)
     }
     // deterministic: a second run over the same corpus is identical
-    val again = Multimodal.streamEdgeNearDup(spark, sf)
+    val again = Multimodal.queries("m11_stream_neardup")(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4))).toSet
     assert(again == rows)
@@ -104,7 +104,7 @@ class RoundThirteenOpsSpec extends AnyFunSuite {
     val (uni, bi) = TextOps.lmTrain(standing, "doc_id", "text")
     val inSession = TextOps.lmScoreWith(arriving, "doc_id", "text", uni, bi)
       .withColumn("keep", col("logp2_q6") >= TextOps.LmKeepThresholdQ6)
-    val served = t22Rows(TextOps.lmQualityPersisted(spark, sf))
+    val served = t22Rows(TextOps.queries("t22_lm_quality_persisted")(spark, sf))
     assert(served.nonEmpty, "fixture must score some arriving docs")
     assert(t22Rows(inSession) == served)
     served.foreach { case (_, (n, q, keep)) =>

@@ -44,6 +44,24 @@ class MediaStreamSpec extends AnyFunSuite {
     assert(streamed == oneShot)
   }
 
+  test("an existing empty store dir ingests like a fresh path, with " +
+    "or without a checkpoint") {
+    val fresh = Files.createTempDirectory("graft_mstream_f").toString + "/frames"
+    MediaStream.runAvailableNowIngest(spark, sf, fresh,
+      deltaFilter = col("doc_id") % 2 =!= 0)
+    val expected = frameRows(Multimodal.frameLoadStore(spark, fresh))
+    val empty = Files.createTempDirectory("graft_mstream_e").toString
+    MediaStream.runAvailableNowIngest(spark, sf, empty,
+      deltaFilter = col("doc_id") % 2 =!= 0)
+    assert(frameRows(Multimodal.frameLoadStore(spark, empty)) == expected)
+    val emptyCk = Files.createTempDirectory("graft_mstream_ec").toString
+    MediaStream.runAvailableNowIngest(spark, sf, emptyCk,
+      deltaFilter = col("doc_id") % 2 =!= 0,
+      checkpointDir = Some(
+        Files.createTempDirectory("graft_mstream_eck").toString))
+    assert(frameRows(Multimodal.frameLoadStore(spark, emptyCk)) == expected)
+  }
+
   test("streamed cross readout vs frozen store equals one-shot, " +
     "under any batch split") {
     val evens = Tables.documents(spark, sf).filter(col("doc_id") % 2 === 0)

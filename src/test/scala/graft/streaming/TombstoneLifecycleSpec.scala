@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.etl.TestSpark
-import graft.ops.{Clusters, Dedup, IndexMeta, IndexPaths, Tables}
+import graft.ops.{Clusters, Dedup, IndexMeta, IndexPaths, StoreSwap, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,7 +11,7 @@ import java.nio.file.Files
 /** The FULL delete lifecycle on one store, end to end: deletes stream
   * in ([[TombstoneStream]]), serves correct against the accumulated
   * set (d29), the deletes-ratio merge policy decides when the rebuild
-  * pays ([[graft.ops.Dedup.cjkCompactIfNeeded]]), compaction expunges
+  * pays ([[graft.ops.StoreSwap.compactIfNeeded]]), compaction expunges
   * the rows (d33), and the tombstone set retires — every phase's
   * output pinned against its batch twin. */
 class TombstoneLifecycleSpec extends AnyFunSuite {
@@ -64,7 +64,7 @@ class TombstoneLifecycleSpec extends AnyFunSuite {
     // phase 1: one delete over a whole store — the ratio policy says
     // the serve-time anti-join is the cheaper deal, nothing compacts
     assert(nStanding > 20, "fixture store too small for a 10% threshold")
-    assert(!Dedup.cjkCompactIfNeeded(spark, dir, setA),
+    assert(!StoreSwap.compactIfNeeded(spark, Dedup.cjkStore(dir), setA),
       "one delete must not trigger a store rebuild")
     assert(IndexMeta.isStamped(dir) &&
       spark.read.parquet(s"$dir/signatures").count() == nStanding,
@@ -83,7 +83,7 @@ class TombstoneLifecycleSpec extends AnyFunSuite {
       watch, "delB")
     drain()
     val setFull = Drain.readSink(spark, setDir)
-    assert(Dedup.cjkCompactIfNeeded(spark, dir, setFull, maxDeleteRatio = 0.05),
+    assert(StoreSwap.compactIfNeeded(spark, Dedup.cjkStore(dir), setFull),
       "the accumulated set must cross the ratio and trigger the expunge")
 
     // phase 3: the compacted store serves CLEAN — no tombstone logic —
@@ -134,7 +134,8 @@ class TombstoneLifecycleSpec extends AnyFunSuite {
     // phase 1: one delete over a whole store — the ratio policy says
     // the serve-time anti-join is the cheaper deal, nothing compacts
     assert(nStanding > 20, "fixture store too small for a 10% threshold")
-    assert(!Dedup.semanticBucketsCompactIfNeeded(spark, dir, setA),
+    assert(!StoreSwap.compactIfNeeded(spark, Dedup.semanticBucketsStore(dir),
+        setA),
       "one delete must not trigger a store rebuild")
     assert(IndexMeta.isStamped(dir) &&
       spark.read.parquet(s"$dir/buckets").count() == nStanding,
@@ -150,7 +151,8 @@ class TombstoneLifecycleSpec extends AnyFunSuite {
       "left_anti"), watch, "delB")
     drain()
     val setFull = Drain.readSink(spark, setDir)
-    assert(Dedup.semanticBucketsCompactIfNeeded(spark, dir, setFull),
+    assert(StoreSwap.compactIfNeeded(spark, Dedup.semanticBucketsStore(dir),
+        setFull),
       "the accumulated set must cross the ratio and trigger the expunge")
 
     // phase 3: the compacted store serves CLEAN — no tombstone logic —
