@@ -21,20 +21,37 @@ import java.nio.charset.StandardCharsets
   *   (`text_processing.py:174`); errors → 500 `{"detail": msg}`
   *   (`text_processing.py:176-177`)
   *
-  * Dims come from `GRAFT_DIMS_DIR` parquet when set (the engine's stand-in
-  * for the reference's MongoDB connection env) and are synthesized from
-  * the request otherwise, exactly like `db_to_dataframe.py:56-58`'s
-  * fallback rule. The LLM client is env-selected ([[graft.etl.LlmHttp
-  * .fromEnv]]) — no key → offline mock.
+  * Every request runs in one [[requestSession]], a child of the caller's
+  * session with request-sized SQL settings; the caller's session (the
+  * batch and catalog paths) keeps its own. Dims come from
+  * `GRAFT_DIMS_DIR` parquet when set (the engine's stand-in for the
+  * reference's MongoDB connection env), read once at start-up and held
+  * driver-local ([[graft.etl.Dims.local]]), and are synthesized from the
+  * request otherwise, exactly like `db_to_dataframe.py:56-58`'s fallback
+  * rule. The LLM client is env-selected ([[graft.etl.LlmHttp.fromEnv]])
+  * — no key → offline mock.
   */
 object Serve {
 
   private val mapper = new ObjectMapper()
 
+  /** The session requests run in: `spark`'s child with adaptive execution
+    * off and one shuffle partition. A request is driver-sized by contract
+    * (its report is collected into the HTTP body), so AQE's query-stage
+    * jobs and a multi-partition shuffle only add fixed cost per job; the
+    * settings are per session, so `spark` itself is left as it is. */
+  private[graft] def requestSession(spark: SparkSession): SparkSession = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.adaptive.enabled", "false")
+    s.conf.set("spark.sql.shuffle.partitions", "1")
+    s
+  }
+
   /** Start the server on `port` (0 = ephemeral, for tests) and return it
     * running; the caller owns stop(). */
   def startServer(spark: SparkSession, port: Int): HttpServer = {
-    val dims = Conf.Env.dimsDir.map(Dims.fromParquet(spark, _))
+    val session = requestSession(spark)
+    val dims = Conf.Env.dimsDir.map(Dims.fromParquet(session, _).local)
     val client = LlmHttp.fromEnv()
     val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
 
@@ -63,7 +80,7 @@ object Serve {
         // so the shell validates eagerly to keep the reference's
         // error-vs-empty distinction
         mapper.readTree(body)
-        val reports = Pipeline.run(spark, body, dims, client).collect()
+        val reports = Pipeline.run(session, body, dims, client).collect()
         val root = mapper.createObjectNode()
         val rows = root.putArray("rows")
         reports.foreach(r => rows.addObject().put("report", r.getString(1)))

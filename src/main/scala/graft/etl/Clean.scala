@@ -10,8 +10,9 @@ import org.apache.spark.sql.functions._
   * Everything here is built-in codegen'd expressions (`translate`,
   * `regexp_replace`, `when`, window `row_number`) — no UDFs, so the whole
   * stage stays inside whole-stage codegen and Catalyst can reorder/pipe it
-  * freely. The only exchanges are the window dedup (hash partition by the
-  * 8-column key) and the final display sort (range partition).
+  * freely. [[cleanRows]]' only exchange is the window dedup (hash
+  * partition by the 8-column key); [[clean]] adds the display sort (range
+  * partition) for readers that want the rows in the reference's order.
   */
 object Clean {
 
@@ -23,7 +24,7 @@ object Clean {
 
   /** COMMENT normalization (`data_preprocessing.py:37-55`): null→'' →
     * strip newlines → full-width translate → squeeze whitespace around
-    * parens. The one COMMENT expression: [[clean]] projects it too. */
+    * parens. The one COMMENT expression: [[cleanRows]] projects it too. */
   private def normalizedComment: Column =
     regexp_replace(
       regexp_replace(
@@ -79,16 +80,23 @@ object Clean {
   def displaySort(df: DataFrame): DataFrame =
     df.orderBy(Seq(col("RECORD_ID"), col("GROUPNO"), col("TCNAME_ITEM")) ++ ingestOrder: _*)
 
-  /** Full `postprocess_multilang` chain. Semantically the reference's
-    * stage order (COMMENT `data_preprocessing.py:37-55` → SUMMARY default
-    * fill `:58-60` → GROUPNO renumber `:62-65` → GROUP default fill
-    * `:68-70` → dedup `:72` → sort `:75`; each SUMMARY/GROUP column is
+  /** Full `postprocess_multilang` chain: [[cleanRows]] in display order
+    * (`data_preprocessing.py:75`). */
+  def clean(df: DataFrame): DataFrame = displaySort(cleanRows(df))
+
+  /** `postprocess_multilang` up to the sort, rows in no particular order —
+    * what [[Pipeline]]'s chain reads, since neither of its readers uses
+    * row order (the rewrite pairs take a `distinct`, and the report
+    * re-sorts each record by its own display order). Semantically the
+    * reference's stage order (COMMENT `data_preprocessing.py:37-55` →
+    * SUMMARY default fill `:58-60` → GROUPNO renumber `:62-65` → GROUP
+    * default fill `:68-70` → dedup `:72`; each SUMMARY/GROUP column is
     * filled with its own column-language default regardless of the row's
     * LANG_NO), but the per-column normalizations touch disjoint columns,
     * so they collapse into a SINGLE projection: chaining them as 10+
     * `withColumn`s makes Catalyst re-resolve a deepening plan per step —
     * measurable seconds of driver-side analysis on the full pipeline. */
-  def clean(df: DataFrame): DataFrame = {
+  def cleanRows(df: DataFrame): DataFrame = {
     val summaryDefaults = Schemas.SUMMARY_COLS.toMap
       .map { case (c, lang) => c -> Schemas.LANG_DEFAULT_SUMMARY(lang) }
     val groupDefaults = Schemas.GROUP_COLS.toMap
@@ -103,6 +111,6 @@ object Clean {
       case c if groupDefaults.contains(c) => fillExpr(c, groupDefaults(c))
       case c => col(c)
     }: _*)
-    displaySort(keepFirst(renumberGroupNo(normalized)))
+    keepFirst(renumberGroupNo(normalized))
   }
 }

@@ -36,13 +36,28 @@ final case class Dims(itemMeta: DataFrame, itemGroupMap: DataFrame,
     * `{"ITEM_CODE": {"$in": unique_items_list}}` (`db_to_dataframe.py:
     * 103-104,114-115`) as a broadcast left-semi join (the dynamic-key-set
     * flavor of predicate pushdown). No-op for correctness (left joins
-    * ignore extra dim rows); at scale it shrinks the broadcast side. */
-  def restrictedTo(fact: DataFrame): Dims = {
-    val codes = broadcast(
-      fact.select(trim(col("ITEM_CODE").cast("string")).as("ITEM_CODE")).distinct())
-    copy(
-      itemMeta = itemMeta.join(codes, Seq("ITEM_CODE"), "left_semi"),
-      itemGroupMap = itemGroupMap.join(codes, Seq("ITEM_CODE"), "left_semi"))
+    * ignore extra dim rows); at scale it shrinks the broadcast side.
+    *
+    * Item dims already in driver memory ([[local]]) are returned as they
+    * are: a semi-join cannot shrink them, it would only add its own
+    * broadcast jobs to every request. */
+  def restrictedTo(fact: DataFrame): Dims =
+    if (itemMeta.isLocal && itemGroupMap.isLocal) this
+    else {
+      val codes = broadcast(
+        fact.select(trim(col("ITEM_CODE").cast("string")).as("ITEM_CODE")).distinct())
+      copy(
+        itemMeta = itemMeta.join(codes, Seq("ITEM_CODE"), "left_semi"),
+        itemGroupMap = itemGroupMap.join(codes, Seq("ITEM_CODE"), "left_semi"))
+    }
+
+  /** The four tables collected once into driver-local frames, in the
+    * session they were read in — for a long-lived server that would
+    * otherwise re-scan them on every request. They are bounded by code
+    * cardinality, not data volume (see [[Enrich]]). */
+  def local: Dims = {
+    import Pipeline.localize
+    Dims(localize(itemMeta), localize(itemGroupMap), localize(diagTbl), localize(summaryTbl))
   }
 }
 

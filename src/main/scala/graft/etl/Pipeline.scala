@@ -8,16 +8,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * The stages are composed in exactly one place, the private [[chain]]:
   * [[Ingest.flatten]] → [[Dims.fallback]] / [[Dims.restrictedTo]] →
-  * [[Enrich.enrich]] → [[Clean.clean]] → [[Llm.rewriteFrame]] →
+  * [[Enrich.enrich]] → [[Clean.cleanRows]] → [[Llm.rewriteFrame]] →
   * [[Report.reportJoined]]. Every entry point runs that chain, lazily
   * ([[runDistributed]]) or eagerly ([[runRecords]], [[run]],
   * [[runAndPersist]]).
   *
   * Unlike the reference's materialize-after-every-step pandas flow, the
   * whole chain up to the report serializer is one lazy Catalyst plan: four
-  * broadcast joins, codegen'd string normalization, one hash-partition
-  * exchange for the keep-first dedup window, and one range exchange for the
-  * display sort. The LLM rewrite is resolved once over the global distinct
+  * broadcast joins, codegen'd string normalization and one hash-partition
+  * exchange for the keep-first dedup window. Rows are put in order once, at
+  * the edge: the report by its final `_rec_ord` sort, and the cleaned-frame
+  * CSV of [[runAndPersist]] by [[Clean.displaySort]]; nothing in between
+  * reads row order. The LLM rewrite is resolved once over the global distinct
   * summary set (per-value semantics identical to the reference's per-record
   * batching, since the rewrite is keyed by text) and applied as a broadcast
   * left join.
@@ -30,14 +32,15 @@ object Pipeline {
     * fact is localized, `cleaned` is cached for its two readers (the
     * rewrite-pair scan and the report serializer) and the report is
     * localized, after which the cache is dropped. `onCleaned` sees the
-    * cleaned frame before the rewrite runs ([[runAndPersist]]'s CSV). */
+    * cleaned rows, in no particular order, before the rewrite runs
+    * ([[runAndPersist]]'s CSV). */
   private def chain(records: DataFrame, dims: Option[Dims],
                     client: Llm.RewriteClient, eager: Boolean,
                     onCleaned: DataFrame => Unit = _ => ()): DataFrame = {
     val flat = Ingest.flatten(records)
     val fact = if (eager) localize(flat) else flat
-    val d = dims.getOrElse(Dims.fallback(fact)).restrictedTo(fact)
-    val clean = Clean.clean(Enrich.enrich(fact, d))
+    val d = dims.fold(Dims.fallback(fact))(_.restrictedTo(fact))
+    val clean = Clean.cleanRows(Enrich.enrich(fact, d))
     val cleaned = if (eager) clean.cache() else clean
     try {
       onCleaned(cleaned)
@@ -97,12 +100,14 @@ object Pipeline {
     *    repartition-invariance guarantee holds only for deterministic
     *    inputs. With no cache the fact scan also appears twice in the
     *    physical plan — at corpus scale persist the upstream `records`
-    *    frame (or checkpoint `Clean.clean`'s output) if the input scan
+    *    frame (or checkpoint `Clean.cleanRows`' output) if the input scan
     *    is expensive; the engine will not hide a persistence decision
     *    inside a lazy API;
     *  - dims resolve exactly as in [[runRecords]]: explicit dims are
-    *    broadcast after a left-semi restriction to the fact's codes;
-    *    fallback dims derive from the fact frame itself, still lazily.
+    *    broadcast after a left-semi restriction to the fact's codes
+    *    (unless already driver-local, see [[Dims.restrictedTo]]);
+    *    fallback dims derive from the fact frame itself, still lazily,
+    *    and hold only the fact's codes, so they are not restricted.
     */
   def runDistributed(records: DataFrame, dims: Option[Dims] = None,
                      client: Llm.RewriteClient = Llm.MockClient): DataFrame =
@@ -111,7 +116,7 @@ object Pipeline {
   /** Collect a driver-sized result and rebuild it as a local DataFrame,
     * cutting all lineage to the pipeline's cached intermediates so they
     * can unpersist immediately. */
-  private def localize(df: DataFrame): DataFrame = {
+  private[etl] def localize(df: DataFrame): DataFrame = {
     val rows = df.collect()
     df.sparkSession.createDataFrame(
       java.util.Arrays.asList(rows: _*), df.schema)
@@ -134,7 +139,8 @@ object Pipeline {
     def csv(prefix: String, df: DataFrame): Unit =
       Sinks.writeCsv(df, s"$outDir/${Sinks.timestampedName(prefix, "")}")
     val report = chain(Ingest.parseBody(spark, requestBody), dims, client,
-      eager = true, onCleaned = c => csv("df_preprocessed_", c.drop("_rid")))
+      eager = true,
+      onCleaned = c => csv("df_preprocessed_", Clean.displaySort(c).drop("_rid")))
     csv("df_result_", report)
     report
   }

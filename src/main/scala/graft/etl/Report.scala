@@ -309,7 +309,8 @@ object Report {
     *    row content ([[Clean.ContentOrder]]), so the report never depends
     *    on shuffle arrival or partition count.
     *
-    * @param cleaned output of [[Clean.clean]] (22 columns + `_rid`)
+    * @param cleaned output of [[Clean.cleanRows]] (22 columns + `_rid`, in
+    *                any row order)
     * @param echo    output of [[Ingest.requestEcho]]
     * @param rewrite output of [[Llm.rewriteFrame]]:
     *                `(_rw_lang, _rw_orig, _rw_text)`

@@ -1,6 +1,10 @@
 package graft.etl
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.LeftSemi
+import org.apache.spark.sql.catalyst.plans.logical.Join
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions.{col, concat, lit}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,48 +15,8 @@ import scala.util.Random
   * order-dependent operator deterministic for arbitrary inputs, not
   * just the golden fixtures). */
 class PipelinePropertiesSpec extends AnyFunSuite {
+  import PipelinePropertiesSpec._
   lazy val spark: SparkSession = TestSpark.session
-
-  /** Seeded random request body: multi-record, all languages, shared
-    * diag codes (summary sharing), duplicate findings, empty/whitespace
-    * comments, full-width punctuation. */
-  private def randomBody(seed: Long, nRecords: Int): String = {
-    val rnd = new Random(seed)
-    def pick(vs: String*) = vs(rnd.nextInt(vs.length))
-    val comments = Seq("正常（範圍內） 值", "需要\r\n追蹤", "ok value", "  ", "",
-      "５０％ 以上！", "テスト結果", "简体 说明")
-    val records = (0 until nRecords).map { r =>
-      val items = (0 until 1 + rnd.nextInt(3)).map { i =>
-        val findings = (0 until 1 + rnd.nextInt(3)).map { _ =>
-          s"""{"DIAG_CODE": "D${rnd.nextInt(5)}", "COMMENT": ${escape(pick(comments: _*))}, "SUMMARY_CODE": "X"}"""
-        }
-        s"""{"ITEM_CODE": "I${rnd.nextInt(4)}", "FINDINGS": [${findings.mkString(", ")}]}"""
-      }
-      s"""{"RECORD_ID": "R$r", "LANG_NO": "${1 + rnd.nextInt(4)}", "ORG_ID": "O${rnd.nextInt(2)}", "ITEMS": [${items.mkString(", ")}]}"""
-    }
-    s"[${records.mkString(", ")}]"
-  }
-  private def escape(s: String): String =
-    "\"" + s.flatMap {
-      case '\r' => "\\r"; case '\n' => "\\n"; case '"' => "\\\""
-      case c => c.toString
-    } + "\""
-
-  /** Fallback dims for `records`, with real summary texts: fallback
-    * summaries are empty, so Clean would fill the per-language DEFAULTS,
-    * which bypass the LLM. */
-  private def summaryDims(records: DataFrame): Dims = {
-    val d0 = Dims.fallback(Ingest.flatten(records))
-    d0.copy(summaryTbl = d0.summaryTbl.select(
-      col("SUMMARY_CODE"),
-      concat(lit("摘要 "), col("SUMMARY_CODE")).as("TCNAME_SUMMARY"),
-      concat(lit("摘要simp "), col("SUMMARY_CODE")).as("SCNAME_SUMMARY"),
-      concat(lit("Sum "), col("SUMMARY_CODE")).as("ENNAME_SUMMARY"),
-      concat(lit("要約 "), col("SUMMARY_CODE")).as("JPNAME_SUMMARY")))
-  }
-
-  private def triples(df: DataFrame): Seq[(String, String, String)] =
-    df.collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSeq
 
   test("rewrite map path ≡ broadcast-join path on random requests") {
     // a client whose output is distinguishable per (lang, text), so a
@@ -219,6 +183,32 @@ class PipelinePropertiesSpec extends AnyFunSuite {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
+  test("runDistributed orders once: one range exchange, the final _rec_ord sort") {
+    // adaptive execution off so the executed plan is the whole static plan
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.adaptive.enabled", "false")
+    val records = Ingest.parseBody(s2, randomBody(19L, nRecords = 4))
+    val dims = summaryDims(records)
+    val plan = Pipeline.runDistributed(records, Some(dims)).queryExecution.executedPlan
+    val ranges = plan.collect {
+      case e: ShuffleExchangeExec => e.outputPartitioning
+    }.collect { case r: RangePartitioning => r }
+    assert(ranges.length == 1, s"expected one range exchange, found ${ranges.length}:\n$plan")
+    assert(ranges.head.ordering.flatMap(_.references.map(_.name)) == Seq("_rec_ord"))
+
+    // driver-local item dims are not restricted: same frames, no semi-join
+    val local = dims.local
+    val restricted = local.restrictedTo(Ingest.flatten(records))
+    assert(restricted.itemMeta eq local.itemMeta)
+    assert(restricted.itemGroupMap eq local.itemGroupMap)
+    Seq(restricted.itemMeta, restricted.itemGroupMap).foreach { df =>
+      assert(!df.queryExecution.optimizedPlan.exists {
+        case j: Join => j.joinType == LeftSemi
+        case _ => false
+      }, s"semi-join in a local dim's plan:\n${df.queryExecution.optimizedPlan}")
+    }
+  }
+
   test("runDistributed is partition-count invariant on random requests") {
     import spark.implicits._
     Seq(13L, 37L).foreach { seed =>
@@ -248,5 +238,50 @@ class PipelinePropertiesSpec extends AnyFunSuite {
         assert(rep == base, s"seed $seed: output changed under repartition($n)")
       }
     }
+  }
+}
+
+/** Request generators and report triples shared with `ServeSpec`. */
+object PipelinePropertiesSpec {
+
+  def triples(df: DataFrame): Seq[(String, String, String)] =
+    df.collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSeq
+
+  /** Seeded random request body: multi-record, all languages, shared
+    * diag codes (summary sharing), duplicate findings, empty/whitespace
+    * comments, full-width punctuation. */
+  def randomBody(seed: Long, nRecords: Int): String = {
+    val rnd = new Random(seed)
+    def pick(vs: String*) = vs(rnd.nextInt(vs.length))
+    val comments = Seq("正常（範圍內） 值", "需要\r\n追蹤", "ok value", "  ", "",
+      "５０％ 以上！", "テスト結果", "简体 说明")
+    val records = (0 until nRecords).map { r =>
+      val items = (0 until 1 + rnd.nextInt(3)).map { i =>
+        val findings = (0 until 1 + rnd.nextInt(3)).map { _ =>
+          s"""{"DIAG_CODE": "D${rnd.nextInt(5)}", "COMMENT": ${escape(pick(comments: _*))}, "SUMMARY_CODE": "X"}"""
+        }
+        s"""{"ITEM_CODE": "I${rnd.nextInt(4)}", "FINDINGS": [${findings.mkString(", ")}]}"""
+      }
+      s"""{"RECORD_ID": "R$r", "LANG_NO": "${1 + rnd.nextInt(4)}", "ORG_ID": "O${rnd.nextInt(2)}", "ITEMS": [${items.mkString(", ")}]}"""
+    }
+    s"[${records.mkString(", ")}]"
+  }
+  private def escape(s: String): String =
+    "\"" + s.flatMap {
+      case '\r' => "\\r"; case '\n' => "\\n"; case '"' => "\\\""
+      case c => c.toString
+    } + "\""
+
+  /** Fallback dims for `records`, with real summary texts: fallback
+    * summaries are empty, so Clean would fill the per-language DEFAULTS,
+    * which bypass the LLM. */
+  def summaryDims(records: DataFrame): Dims = {
+    val d0 = Dims.fallback(Ingest.flatten(records))
+    d0.copy(summaryTbl = d0.summaryTbl.select(
+      col("SUMMARY_CODE"),
+      concat(lit("摘要 "), col("SUMMARY_CODE")).as("TCNAME_SUMMARY"),
+      concat(lit("摘要simp "), col("SUMMARY_CODE")).as("SCNAME_SUMMARY"),
+      concat(lit("Sum "), col("SUMMARY_CODE")).as("ENNAME_SUMMARY"),
+      concat(lit("要約 "), col("SUMMARY_CODE")).as("JPNAME_SUMMARY")))
   }
 }

@@ -17,7 +17,8 @@ class RoundNineteenOpsSpec extends AnyFunSuite {
   private def rows(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(_.toSeq).toSet
 
-  test("d35: semanticBucketsCompact equals publish-over-remainder — " +
+  test("d35: StoreSwap.compact over Dedup.semanticBucketsStore equals " +
+    "publish-over-remainder — " +
     "the compacted store's rows AND its serve match a fresh store " +
     "built over corpus-minus-tombstones") {
     val d35 = graft.SparkEntry.queries("d35_semantic_compacted_serve")(
@@ -61,7 +62,8 @@ class RoundNineteenOpsSpec extends AnyFunSuite {
         "remainder publish")
   }
 
-  test("semanticBucketsCompactIfNeeded: the ratio policy declines a " +
+  test("StoreSwap.compactIfNeeded over Dedup.semanticBucketsStore: the " +
+    "ratio policy declines a " +
     "trickle (store untouched, still stamped) and a poison-stamped " +
     "store refuses compaction, load, and append") {
     val vecs = Tables.embeddings(spark, sf)
