@@ -98,7 +98,8 @@ object Serve {
 
   def main(args: Array[String]): Unit = {
     val port = args.headOption.map(_.toInt).getOrElse(Conf.Env.servePort)
-    val spark = Conf.localSession(Conf.Env.cpus())
+    val spark = Conf.localSession(
+      Conf.Env.cpus(Runtime.getRuntime.availableProcessors()))
     val server = startServer(spark, port)
     println(s"graft serving on http://127.0.0.1:${server.getAddress.getPort}")
     Thread.currentThread().join()

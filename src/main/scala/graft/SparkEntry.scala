@@ -48,10 +48,11 @@ object SparkEntry {
                   col("record_id"), col("report"))))), lit("utf-8")))
                 .as("reports_md5"))
         }),
-        // The serializer's decision layer (ordered nested grouping, block
-        // reorder, header suppression) as a relational plan over a
-        // documents-derived hierarchy — SQL-expressible, so unlike p01 it
-        // carries a full hash oracle.
+        // The serializer's own decisions (ordered nested grouping, block
+        // reorder, header suppression — Report.blocks, the code p01 runs)
+        // over a documents-derived hierarchy, one row per block; unlike
+        // p01 it carries a full hash oracle, the SQL re-expression
+        // Report.blocksOracleSql.
         "p02_report_blocks" -> ((s: SparkSession, d: String) =>
           graft.etl.Report.reportBlocks(
             graft.etl.Report.blocksInput(ops.Tables.documents(s, d)),
@@ -131,13 +132,6 @@ object SparkEntry {
         graft.streaming.Drain.DocumentsSchema, "doc_id", setDir,
         deltaFilter = f, glob = glob)
     }
-    // one index segment (postings/lexicon/stats) appended to `segDir`
-    def appendSegment(segDir: String,
-                      seg: (DataFrame, DataFrame, DataFrame)): Unit = {
-      seg._1.write.mode("append").parquet(s"$segDir/postings")
-      seg._2.write.mode("append").parquet(s"$segDir/lexicon")
-      seg._3.write.mode("append").parquet(s"$segDir/stats")
-    }
     // the Chinese query over a CJK segment store's merged index
     def serveCjk(tag: String): (SparkSession, String) => DataFrame =
       (s, d) => {
@@ -167,8 +161,8 @@ object SparkEntry {
         (s, d) => {
           val segDir = ops.IndexPaths.dir("r12_seg", d)
           ops.IndexPaths.clear(segDir)
-          appendSegment(segDir, ops.Search.bm25BuildIndexTokens(
-            ops.Clusters.sharedCjkTerms(s, d)
+          graft.streaming.IndexStream.appendSegment(segDir,
+            ops.Search.bm25BuildIndexTokens(ops.Clusters.sharedCjkTerms(s, d)
               .filter(col("doc_id") % 2 === 0), "doc_id", "terms"))
           ops.IndexMeta.stamp(segDir)
           val (srcDir, glob) = ops.Tables.streamSource(d, "documents")
@@ -195,8 +189,9 @@ object SparkEntry {
           val toks = ops.Clusters.sharedCjkTerms(s, d)
           Seq(col("doc_id") % 2 === 0, col("doc_id") % 2 =!= 0)
             .foreach { pred =>
-              appendSegment(segDir, ops.Search.bm25BuildIndexTokens(
-                toks.filter(pred), "doc_id", "terms"))
+              graft.streaming.IndexStream.appendSegment(segDir,
+                ops.Search.bm25BuildIndexTokens(toks.filter(pred), "doc_id",
+                  "terms"))
             }
           ops.IndexMeta.stamp(segDir)
           // dl-CARRYING tombstones (the compactCjk deployment remedy —

@@ -30,16 +30,16 @@ object Llm {
     def rewrite(langNo: String, text: String): String = s"[LLM_OUTPUT]$text"
   }
 
-  /** Retry/backoff policy port (`llm_processing.py:161-205`): ≤3 attempts;
-    * rate-limit detected by 'rate_limit'/'429' substring; wait parsed from
-    * "try again in Ns" else exponential `base·2^attempt`; on exhaustion or
-    * any non-rate-limit error the input is returned unchanged (graceful
-    * degradation). */
-  def withRetry(client: RewriteClient, maxRetries: Int = 3, baseDelaySec: Double = 1.0)
+  /** Retry/backoff policy port (`llm_processing.py:161-205`): ≤
+    * [[MaxRetries]] attempts; rate-limit detected by 'rate_limit'/'429'
+    * substring; wait parsed from "try again in Ns" else exponential
+    * `base·2^attempt`; on exhaustion or any non-rate-limit error the
+    * input is returned unchanged (graceful degradation). */
+  def withRetry(client: RewriteClient, baseDelaySec: Double = 1.0)
       (langNo: String, text: String): String = {
     val tryAgain = "try again in ([\\d.]+)s".r
     var attempt = 0
-    while (attempt < maxRetries) {
+    while (attempt < MaxRetries) {
       try {
         return client.rewrite(langNo, text)
       } catch {
@@ -51,7 +51,7 @@ object Llm {
             .map(_.group(1).toDouble + 0.1)
             .getOrElse(baseDelaySec * math.pow(2, attempt))
           Thread.sleep((wait * 1000).toLong)
-          if (attempt == maxRetries - 1) return text
+          if (attempt == MaxRetries - 1) return text
       }
       attempt += 1
     }
@@ -61,6 +61,10 @@ object Llm {
   /** Client threads per partition: the reference's
     * `ThreadPoolExecutor(max_workers=3)` (`llm_processing.py:80,131`). */
   private val MaxWorkers = 3
+
+  /** Client attempts per summary: the reference's ≤ 3 attempts
+    * (`llm_processing.py:161-205`). */
+  private val MaxRetries = 3
 
   /** Distributed rewrite: distinct non-empty trimmed summaries →
     * `(summary, rewritten)` pairs.

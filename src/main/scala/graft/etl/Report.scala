@@ -1,7 +1,8 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import scala.collection.mutable
 
@@ -14,6 +15,12 @@ import scala.collection.mutable
   * `groupByKey(RECORD_ID).mapGroups` with plain Scala inside — each group
   * is one medical record (tiny), and records distribute across executors,
   * so the operator scales horizontally with record count.
+  *
+  * The serializer's decisions live in ONE place, [[blocks]], and its text
+  * formatting in [[render]]. The pipeline runs both per record
+  * ([[processOneRecord]]); catalog entry `p02_report_blocks` runs
+  * [[blocks]] alone ([[reportBlocks]]) and puts its output under the
+  * DuckDB oracle ([[blocksOracleSql]]).
   */
 object Report {
 
@@ -26,178 +33,129 @@ object Report {
                                 summary: String,
                                 rewritten: Option[String] = None)
 
+  /** One report block, in display order: group `grpOrd` (1-based, named
+    * by the trimmed `grp`), block `blockOrd` (1-based within the group),
+    * whether its item header prints, its item names, comments and
+    * trimmed summary, and the summary's LLM rewrite if any. */
+  private[etl] final case class Block(grpOrd: Int, grp: String, blockOrd: Int,
+      showHeader: Boolean, items: Vector[String], comments: Vector[String],
+      summary: String, rewritten: Option[String])
+
   private def s(r: Row, i: Int): String =
     if (r.isNullAt(i)) "" else String.valueOf(r.get(i))
 
-  /** `process_1_record` (`text_processing.py:66-126`) ported as sequential
-    * Scala over the record's rows, already sorted in display order.
+  // A7 — first-occurrence item-name collection keyed by trimmed code
+  // (`text_processing.py:129-141`).
+  private def uniqueItemNames(rs: Seq[RRow]): Vector[String] = {
+    val seen = mutable.LinkedHashSet[String]()
+    val out = Vector.newBuilder[String]
+    rs.foreach { r =>
+      val code = r.itemCode.trim
+      if (!seen.contains(code)) { seen += code; out += r.itemName.trim }
+    }
+    out.result()
+  }
+
+  // pandas groupby(sort=False): groups in first-occurrence order; rows
+  // within a group keep frame order, even when non-contiguous.
+  private def groupedBy(rs: Seq[RRow])(key: RRow => String): Vector[(String, Vector[RRow])] = {
+    val m = mutable.LinkedHashMap[String, mutable.ArrayBuffer[RRow]]()
+    rs.foreach(r => m.getOrElseUpdate(key(r), mutable.ArrayBuffer()) += r)
+    m.iterator.map { case (k, v) => (k, v.toVector) }.toVector
+  }
+
+  /** The decision half of `process_1_record` (`text_processing.py:66-126`)
+    * over the record's rows, already sorted in display order.
     *
-    * Hierarchy: GROUP (indent 0) → ITEMS (4) → COMMENTS (8) → SUMMARY (12,
-    * with a trailing blank line). Nested groupings are first-occurrence
-    * ordered (pandas `groupby(sort=False)`); rows whose SUMMARY equals the
-    * language default are sub-grouped per COMMENT, all others per SUMMARY;
-    * blocks re-order by first-seen item tuple; repeated item headers are
-    * run-length suppressed.
+    * Hierarchy: GROUP → ITEMS → COMMENTS → SUMMARY. Nested groupings are
+    * first-occurrence ordered (pandas `groupby(sort=False)`); rows whose
+    * SUMMARY equals `defaultText` are sub-grouped per COMMENT, all others
+    * per SUMMARY; blocks re-order by first-seen item tuple; repeated item
+    * headers are run-length suppressed.
     */
-  private[etl] def processOneRecord(lang: String, rows: Seq[RRow]): String = {
-    val defaultText = Schemas.LANG_DEFAULT_SUMMARY.getOrElse(lang, "")
-
-    // A7 — first-occurrence item-name collection keyed by trimmed code
-    // (`text_processing.py:129-141`).
-    def uniqueItemNames(rs: Seq[RRow]): Vector[String] = {
-      val seen = mutable.LinkedHashSet[String]()
-      val out = Vector.newBuilder[String]
-      rs.foreach { r =>
-        val code = r.itemCode.trim
-        if (!seen.contains(code)) { seen += code; out += r.itemName.trim }
-      }
-      out.result()
-    }
-
-    // pandas groupby(sort=False): groups in first-occurrence order; rows
-    // within a group keep frame order, even when non-contiguous.
-    def groupedBy(rs: Seq[RRow])(key: RRow => String): Vector[(String, Vector[RRow])] = {
-      val m = mutable.LinkedHashMap[String, mutable.ArrayBuffer[RRow]]()
-      rs.foreach(r => m.getOrElseUpdate(key(r), mutable.ArrayBuffer()) += r)
-      m.iterator.map { case (k, v) => (k, v.toVector) }.toVector
-    }
-
-    final case class Block(items: Vector[String], comments: Vector[String],
-                           summary: String, rewritten: Option[String])
-
-    val lines = mutable.ArrayBuffer[String]()
-    groupedBy(rows)(_.group).foreach { case (group, dfGroup) =>
-      lines += group.trim
-
-      val blocks = mutable.ArrayBuffer[Block]()
-      groupedBy(dfGroup)(_.summary).foreach { case (summary, dfSummary) =>
-        if (summary == defaultText) {
-          // default-summary branch: one block per COMMENT
-          // (`text_processing.py:86-93`).
-          groupedBy(dfSummary)(_.comment).foreach { case (comment, dfComment) =>
-            blocks += Block(uniqueItemNames(dfComment),
-              Vector(comment.trim), summary.trim, dfComment.head.rewritten)
-          }
-        } else {
-          // one block per SUMMARY with its distinct comments in
-          // first-occurrence order (`text_processing.py:94-101`).
-          blocks += Block(uniqueItemNames(dfSummary),
-            dfSummary.map(_.comment.trim).distinct.toVector, summary.trim,
-            dfSummary.head.rewritten)
-        }
+  private[etl] def blocks(defaultText: String, rows: Seq[RRow]): Vector[Block] =
+    groupedBy(rows)(_.group).zipWithIndex.flatMap { case ((group, dfGroup), gi) =>
+      val grpBlocks = groupedBy(dfGroup)(_.summary).flatMap { case (summary, dfSummary) =>
+        // default-summary branch: one block per COMMENT
+        // (`text_processing.py:86-93`); any other SUMMARY is one block
+        // with its distinct comments in first-occurrence order
+        // (`text_processing.py:94-101`).
+        val parts =
+          if (summary == defaultText) groupedBy(dfSummary)(_.comment).map(_._2)
+          else Vector(dfSummary)
+        parts.map(rs => Block(gi + 1, group.trim, 0, showHeader = false,
+          uniqueItemNames(rs), rs.map(_.comment.trim).distinct, summary.trim,
+          rs.head.rewritten))
       }
 
       // A8/O2 — blocks reorder by (first-seen item tuple, original index)
-      // (`text_processing.py:103-110`).
-      val firstSeen = mutable.HashMap[Vector[String], Int]()
-      blocks.zipWithIndex.foreach { case (b, i) =>
-        if (!firstSeen.contains(b.items)) firstSeen(b.items) = i
-      }
-      val ordered = blocks.zipWithIndex
-        .sortBy { case (b, i) => (firstSeen(b.items), i) }
+      // (`text_processing.py:103-110`); `sortBy` is stable.
+      val ordered = grpBlocks.sortBy(b => grpBlocks.indexWhere(_.items == b.items))
 
       // W2 — run-length suppression of repeated item headers
-      // (`text_processing.py:112-117`); X10/X11 — `、` joins + indents.
-      var lastItems: Option[Vector[String]] = None
-      ordered.foreach { case (block, _) =>
-        if (!lastItems.contains(block.items)) {
-          lines += s"    ${block.items.mkString("、")}"
-          lastItems = Some(block.items)
-        }
-        if (block.comments.nonEmpty)
-          lines += s"        ${block.comments.mkString("、")}"
-        if (block.summary.nonEmpty)
-          lines += s"            ${block.rewritten.getOrElse(block.summary)}\n"
+      // (`text_processing.py:112-117`).
+      ordered.zipWithIndex.map { case (b, i) =>
+        b.copy(blockOrd = i + 1,
+          showHeader = i == 0 || ordered(i - 1).items != b.items)
       }
+    }
+
+  /** The formatting half of `process_1_record`: GROUP (indent 0) → ITEMS
+    * (4) → COMMENTS (8) → SUMMARY (12, with a trailing blank line), the
+    * summary printing as its rewrite when it has one; X10/X11 — `、`
+    * joins + indents. */
+  private[etl] def render(blocks: Seq[Block]): String = {
+    val lines = mutable.ArrayBuffer[String]()
+    var lastGrp = 0
+    blocks.foreach { block =>
+      if (block.grpOrd != lastGrp) {
+        lines += block.grp
+        lastGrp = block.grpOrd
+      }
+      if (block.showHeader)
+        lines += s"    ${block.items.mkString("、")}"
+      if (block.comments.nonEmpty)
+        lines += s"        ${block.comments.mkString("、")}"
+      if (block.summary.nonEmpty)
+        lines += s"            ${block.rewritten.getOrElse(block.summary)}\n"
     }
     lines.mkString("\n")
   }
 
-  /** The serializer's DECISION layer — ordered nested grouping (A5–A8),
-    * block reorder by first-seen item tuple (O2) and run-length header
-    * suppression (W2) — re-expressed as a fully relational window/agg
-    * plan, one block per output row. [[processOneRecord]] makes the same
-    * decisions sequentially inside `mapGroups`; this variant exists so
-    * they sit under the DuckDB hash gate (query `p02_report_blocks`) and
-    * so the block structure is queryable without string assembly.
-    * `ReportBlocksSpec` pins the two layers to each other: assembling
-    * these rows reproduces [[processOneRecord]]'s text byte-for-byte.
+  /** `process_1_record` (`text_processing.py:66-126`): the record's rows,
+    * already sorted in display order, rendered under `lang`'s default
+    * summary. */
+  private[etl] def processOneRecord(lang: String, rows: Seq[RRow]): String =
+    render(blocks(Schemas.LANG_DEFAULT_SUMMARY.getOrElse(lang, ""), rows))
+
+  /** Catalog entry `p02_report_blocks`: the serializer's own [[blocks]]
+    * decisions, one output row per block, so they sit under the DuckDB
+    * hash gate ([[blocksOracleSql]]) and the block structure is queryable
+    * without string assembly.
     *
-    * Input frame columns: `record_id` (any orderable type), `grp`,
-    * `item_code`, `item_name`, `comment`, `summary` (strings), `ord`
-    * (long; the display order, unique per row — the `_rid` analog).
-    *
-    * Decision mapping (reference `text_processing.py:66-126`):
-    *  - pandas `groupby(sort=False)` = "first occurrence wins" = `min(ord)`
-    *    windows per (grp), (grp, summary), (grp, summary, comment);
-    *  - the default-summary branch blocks per COMMENT, others per
-    *    SUMMARY: `blk_first`/`blk2` switch on `summary = default`;
-    *  - per-block item names: first occurrence keyed by TRIMMED code
-    *    (`uniqueItemNames`) = min-ord per code + `min_by` name, reheaded
-    *    in code-first order;
-    *  - per-block comments: trimmed-distinct in first-occurrence order
-    *    (the default branch's single comment falls out of the same
-    *    aggregate, since its block key pins the comment);
-    *  - reorder = `row_number` over (first_seen(items), original index);
-    *    suppression = `lag(items)` inequality. Item tuples compare by
-    *    their `、`-joined header string (collision with a `、` inside a
-    *    name is theoretically possible, never in the reference's data).
-    *
-    * Scale shape: everything is hash-partitionable by record — windows
-    * partition by (record_id, …) and aggregations group by block keys, so
-    * the plan is shuffle-on-record-key then map-local, no global sort,
-    * no driver state. Output: one row per block,
+    * Input frame columns: `record_id` (any type), `grp`, `item_code`,
+    * `item_name`, `comment`, `summary` (strings), `ord` (long; the display
+    * order, unique per row — the `_rid` analog). Rows group by record and
+    * sort by `ord`; no rewrites apply. Output: one row per block,
     * `(record_id, grp_ord, grp, block_ord, show_header, items, comments,
-    * summary)`. */
+    * summary)` — `record_id` keeps its input type, items and comments are
+    * `、`-joined. */
   def reportBlocks(frame: DataFrame, defaultSummary: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val wG = Window.partitionBy(col("record_id"), col("grp"))
-    val wS = Window.partitionBy(col("record_id"), col("grp"), col("summary"))
-    val wC = Window.partitionBy(col("record_id"), col("grp"), col("summary"),
-      col("comment"))
-    val b1 = frame
-      .withColumn("is_def", col("summary") === lit(defaultSummary))
-      .withColumn("g_first", min(col("ord")).over(wG))
-      .withColumn("s_first", min(col("ord")).over(wS))
-      .withColumn("c_first", min(col("ord")).over(wC))
-      .withColumn("blk_first",
-        when(col("is_def"), col("c_first")).otherwise(col("s_first")))
-      .withColumn("blk2", when(col("is_def"), col("comment")).otherwise(lit("")))
-    val blkKeyNames =
-      Seq("record_id", "grp", "summary", "blk2", "g_first", "s_first", "blk_first")
-    val blkKeys = blkKeyNames.map(col)
-    val items = b1
-      .groupBy(blkKeys :+ trim(col("item_code")).as("code"): _*)
-      .agg(min(col("ord")).as("code_first"),
-        min_by(trim(col("item_name")), col("ord")).as("name"))
-      .groupBy(blkKeys: _*)
-      .agg(expr("transform(array_sort(collect_list(struct(code_first, name))), s -> s.name)")
-        .as("item_names"))
-    val comments = b1
-      .groupBy(blkKeys :+ trim(col("comment")).as("cmt"): _*)
-      .agg(min(col("ord")).as("cmt_first"))
-      .groupBy(blkKeys: _*)
-      .agg(expr("transform(array_sort(collect_list(struct(cmt_first, cmt))), s -> s.cmt)")
-        .as("comment_list"))
-    val wEnum = Window.partitionBy(col("record_id"), col("grp"))
-      .orderBy(col("s_first"), col("blk_first"))
-    val e0 = items.join(comments, blkKeyNames)
-      .withColumn("blk_idx", row_number().over(wEnum))
-      .withColumn("items_key", array_join(col("item_names"), "、"))
-    val wFS = Window.partitionBy(col("record_id"), col("grp"), col("items_key"))
-    val wOrd = Window.partitionBy(col("record_id"), col("grp"))
-      .orderBy(col("first_seen"), col("blk_idx"))
-    val wRec = Window.partitionBy(col("record_id")).orderBy(col("g_first"))
-    e0.withColumn("first_seen", min(col("blk_idx")).over(wFS))
-      .withColumn("block_ord", row_number().over(wOrd).cast("long"))
-      .withColumn("prev_key", lag(col("items_key"), 1).over(wOrd))
-      .withColumn("show_header",
-        col("prev_key").isNull || col("prev_key") =!= col("items_key"))
-      .withColumn("grp_ord", dense_rank().over(wRec).cast("long"))
-      .select(col("record_id"), col("grp_ord"), trim(col("grp")).as("grp"),
-        col("block_ord"), col("show_header"), col("items_key").as("items"),
-        array_join(col("comment_list"), "、").as("comments"),
-        trim(col("summary")).as("summary"))
+    val in = frame.select(Seq("record_id", "grp", "item_code", "item_name",
+      "comment", "summary", "ord").map(col): _*)
+    val idField = in.schema("record_id")
+    val out = StructType(idField +: StructType.fromDDL("grp_ord bigint, " +
+      "grp string, block_ord bigint, show_header boolean, items string, " +
+      "comments string, summary string").fields)
+    in.groupBy(col("record_id"))
+      .as[Row, Row](Encoders.row(StructType(Seq(idField))), Encoders.row(in.schema))
+      .flatMapGroups { (id: Row, it: Iterator[Row]) =>
+        val rows = it.toVector.sortBy(_.getLong(6))
+          .map(r => RRow(s(r, 1), s(r, 2), s(r, 3), s(r, 4), s(r, 5)))
+        blocks(defaultSummary, rows).map(b => Row(id.get(0), b.grpOrd.toLong,
+          b.grp, b.blockOrd.toLong, b.showHeader, b.items.mkString("、"),
+          b.comments.mkString("、"), b.summary))
+      }(Encoders.row(out))
   }
 
   /** The `p02_report_blocks` input: a synthetic hierarchy frame derived
@@ -217,7 +175,26 @@ object Report {
 
   val BlocksDefault = "-"
 
-  /** DuckDB replay of [[blocksInput]] → [[reportBlocks]]. */
+  /** DuckDB replay of [[blocksInput]] → [[reportBlocks]]: the reference
+    * implementation the p02 oracle compares [[blocks]] against, written
+    * as a window/aggregate plan, one block per output row.
+    *
+    * Decision mapping (reference `text_processing.py:66-126`):
+    *  - pandas `groupby(sort=False)` = "first occurrence wins" = `min(ord)`
+    *    windows per (grp), (grp, summary), (grp, summary, comment);
+    *  - the default-summary branch blocks per COMMENT, others per
+    *    SUMMARY: `blk_first`/`blk2` switch on `summary = default`;
+    *  - per-block item names: first occurrence keyed by TRIMMED code
+    *    (`uniqueItemNames`) = min-ord per code + `min_by` name, reheaded
+    *    in code-first order;
+    *  - per-block comments: trimmed-distinct in first-occurrence order
+    *    (the default branch's single comment falls out of the same
+    *    aggregate, since its block key pins the comment);
+    *  - reorder = `row_number` over (first_seen(items), original index);
+    *    suppression = `lag(items)` inequality. Item tuples compare by
+    *    their `、`-joined header string, so a `、` inside an item name can
+    *    collide with a two-item tuple where [[blocks]] compares vectors;
+    *    the p02 input's item names (`SRC0`–`SRC19`) contain none. */
   def blocksOracleSql: String =
     s"""WITH src AS (
        |  SELECT doc_id % 40 AS record_id, lang AS grp, source AS item_code,

@@ -38,14 +38,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * reads the store recursively so flat publisher segments and
   * streamed batch subdirs merge identically. */
 object IndexStream {
-  /** Append one micro-batch's three index tables as a segment — the
-    * idempotent sink both drains share: batchId-keyed subdirs under
-    * each subtable, overwrite on replay ([[Drain.appendBatch]]). */
-  private def appendSegment(p: DataFrame, l: DataFrame, st: DataFrame,
-                            segDir: String, batchId: Long): Unit = {
-    Drain.appendBatch(p, s"$segDir/postings", batchId)
-    Drain.appendBatch(l, s"$segDir/lexicon", batchId)
-    Drain.appendBatch(st, s"$segDir/stats", batchId)
+  /** Append one index segment (postings/lexicon/stats, as built by
+    * [[Search.bm25BuildIndex]] or [[Search.bm25BuildIndexTokens]]) to
+    * the flat store at `segDir` — a publisher's batch append, outside
+    * any stream. Stamping the store afterwards is the caller's step. */
+  def appendSegment(segDir: String,
+                    seg: (DataFrame, DataFrame, DataFrame)): Unit = {
+    seg._1.write.mode("append").parquet(s"$segDir/postings")
+    seg._2.write.mode("append").parquet(s"$segDir/lexicon")
+    seg._3.write.mode("append").parquet(s"$segDir/stats")
   }
 
   /** Drain the directory as a delta stream, appending one index
@@ -159,8 +160,12 @@ object IndexStream {
     Drain.availableNowStamped(Drain.read(spark, dir, Drain.DocumentsSchema, glob)
       .filter(deltaFilter), segDir, version, checkpointDir,
       SegmentTables.map(t => s"$segDir/$t")) { (batch, id) =>
+      // the idempotent sink both drains share: batchId-keyed subdirs
+      // under each subtable, overwrite on replay (Drain.appendBatch)
       val (p, l, st) = build(batch)
-      appendSegment(p, l, st, segDir, id)
+      Drain.appendBatch(p, s"$segDir/postings", id)
+      Drain.appendBatch(l, s"$segDir/lexicon", id)
+      Drain.appendBatch(st, s"$segDir/stats", id)
     }
     // the stats-exists guard covers the zero-arrival fresh-store edge:
     // a drain that appended nothing to a store that never existed has

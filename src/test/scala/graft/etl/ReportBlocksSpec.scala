@@ -3,8 +3,8 @@ package graft.etl
 import org.apache.spark.sql.{Row, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the relational decision layer ([[Report.reportBlocks]], query
-  * p02) to the sequential serializer ([[Report.processOneRecord]]):
+/** Pins the block rows of query p02 ([[Report.reportBlocks]]) to the
+  * sequential serializer ([[Report.processOneRecord]]):
   * assembling the block rows with the serializer's formatting rules must
   * reproduce its text byte-for-byte, on inputs crafted to trip every
   * decision — interleaved groups, the default-summary per-comment
@@ -58,29 +58,36 @@ class ReportBlocksSpec extends AnyFunSuite {
     lines.mkString("\n")
   }
 
+  // item tuples compare as vectors, not as their `、`-joined header: the
+  // one-item tuple [A、B] and the two-item tuple [A, B] are different
+  // blocks, so block 3 neither reorders up nor loses its header
+  private val collision: Seq[(String, String, String, String, String)] = Seq(
+    ("G1", "AB", "A、B", "c one", "s1"),  // block 1: items [A、B]
+    ("G1", "C", "C", "c two", "s2"),      // block 2: items [C]
+    ("G1", "A", "A", "c three", "s3"),
+    ("G1", "B", "B", "c three", "s3"))    // block 3: items [A, B]
+
   test("relational blocks reassemble to the sequential serializer's text") {
-    // no rewrites (each summary prints as it is) + lang chosen so the
-    // default summary matches:
-    // processOneRecord reads the default from LANG_DEFAULT_SUMMARY, so
-    // drive it through a language whose default we override via rows —
-    // simplest: pass a lang with NO default ("" default) and make the
-    // crafted Default a normal summary... instead compare with the same
-    // default on both sides by calling processOneRecord with a lang
-    // whose default equals Default via the table below.
+    // no rewrites (each summary prints as it is); processOneRecord reads
+    // its default summary from LANG_DEFAULT_SUMMARY, so the Default rows
+    // are rewritten to a language's default and that language drives
+    // the serializer, with the same default passed to reportBlocks
     val lang = Schemas.LANG_DEFAULT_SUMMARY.collectFirst {
       case (l, d) if d.nonEmpty => l }.get
     val default = Schemas.LANG_DEFAULT_SUMMARY(lang)
-    val craftedForLang = crafted.map { case t @ (g, ic, in, c, s) =>
-      if (s == Default) (g, ic, in, c, default) else t }
-    val seqText = Report.processOneRecord(lang,
-      craftedForLang.map { case (g, ic, in, c, s) => Report.RRow(g, ic, in, c, s) })
     import spark.implicits._
-    val df = craftedForLang.zipWithIndex.map { case ((g, ic, in, c, s), i) =>
-      ("R1", g, ic, in, c, s, i.toLong)
-    }.toDF("record_id", "grp", "item_code", "item_name", "comment", "summary", "ord")
-    val blocks = Report.reportBlocks(df, default).collect().toSeq
-    assert(assemble(blocks) == seqText,
-      s"relational assembly diverged:\n--- blocks ---\n${assemble(blocks)}\n--- sequential ---\n$seqText")
+    Seq(crafted, collision).foreach { input =>
+      val craftedForLang = input.map { case t @ (g, ic, in, c, s) =>
+        if (s == Default) (g, ic, in, c, default) else t }
+      val seqText = Report.processOneRecord(lang,
+        craftedForLang.map { case (g, ic, in, c, s) => Report.RRow(g, ic, in, c, s) })
+      val df = craftedForLang.zipWithIndex.map { case ((g, ic, in, c, s), i) =>
+        ("R1", g, ic, in, c, s, i.toLong)
+      }.toDF("record_id", "grp", "item_code", "item_name", "comment", "summary", "ord")
+      val blocks = Report.reportBlocks(df, default).collect().toSeq
+      assert(assemble(blocks) == seqText,
+        s"relational assembly diverged:\n--- blocks ---\n${assemble(blocks)}\n--- sequential ---\n$seqText")
+    }
   }
 
   test("block rows are invariant under input repartitioning") {

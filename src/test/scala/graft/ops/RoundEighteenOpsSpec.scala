@@ -80,11 +80,8 @@ class RoundEighteenOpsSpec extends AnyFunSuite {
     def freshStore(): String = {
       val segDir = java.nio.file.Files
         .createTempDirectory("graft_r18_seg").toString
-      val (ps, lx, st) = Search.bm25BuildIndexTokens(
-        terms(lit(true)), "doc_id", "terms")
-      ps.write.mode("append").parquet(s"$segDir/postings")
-      lx.write.mode("append").parquet(s"$segDir/lexicon")
-      st.write.mode("append").parquet(s"$segDir/stats")
+      graft.streaming.IndexStream.appendSegment(segDir,
+        Search.bm25BuildIndexTokens(terms(lit(true)), "doc_id", "terms"))
       IndexMeta.stamp(segDir)
       segDir
     }
@@ -388,10 +385,8 @@ class RoundEighteenOpsSpec extends AnyFunSuite {
       graft.ops.TextOps.cjkFixture(col("text"))).as("terms"))
     val segDir = java.nio.file.Files
       .createTempDirectory("graft_poison_seg").toString
-    val (ps, lx, st) = Search.bm25BuildIndexTokens(terms, "doc_id", "terms")
-    ps.write.mode("append").parquet(s"$segDir/postings")
-    lx.write.mode("append").parquet(s"$segDir/lexicon")
-    st.write.mode("append").parquet(s"$segDir/stats")
+    graft.streaming.IndexStream.appendSegment(segDir,
+      Search.bm25BuildIndexTokens(terms, "doc_id", "terms"))
     IndexMeta.stamp(segDir)
     // a real crash dies between StoreSwap's poison stamp and the final
     // re-stamp, so the state it leaves is exactly "poison stamp"

@@ -112,14 +112,10 @@ class RoundSeventeenOpsSpec extends AnyFunSuite {
     val toks = Clusters.sharedCjkTerms(spark, sf)
     val segDir = IndexPaths.dir("r17_ts_seg", sf)
     // two stream-shaped segments (evens standing, odds delta) — the
-    // r12 store layout, appended manually like the catalog entry's
-    // standing half
+    // r12 store layout, appended like the catalog entry's standing half
     Seq(col("doc_id") % 2 === 0, col("doc_id") % 2 =!= 0).foreach { pred =>
-      val (p, l, st) =
-        Search.bm25BuildIndexTokens(toks.filter(pred), "doc_id", "terms")
-      p.write.mode("append").parquet(s"$segDir/postings")
-      l.write.mode("append").parquet(s"$segDir/lexicon")
-      st.write.mode("append").parquet(s"$segDir/stats")
+      graft.streaming.IndexStream.appendSegment(segDir,
+        Search.bm25BuildIndexTokens(toks.filter(pred), "doc_id", "terms"))
     }
     IndexMeta.stamp(segDir)
     val (mp, ml, ms) =

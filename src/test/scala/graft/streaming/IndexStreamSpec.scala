@@ -127,11 +127,8 @@ class IndexStreamSpec extends AnyFunSuite {
       val segDir = java.nio.file.Files
         .createTempDirectory("graft_compact_seg").toString
       Seq(col("doc_id") % 2 === 0, col("doc_id") % 2 =!= 0).foreach { p =>
-        val (ps, l, st) = Search.bm25BuildIndexTokens(terms(p),
-          "doc_id", "terms")
-        ps.write.mode("append").parquet(s"$segDir/postings")
-        l.write.mode("append").parquet(s"$segDir/lexicon")
-        st.write.mode("append").parquet(s"$segDir/stats")
+        IndexStream.appendSegment(segDir,
+          Search.bm25BuildIndexTokens(terms(p), "doc_id", "terms"))
       }
       graft.ops.IndexMeta.stamp(segDir)
       segDir
@@ -235,13 +232,10 @@ class IndexStreamSpec extends AnyFunSuite {
     val segDir = java.nio.file.Files
       .createTempDirectory("graft_lazy_seg").toString
     // a healthy standing store, one flat segment
-    val (p, l, st) = Search.bm25BuildIndexTokens(
+    IndexStream.appendSegment(segDir, Search.bm25BuildIndexTokens(
       docs.select(col("doc_id"), Search.cjkIndexTerms(
         graft.ops.TextOps.cjkFixture(col("text"))).as("terms")),
-      "doc_id", "terms")
-    p.write.mode("append").parquet(s"$segDir/postings")
-    l.write.mode("append").parquet(s"$segDir/lexicon")
-    st.write.mode("append").parquet(s"$segDir/stats")
+      "doc_id", "terms"))
     graft.ops.IndexMeta.stamp(segDir)
     val before = Search.bm25QueryIndex(
       IndexStream.mergedIndexCjk(spark, segDir)._1,
